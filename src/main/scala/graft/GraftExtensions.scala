@@ -13,11 +13,17 @@ import graft.expr.{DotProductD, RewriteDotProduct, RewriteRangeJoin}
   *   spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * installs the optimizer rule, the planner strategy, and the SQL-callable
+  * installs the optimizer rules, the planner strategy, and the SQL-callable
   * native functions on every session built with that config. The runtime
   * twin is [[Engine.init]], which patches an ALREADY-BUILT session (needed
   * by the Verify/Bench drivers, which construct the SparkSession
-  * themselves); both paths install the same pieces.
+  * themselves). Session confs are not extensions: build-time users set
+  * the two that `Engine.init` sets themselves, for example
+  *
+  * {{{
+  *   spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS
+  *   spark.hadoop.fs.AbstractFileSystem.file.impl=graft.sources.NioLocalFs
+  * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -35,5 +41,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[graft.expr.SqDistL].getName, "sq_dist_l"),
       (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         graft.expr.SqDistL(exprs.head, exprs(1))))
+    ext.injectFunction((
+      FunctionIdentifier("minhash_sigs"),
+      new ExpressionInfo(classOf[graft.expr.MinHashSigs].getName, "minhash_sigs"),
+      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
+        graft.expr.MinHashSigs(exprs.head)))
   }
 }

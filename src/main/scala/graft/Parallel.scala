@@ -4,7 +4,13 @@ package graft
   * multi-table lifecycle queries (seed two ManifestTables, build two
   * scratch inputs) are dominated by sequential commit I/O, and Spark
   * schedules concurrent actions from separate threads without fuss. Only
-  * for actions with NO ordering dependency; failures propagate. */
+  * for actions with NO ordering dependency; failures propagate.
+  *
+  * A task must never wait on another task of the same call (a latch, a
+  * queue, a future, a lock another task holds). The pool runs at most 32
+  * tasks at once, so with more than 32 tasks a waiting task can hold the
+  * thread its producer needs, and the call deadlocks until its 10-minute
+  * timeout. */
 object Parallel {
   def run(fs: (() => Any)*): Unit = {
     import scala.concurrent.{Await, ExecutionContext, Future}

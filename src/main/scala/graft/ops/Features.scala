@@ -412,12 +412,14 @@ object Features {
     //   Σ_R (x_i−μ_i)(x_j−μ_j)
     //     = G_ij − μ_j·S_i|R − μ_i·S_j|R + |R|·μ_i·μ_j
     // over the contributing row set R (rows long enough to carry both
-    // dims — recovered exactly from the length histogram / per-length
-    // sums, so ragged inputs reproduce the historic explode semantics
-    // bit-for-bit; equivalence is pinned in FeaturesSuite). μ stays the
-    // truncated per-dim mean with the ROW-count divisor (null/empty
-    // rows shift the mean exactly as they always did), and every
-    // division is Scala Long division — toward-zero, the oracle's DIV.
+    // dims and holding no null in either — recovered exactly from the
+    // length histogram / per-length sums less the null-element
+    // corrections, so ragged and null-holding inputs reproduce the
+    // historic explode semantics bit-for-bit; equivalence is pinned in
+    // FeaturesSuite). μ stays the truncated per-dim mean with the
+    // ROW-count divisor (null/empty rows shift the mean exactly as they
+    // always did), and every division is Scala Long division —
+    // toward-zero, the oracle's DIV.
     // 8 rounds of power iteration on a 64×64 LONG matrix are pure local
     // arithmetic — the parameter-server shape (same as
     // q_train_perceptron's loop).
@@ -425,11 +427,13 @@ object Features {
     val momAgg = Bridge.column(
       graft.expr.GramSumsAgg(Bridge.expression(col("q"))).toAggregateExpression())
     val row = emb.agg(momAgg.as("m")).select(
-      col("m.n"), col("m.hist"), col("m.sl"), col("m.gram")).head()
+      col("m.n"), col("m.hist"), col("m.sl"), col("m.gram"), col("m.np"), col("m.ns")).head()
     val n = row.getLong(0)
     val hist = row.getSeq[Long](1).toArray
     val slF = row.getSeq[Long](2).toArray
     val gramF = row.getSeq[Long](3).toArray
+    val npF = row.getSeq[Long](4).toArray
+    val nsF = row.getSeq[Long](5).toArray
     val dims = hist.length
     if (dims == 0)
       return Seq.empty[(Long, Long, Long)].toDF("dim", "v_x1000", "lambda_x1000")
@@ -446,9 +450,9 @@ object Features {
     val mu: Array[Long] = Array.tabulate(dims)(i => rsuf(i)(0) / n)
     val c = Array.ofDim[Long](dims, dims)
     for (i <- 0 until dims; j <- 0 until dims) {
-      val k = math.max(i, j)
-      val sp = gramF(i * dims + j) - mu(j) * rsuf(i)(k) - mu(i) * rsuf(j)(k) +
-        msuf(k) * mu(i) * mu(j)
+      val (k, ij, ji) = (math.max(i, j), i * dims + j, j * dims + i)
+      val sp = gramF(ij) - mu(j) * (rsuf(i)(k) - nsF(ij)) - mu(i) * (rsuf(j)(k) - nsF(ji)) +
+        (msuf(k) - npF(ij)) * mu(i) * mu(j)
       c(i)(j) = sp / n
     }
     var v = Array.fill(dims)(1000L)

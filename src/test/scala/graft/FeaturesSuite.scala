@@ -69,7 +69,6 @@ class FeaturesSuite extends SparkSuite {
     // dims) bit-for-bit — including null rows (count toward n, emit
     // nothing), empty arrays (likewise) and RAGGED lengths (a pair
     // (i,j) sums only over rows long enough to carry both dims)
-    import graft.ops.Features
     import spark.implicits._
     val rows: Seq[Option[Seq[Long]]] = Seq(
       Some(Seq(3L, -7L, 11L, 2L)),
@@ -79,18 +78,44 @@ class FeaturesSuite extends SparkSuite {
       Some(Seq(9L, 0L, -2L, 6L)),
       Some(Seq(1L, 2L, 3L)))        // ragged: mid-length
     val df = rows.map(Tuple1(_)).toDF("q")
+    assertHistoricPca(df, rows.map(_.map(_.map(Option(_)))))
+  }
+
+  test("pcaTop kernel: null ELEMENTS contribute nothing, as in the historic explode algebra") {
+    // the explode summed (x_i−μ_i)(x_j−μ_j), null when either side is
+    // null, so a null element drops out of its dim's sum and of every
+    // pair it is in, while its row still counts toward n; split over
+    // partitions so the null corrections also go through merge
+    import spark.implicits._
+    val rows: Seq[Option[Seq[Option[Long]]]] = Seq(
+      Some(Seq(Some(3L), None, Some(11L), Some(2L))),
+      Some(Seq(Some(-4L), Some(5L))),
+      None,
+      Some(Seq(None, None, Some(-2L))),
+      Some(Seq(Some(9L), Some(0L), Some(-2L), Some(6L))),
+      Some(Seq(Some(1L), Some(2L), Some(3L), None)),
+      Some(Seq(Some(7L), Some(-3L), Some(4L), Some(8L))))
+    assertHistoricPca(rows.map(Tuple1(_)).toDF("q").repartition(3), rows)
+  }
+
+  /** `Features.pcaTop(df, 8)` equals the historic explode algebra over
+    * `rows`, computed directly: per-dim sums over present elements with
+    * the ROW-count divisor, and the centered covariance of each pair
+    * summed over rows holding both elements. */
+  private def assertHistoricPca(df: org.apache.spark.sql.DataFrame,
+                                rows: Seq[Option[Seq[Option[Long]]]]): Unit = {
+    import graft.ops.Features
+    import spark.implicits._
     val got = Features.pcaTop(df, rounds = 8)
       .as[(Long, Long, Long)].collect().sortBy(_._1)
-    // reference: the historic algebra, computed directly
     val present = rows.flatten.filter(_.nonEmpty)
     val n = rows.size.toLong
     val dims = present.map(_.size).max
-    val mu = Array.tabulate(dims)(i =>
-      present.filter(_.size > i).map(_(i)).sum / n)
+    def at(r: Seq[Option[Long]], i: Int): Option[Long] = r.lift(i).flatten
+    val mu = Array.tabulate(dims)(i => present.flatMap(at(_, i)).sum / n)
     val c = Array.ofDim[Long](dims, dims)
     for (i <- 0 until dims; j <- 0 until dims) {
-      val contrib = present.filter(r => r.size > i && r.size > j)
-      c(i)(j) = contrib.map(r => (r(i) - mu(i)) * (r(j) - mu(j))).sum / n
+      c(i)(j) = present.flatMap(r => for (x <- at(r, i); y <- at(r, j)) yield (x - mu(i)) * (y - mu(j))).sum / n
     }
     var v = Array.fill(dims)(1000L)
     for (_ <- 1 to 8) {

@@ -165,7 +165,9 @@ class ScaleOpsSuite extends SparkSuite {
     new GraftExtensions().apply(ext)
     assert(ExtensionsProbe.plannerStrategies(ext, spark).contains(TopKPerGroupStrategy))
     assert(ExtensionsProbe.optimizerRules(ext, spark).contains(graft.expr.RewriteDotProduct))
-    assert(ExtensionsProbe.registersFunction(ext, "dot_product_d"))
+    // the same SQL functions Engine.init registers
+    Seq("dot_product_d", "sq_dist_l", "minhash_sigs").foreach(f =>
+      assert(ExtensionsProbe.registersFunction(ext, f), f))
   }
 
   test("sketch merge: two-level HLL union == direct sketch, and within 5% of exact") {
