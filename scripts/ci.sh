@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
-# Full local gate, in driver order: compile, unit/plan/stream tests, the
-# DuckDB oracle compare at the gate sf, then both mechanical determinism
-# sweeps (partition count, join strategy) at the small sf.
+# Full local gate, in driver order: compile (the engine with its tests,
+# then the benchmark against the engine sources), unit/plan/stream
+# tests, the DuckDB oracle compare at the gate sf, then both mechanical
+# determinism sweeps (partition count, join strategy) at the small sf.
 # Usage: scripts/ci.sh [gateSfDir] [sweepSfDir]
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -9,6 +10,9 @@ GATE_SF="${1:-/root/testdata/sf0.01}"
 SWEEP_SF="${2:-/root/testdata/sf0.001}"
 
 sbt -batch Test/compile
+# the benchmark compiles the engine sources with its own harness: an
+# engine API change must not break its build unnoticed
+(cd perfbench && sbt -batch compile)
 sbt -batch test
 
 rm -rf /tmp/graft_ci_dump

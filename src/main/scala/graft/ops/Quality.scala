@@ -1177,8 +1177,8 @@ object Quality {
     * lexicographically-sliced files (each with a TIGHT truncated
     * string range in its `.stats` sidecar), a single-source erasure
     * (`source = 'src7'` — the by-email/by-uuid shape real corpora
-    * erase on) goes through
-    * [[graft.sources.ManifestTable.deleteWhereString]], and the plan
+    * erase on) goes through a String-typed
+    * [[graft.sources.ManifestTable.deleteWhere]], and the plan
     * REQUIRES what the production formats promise: only ONE file's
     * string range overlaps the key (string-stats pruning), the delete
     * lands as a DELETION VECTOR (zero data files rewritten — the
@@ -1207,9 +1207,9 @@ object Quality {
     // string-stats pruning must isolate the key's file NEIGHBORHOOD
     // before any data file opens — the whole point of truncated
     // string min/max in the sidecars
-    require(ManifestTable.prunedFileCountString(t, "source", "src7", "src7") == 1,
+    require(ManifestTable.prunedFileCount(t, "source", "src7", "src7") == 1,
       "string stats must prune the erasure to one file")
-    val v = ManifestTable.deleteWhereString(s, t, "source", "src7", "src7")
+    val v = ManifestTable.deleteWhere(s, t, "source", "src7", "src7")
     require(ManifestTable.snapshotDvs(t, v).size == 1,
       "a string-keyed erasure must take the DV path")
     require(ManifestTable.snapshotFiles(t, v).toSet ==
@@ -1228,7 +1228,7 @@ object Quality {
     * ingest lands in four year-ranged files (each with a tight INT32
     * days-since-epoch range in its `.stats` sidecar), then the
     * standard retention two-step runs through
-    * [[graft.sources.ManifestTable.deleteWhereDate]]:
+    * a `LocalDate`-typed [[graft.sources.ManifestTable.deleteWhere]]:
     *  1. "purge everything before the cutoff" — the predicate CONTAINS
     *     the oldest file's whole date range, and the file's sidecar
     *     proves zero nulls, so the commit DROPS it from the manifest
@@ -1266,10 +1266,10 @@ object Quality {
     val v0 = ManifestTable.latestVersion(t).get
     // date-stats pruning must isolate the expiring range to one file
     // before any data file opens
-    require(ManifestTable.prunedFileCountDate(t, "o_date",
+    require(ManifestTable.prunedFileCount(t, "o_date",
       LocalDate.of(1995, 1, 1), LocalDate.of(1996, 12, 31)) == 1,
       "date stats must prune the retention window to one file")
-    val v1 = ManifestTable.deleteWhereDate(s, t, "o_date",
+    val v1 = ManifestTable.deleteWhere(s, t, "o_date",
       LocalDate.of(1995, 1, 1), LocalDate.of(1996, 12, 31))
     val f0 = ManifestTable.snapshotFiles(t, v0).toSet
     val f1 = ManifestTable.snapshotFiles(t, v1).toSet
@@ -1277,7 +1277,7 @@ object Quality {
       "expiring a stats-contained file must drop it and stage nothing")
     require(ManifestTable.snapshotDvs(t, v1).isEmpty,
       "a whole-file retention expiry must not write deletion vectors")
-    val v2 = ManifestTable.deleteWhereDate(s, t, "o_date",
+    val v2 = ManifestTable.deleteWhere(s, t, "o_date",
       LocalDate.of(1997, 6, 1), LocalDate.of(1997, 6, 30))
     require(ManifestTable.snapshotDvs(t, v2).size == 1,
       "a grazing date window must take the DV path")
@@ -1470,9 +1470,10 @@ object Quality {
     * ManifestTable, [[ManifestTable.clusterBy]] it on (l_partkey,
     * l_suppkey) — the OPTIMIZE ZORDER maintenance rewrite, one
     * range-partitioned shuffle on the bit-interleaved cell id — then
-    * serve a conjunctive 2-D box through [[ManifestTable.readPruned2]],
-    * which opens only files whose committed per-file [min, max] stats
-    * intersect BOTH ranges. The oracle recomputes the box census
+    * serve a conjunctive 2-D box through a two-range
+    * [[ManifestTable.readPruned]], which opens only files whose
+    * committed per-file [min, max] stats intersect BOTH ranges. The
+    * oracle recomputes the box census
     * relationally, so the hash certifies the rewrite carried every row
     * and the pruned read lost none — pruning is a performance property,
     * never a correctness input. The LAYOUT property (a z-ordered box
@@ -1493,8 +1494,8 @@ object Quality {
       col("l_quantity").cast(LongType).as("qty"))
     ManifestTable.append(s, t, li.repartition(32)) // v0: row-order layout
     ManifestTable.clusterBy(s, t, "l_partkey", "l_suppkey") // v1: z-ordered
-    ManifestTable.readPruned2(s, t,
-        "l_partkey", 100L, 299L, "l_suppkey", 3L, 6L)
+    ManifestTable.readPruned(s, t, "l_partkey", 100L, 299L,
+        ManifestTable.ColRange("l_suppkey", 3L, 6L))
       .groupBy(col("l_suppkey"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("l_partkey")).cast(LongType).as("sum_part"),
@@ -1896,7 +1897,7 @@ object Quality {
     require(pre.inputFiles.isEmpty,
       s"clean string/long stats must answer metadata-only, read " +
         s"${pre.inputFiles.length} files")
-    ManifestTable.deleteWhereString(s, t, "source", "src7", "src7")
+    ManifestTable.deleteWhere(s, t, "source", "src7", "src7")
     // the erasure poisons exactly its one DV'd file; clean files still
     // answer from metadata
     val post = ManifestTable.statsAggregate(s, t, Seq("lang", "n_chars"))

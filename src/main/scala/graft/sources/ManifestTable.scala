@@ -5,7 +5,8 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Minimal transactional MANIFEST-LOG table format — the ACID dataflow
   * (Delta/Iceberg's core protocol) in miniature, on public Spark +
@@ -334,14 +335,8 @@ object ManifestTable {
     * DV pass through untouched; with no DVs the plan is the plain scan.
     * An empty table (no commits) reads as an error — callers create
     * tables by committing. */
-  def read(spark: SparkSession, table: String, version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(table)).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    val meta = snapshotMeta(table, v)
-    requireSupported(table, v, meta)
-    readFiles(spark, snapshotFiles(table, v), snapshotDvs(table, v),
-      meta.get("schema"), physNamesOf(meta))
-  }
+  def read(spark: SparkSession, table: String, version: Option[Long] = None): DataFrame =
+    scan(spark, plan(table, version, Nil))
 
   /** The reader features THIS implementation understands. A snapshot
     * whose recorded `features` set exceeds it fails fast with the
@@ -700,12 +695,6 @@ object ManifestTable {
     }
   }
 
-  /** The long-range subset of [[footerStatsTyped]] — the historic
-    * INT64-centric view, kept for callers that prune on integer
-    * surrogates only (now also covering INT32-backed ints and dates). */
-  def footerStats(file: String): Map[String, (Long, Long)] =
-    footerStatsTyped(file).collect { case (c, LongStat(lo, hi)) => c -> (lo, hi) }
-
   /** A data file's ROW COUNT from its parquet footer — metadata only.
     * Used to exempt provably-empty files from conservative rewrites:
     * a zero-row file never gets min/max stats, so without this check
@@ -796,136 +785,122 @@ object ManifestTable {
     }.toMap
   }
 
-  /** The long-range subset of [[statsTypedOf]] — the historic view for
-    * integer-keyed pruning callers. */
-  def statsOf(file: String): Map[String, (Long, Long)] =
-    statsTypedOf(file).collect { case (c, LongStat(lo, hi)) => c -> (lo, hi) }
+  /** How a literal type bounds a [[ColRange]]: the range in the
+    * committed stats' own [[ColStat]] shape, and the exact Spark literal
+    * the filter re-applies. Longs and ints compare as [[LongStat]]s,
+    * dates on their epoch days and instants on their epoch micros (the
+    * INT32 / INT64 values parquet stores for DATE and TIMESTAMP), strings
+    * as [[StrStat]]s in UTF-8 order. */
+  final class RangeLit[T] private (val bound: (T, T) => ColStat, val literal: T => Any)
 
-  /** DATA-SKIPPING read: the snapshot restricted to `col ∈ [lo, hi]`,
-    * opening ONLY the data files whose stored [min, max] range overlaps
-    * the predicate — whole-file pruning from commit-time statistics,
-    * the stats-based skipping of the production log formats (partition
-    * pruning's finer-grained cousin). Files with no stats for `col` are
-    * conservatively kept; the exact predicate is re-applied after the
-    * prune, so the result equals `read().filter(...)` REGARDLESS of
-    * stats quality. */
-  def readPruned(spark: SparkSession, table: String, col: String,
-      lo: Long, hi: Long, version: Option[Long] = None): DataFrame = {
+  object RangeLit {
+    implicit val long: RangeLit[Long] = new RangeLit[Long](LongStat(_, _), identity)
+    implicit val int: RangeLit[Int] = new RangeLit[Int](LongStat(_, _), _.toLong)
+    implicit val string: RangeLit[String] =
+      new RangeLit[String](StrStat(_, _, exact = true), identity)
+    implicit val date: RangeLit[java.time.LocalDate] = new RangeLit[java.time.LocalDate](
+      (lo, hi) => LongStat(lo.toEpochDay, hi.toEpochDay), java.sql.Date.valueOf)
+    implicit val instant: RangeLit[java.time.Instant] = new RangeLit[java.time.Instant](
+      (lo, hi) => LongStat(micros(lo), micros(hi)), java.sql.Timestamp.from)
+    private def micros(i: java.time.Instant): Long =
+      math.addExact(math.multiplyExact(i.getEpochSecond, 1000000L), i.getNano / 1000L)
+  }
+
+  /** One typed range predicate `col ∈ [lo, hi]` (inclusive) on a
+    * LOGICAL column: `bound` prunes files against their committed stats,
+    * `lo`/`hi` are the exact literals of the re-applied filter. Build it
+    * as `ColRange(col, lo, hi)` from any literal with a [[RangeLit]];
+    * `lo == hi` is the equality shape. */
+  final case class ColRange(col: String, bound: ColStat, lo: Any, hi: Any) {
+    def exact(c: Column): Column = c >= lit(lo) && c <= lit(hi)
+  }
+
+  object ColRange {
+    def apply[T](col: String, lo: T, hi: T)(implicit l: RangeLit[T]): ColRange =
+      ColRange(col, l.bound(lo, hi), l.literal(lo), l.literal(hi))
+  }
+
+  /** Can a file whose committed stat is `st` hold a value inside
+    * `bound`? Truncated string bounds are sound either way (min is a
+    * prefix of every value, max is bumped past the truncation); a stat
+    * of another type than the bound cannot prune. */
+  private def overlaps(st: ColStat, bound: ColStat): Boolean = (st, bound) match {
+    case (LongStat(mn, mx), LongStat(lo, hi)) => mx >= lo && mn <= hi
+    case (StrStat(mn, mx, _), StrStat(lo, hi, _)) => utf8Lte(lo, mx) && utf8Lte(mn, hi)
+    case _ => true
+  }
+
+  /** A scan of one committed snapshot: every data file and DV line, the
+    * KEPT files (each with its parsed stats) and the exact filter the
+    * read re-applies (None: the whole snapshot). */
+  private final case class ScanPlan(version: Long, meta: Map[String, String],
+      files: Seq[String], dvLines: Seq[String],
+      kept: Seq[(String, Map[String, ColStat])], filter: Option[Column]) {
+    def dvs: Seq[String] = dvLines.map(parseDvLine(_)._1)
+  }
+
+  /** Plan a read of `version` (latest by default) — the one planning
+    * step behind [[read]], the pruned reads, their file counts,
+    * [[statsAggregate]] and [[deleteWhere]]'s classifier. The manifest
+    * is read once, the reader features are checked, and each `.stats`
+    * sidecar is parsed once. A file is kept when its stats overlap every
+    * range (no stats for a column: kept — pruning is a performance
+    * property, the exact filter keeps the result correct) and, for a
+    * `partition` read, when it carries that value's marker or no marker
+    * at all (a cross-partition rewrite output) — a manifest string
+    * match, no sidecar opened. */
+  private def plan(table: String, version: Option[Long], ranges: Seq[ColRange],
+      partition: Option[String] = None): ScanPlan = {
     val v = version.orElse(latestVersion(table)).getOrElse(
       throw new IllegalStateException(s"no committed snapshot in $table"))
     val meta = snapshotMeta(table, v)
-    val files = snapshotFiles(table, v)
-    val dvs = snapshotDvs(table, v)
-    val sig = meta.get("schema")
-    val phys = physNamesOf(meta)
-    val pCol = physName(meta, col) // sidecar stats are physically named
-    val live = files.filter { f =>
-      statsOf(f).get(pCol).forall { case (mn, mx) => mx >= lo && mn <= hi }
-    }
-    val base =
-      if (files.isEmpty) spark.emptyDataFrame
-      else if (live.isEmpty) readFiles(spark, files, Seq.empty, sig, phys).limit(0)
-      else readFiles(spark, live, dvs, sig, phys)
-    if (files.isEmpty) base
-    else base.filter(base.col(col) >= lo && base.col(col) <= hi)
+    requireSupported(table, v, meta)
+    val (dvLines, files) = snapshotEntries(table, v).partition(_.startsWith(DvPrefix))
+    // sidecar stats are physically named; the caller's columns are logical
+    val bounds = ranges.map(r => physName(meta, r.col) -> r.bound)
+    val kept = files
+      .filter(f => partition.forall(p => partitionValueOf(f).forall(_ == p)))
+      .map(f => f -> (if (bounds.isEmpty) Map.empty[String, ColStat] else statsTypedOf(f)))
+      .filter { case (_, st) => bounds.forall { case (c, b) => st.get(c).forall(overlaps(_, b)) } }
+    val onPartition = partition.map(p => col(meta.getOrElse("partcol",
+      throw new IllegalStateException(s"$table records no partition column"))) === p)
+    ScanPlan(v, meta, files, dvLines, kept,
+      (onPartition ++ ranges.map(r => r.exact(col(r.col)))).reduceOption(_ && _))
   }
 
-  /** STRING-predicate data-skipping read: the snapshot restricted to
-    * `col ∈ [lo, hi]` (UTF-8 binary order — Spark's own string
-    * ordering), opening ONLY the data files whose stored truncated
-    * string range overlaps the predicate. The truncated bounds are
-    * sound by construction (min is a prefix ⇒ ≤ every value; max is
-    * bumped past the truncation ⇒ ≥ every value), files without string
-    * stats for `col` are conservatively kept, and the exact predicate
-    * re-applies after the prune, so the result equals
-    * `read().filter(...)` regardless of stats quality. Equality prune
-    * (`lo == hi`) is the GDPR-by-key shape: a user/email/uuid-keyed
-    * read opens the key's file neighborhood, not the lake. */
-  def readPrunedString(spark: SparkSession, table: String, col: String,
-      lo: String, hi: String, version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(table)).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    val meta = snapshotMeta(table, v)
-    val files = snapshotFiles(table, v)
-    val dvs = snapshotDvs(table, v)
-    val sig = meta.get("schema")
-    val phys = physNamesOf(meta)
-    val pCol = physName(meta, col)
-    val live = files.filter { f =>
-      statsTypedOf(f).get(pCol) match {
-        case Some(StrStat(mn, mx, _)) => utf8Lte(lo, mx) && utf8Lte(mn, hi)
-        case _ => true // no string stats: cannot prune
-      }
-    }
-    val base =
-      if (files.isEmpty) spark.emptyDataFrame
-      else if (live.isEmpty) readFiles(spark, files, Seq.empty, sig, phys).limit(0)
-      else readFiles(spark, live, dvs, sig, phys)
-    if (files.isEmpty) base
-    else base.filter(base.col(col) >= lo && base.col(col) <= hi)
-  }
-
-  /** DATE-predicate data-skipping read: [[readPruned]] over a DATE
-    * column — the committed INT32 days-since-epoch ranges prune at the
-    * file level, the exact predicate re-applies as DATE literals (no
-    * implicit cast), so the result equals `read().filter(...)`
-    * regardless of stats coverage. The time-travel retention-read
-    * shape: "last 30 days" opens the last 30 days' files. */
-  def readPrunedDate(spark: SparkSession, table: String, col: String,
-      lo: java.time.LocalDate, hi: java.time.LocalDate,
-      version: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    val v = version.orElse(latestVersion(table)).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    val meta = snapshotMeta(table, v)
-    val files = snapshotFiles(table, v)
-    val dvs = snapshotDvs(table, v)
-    val sig = meta.get("schema")
-    val phys = physNamesOf(meta)
-    val pCol = physName(meta, col)
-    val (loD, hiD) = (lo.toEpochDay, hi.toEpochDay)
-    val live = files.filter { f =>
-      statsOf(f).get(pCol).forall { case (mn, mx) => mx >= loD && mn <= hiD }
-    }
-    val base =
-      if (files.isEmpty) spark.emptyDataFrame
-      else if (live.isEmpty) readFiles(spark, files, Seq.empty, sig, phys).limit(0)
-      else readFiles(spark, live, dvs, sig, phys)
-    if (files.isEmpty) base
-    else base.filter(base.col(col) >= lit(java.sql.Date.valueOf(lo)) &&
-      base.col(col) <= lit(java.sql.Date.valueOf(hi)))
-  }
-
-  /** Files a date-pruned read would open — [[readPrunedDate]]'s
-    * planning step exposed for layout diagnostics and in-plan pins. */
-  def prunedFileCountDate(table: String, col: String,
-      lo: java.time.LocalDate, hi: java.time.LocalDate,
-      version: Option[Long] = None): Int = {
-    val v = version.orElse(latestVersion(table)).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    val meta = snapshotMeta(table, v)
-    val pCol = physName(meta, col)
-    val (loD, hiD) = (lo.toEpochDay, hi.toEpochDay)
-    snapshotFiles(table, v).count { f =>
-      statsOf(f).get(pCol).forall { case (mn, mx) => mx >= loD && mn <= hiD }
+  /** Read a plan: its kept files, deletion vectors applied, the exact
+    * filter re-applied. Nothing kept reads as an empty frame in the
+    * committed schema — the same frame [[read]] returns for a zero-file
+    * snapshot (a schema-less legacy snapshot takes the schema from its
+    * files, reading no row). */
+  private def scan(spark: SparkSession, p: ScanPlan): DataFrame = {
+    val (sig, phys) = (p.meta.get("schema"), physNamesOf(p.meta))
+    if (p.kept.isEmpty)
+      readFiles(spark, if (sig.isEmpty) p.files else Nil, Nil, sig, phys).limit(0)
+    else {
+      val df = readFiles(spark, p.kept.map(_._1), p.dvs, sig, phys)
+      p.filter.fold(df)(df.filter)
     }
   }
 
-  /** Files a string-pruned read would open — [[readPrunedString]]'s
-    * planning step exposed for layout diagnostics and in-plan pins. */
-  def prunedFileCountString(table: String, col: String,
-      lo: String, hi: String, version: Option[Long] = None): Int = {
-    val v = version.orElse(latestVersion(table)).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    val meta = snapshotMeta(table, v)
-    val pCol = physName(meta, col)
-    snapshotFiles(table, v).count { f =>
-      statsTypedOf(f).get(pCol) match {
-        case Some(StrStat(mn, mx, _)) => utf8Lte(lo, mx) && utf8Lte(mn, hi)
-        case _ => true
-      }
-    }
-  }
+  /** DATA-SKIPPING read: the latest snapshot restricted to
+    * `col ∈ [lo, hi]` and every further range in `more` (a conjunction —
+    * a 2-D box after [[clusterBy]] opens box-area files), opening ONLY
+    * the data files whose committed stats overlap every range — the
+    * stats-based skipping of the production log formats. Literals may
+    * be Long/Int, String (UTF-8 order; `lo == hi` is the GDPR-by-key
+    * shape), `LocalDate` or `Instant`. The exact predicate re-applies
+    * after the prune, so the result equals `read().filter(...)`
+    * REGARDLESS of stats quality. */
+  def readPruned[T](spark: SparkSession, table: String, col: String, lo: T, hi: T,
+      more: ColRange*)(implicit l: RangeLit[T]): DataFrame =
+    scan(spark, plan(table, None, ColRange(col, lo, hi) +: more))
+
+  /** Files [[readPruned]] would open — its planning step exposed for
+    * layout diagnostics and in-plan pins. */
+  def prunedFileCount[T](table: String, col: String, lo: T, hi: T,
+      more: ColRange*)(implicit l: RangeLit[T]): Int =
+    plan(table, None, ColRange(col, lo, hi) +: more).kept.size
 
   /** Publish `files` as version `v` — the CAS. True iff this committer
     * won the version. */
@@ -1075,7 +1050,7 @@ object ManifestTable {
     * of the production lake formats): rewrite the snapshot with rows
     * ordered by the bit-interleaving of two columns, so every data
     * file's committed [min, max] stats are TIGHT in BOTH dimensions and
-    * [[readPruned2]]'s conjunctive 2-D range scans open only the files
+    * a two-range [[readPruned]] (a 2-D box) opens only the files
     * whose z-range the query box touches — linear row-order layouts are
     * tight in at most one dimension, so every 2-D box degenerates to a
     * near-full file scan on the other. Normalization to 10-bit cells
@@ -1178,38 +1153,6 @@ object ManifestTable {
     throw new IllegalStateException(s"lost the commit race $maxRetries times on $table")
   }
 
-  /** Conjunctive 2-D stats-pruned read: only files whose committed
-    * [min, max] ranges intersect BOTH boxes are opened (the exact
-    * filter still applies, so the result equals `read().filter(...)`
-    * regardless of stats quality or layout — pruning is a performance
-    * property, correctness never depends on it). After [[clusterBy]] on
-    * the same two columns, the opened-file count tracks the box area
-    * instead of the box's widest side. */
-  def readPruned2(spark: SparkSession, table: String,
-      c1: String, lo1: Long, hi1: Long,
-      c2: String, lo2: Long, hi2: Long,
-      version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(table)).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    val meta = snapshotMeta(table, v)
-    val files = snapshotFiles(table, v)
-    val dvs = snapshotDvs(table, v)
-    val sig = meta.get("schema")
-    val phys = physNamesOf(meta)
-    val (p1, p2) = (physName(meta, c1), physName(meta, c2))
-    def live(f: String): Boolean =
-      statsOf(f).get(p1).forall { case (mn, mx) => mx >= lo1 && mn <= hi1 } &&
-        statsOf(f).get(p2).forall { case (mn, mx) => mx >= lo2 && mn <= hi2 }
-    val kept = files.filter(live)
-    val base =
-      if (files.isEmpty) spark.emptyDataFrame
-      else if (kept.isEmpty) readFiles(spark, files, Seq.empty, sig, phys).limit(0)
-      else readFiles(spark, kept, dvs, sig, phys)
-    if (files.isEmpty) base
-    else base.filter(base.col(c1) >= lo1 && base.col(c1) <= hi1 &&
-      base.col(c2) >= lo2 && base.col(c2) <= hi2)
-  }
-
   /** METADATA-ONLY AGGREGATE — the lakehouse "answer it from the log"
     * fast path: COUNT(*) plus per-column MIN/MAX of the latest snapshot
     * computed from commit-time `.stats` sidecars and deletion-vector
@@ -1235,11 +1178,9 @@ object ManifestTable {
       cols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{col => c, lit, count, min, max,
       least, greatest, regexp_replace}
-    val v = latestVersion(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    val meta = snapshotMeta(table, v)
-    val files = snapshotFiles(table, v)
-    val dvInfo = snapshotDvInfo(table, v)
+    val p = plan(table, None, Nil)
+    val (meta, files) = (p.meta, p.files)
+    val dvInfo = p.dvLines.map(parseDvLine)
     val dvs = dvInfo.map(_._1)
     // a legacy DV line with no recorded targets could tombstone ANY
     // file — poison them all (same conservatism compact() applies)
@@ -1354,22 +1295,6 @@ object ManifestTable {
           greatest(asLit(mx).cast(dt), c(s"pmax_$cc")).as(s"max_$cc"))
       }
     tomb.crossJoin(pAgg).select(outCols: _*)
-  }
-
-  /** Files a 2-D pruned read would open — the [[readPruned2]] planning
-    * step exposed for layout diagnostics and tests. */
-  def prunedFileCount2(table: String,
-      c1: String, lo1: Long, hi1: Long,
-      c2: String, lo2: Long, hi2: Long,
-      version: Option[Long] = None): Int = {
-    val v = version.orElse(latestVersion(table)).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    val meta = snapshotMeta(table, v)
-    val (p1, p2) = (physName(meta, c1), physName(meta, c2))
-    snapshotFiles(table, v).count { f =>
-      statsOf(f).get(p1).forall { case (mn, mx) => mx >= lo1 && mn <= hi1 } &&
-        statsOf(f).get(p2).forall { case (mn, mx) => mx >= lo2 && mn <= hi2 }
-    }
   }
 
   /** Reconcile a committer's schema signature against the table's
@@ -1860,47 +1785,17 @@ object ManifestTable {
     throw new IllegalStateException(s"lost the commit race $maxRetries times on $table")
   }
 
-  /** Data files of the snapshot carrying `value`'s marker, plus (when
-    * `conservative`) files with NO marker — rewrite outputs that may
-    * hold any partition's rows. */
-  private def partitionSplit(table: String, version: Long, value: String)
-      : (Seq[String], Seq[String]) = {
-    val files = snapshotFiles(table, version)
-    files.partition(f => partitionValueOf(f) match {
-      case Some(v) => v == value
-      case None => true // unmarked: conservatively in scope
-    })
-  }
-
   /** Partition-pruned read: `WHERE pcol = value` planned as a string
     * match over the manifest entry list — zero file opens, O(entries)
     * planning. Unmarked files (cross-partition rewrite outputs) are
     * conservatively kept and the exact predicate re-applies, so the
     * result equals `read().filter(...)` for any layout history. */
-  def readPartition(spark: SparkSession, table: String, value: String,
-      version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(table)).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    val meta = snapshotMeta(table, v)
-    val pcol = meta.getOrElse("partcol", throw new IllegalStateException(
-      s"$table records no partition column"))
-    val (inScope, _) = partitionSplit(table, v, value)
-    val sig = meta.get("schema")
-    val phys = physNamesOf(meta)
-    val base =
-      if (inScope.isEmpty)
-        readFiles(spark, snapshotFiles(table, v), Seq.empty, sig, phys).limit(0)
-      else readFiles(spark, inScope, snapshotDvs(table, v), sig, phys)
-    base.filter(base.col(pcol) === value)
-  }
+  def readPartition(spark: SparkSession, table: String, value: String): DataFrame =
+    scan(spark, plan(table, None, Nil, Some(value)))
 
   /** Files a partition-pruned read would open — for layout pins. */
-  def partitionFileCount(table: String, value: String,
-      version: Option[Long] = None): Int = {
-    val v = version.orElse(latestVersion(table)).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    partitionSplit(table, v, value)._1.size
-  }
+  def partitionFileCount(table: String, value: String): Int =
+    plan(table, None, Nil, Some(value)).kept.size
 
   /** TRANSACTIONAL PARTITION OVERWRITE (`INSERT OVERWRITE ...
     * PARTITION (pcol = value)` — the backfill primitive): replace
@@ -1931,7 +1826,9 @@ object ManifestTable {
       val base = latestVersion(table).getOrElse(
         throw new IllegalStateException(s"no committed snapshot in $table"))
       val baseMeta = snapshotMeta(table, base)
-      val (replaced, carried) = partitionSplit(table, base, value)
+      // unmarked files are conservatively in scope, as for readPartition
+      val (replaced, carried) = snapshotFiles(table, base)
+        .partition(f => partitionValueOf(f).forall(_ == value))
       val ambiguous = replaced.filter(partitionValueOf(_).isEmpty)
       require(ambiguous.isEmpty,
         s"$table holds ${ambiguous.size} unmarked (cross-partition) files — " +
@@ -2045,20 +1942,36 @@ object ManifestTable {
   /** Transactional DELETE WHERE `column ∈ [lo, hi]` with FILE-LEVEL
     * PRUNING and a per-file COPY-ON-WRITE / MERGE-ON-READ choice — the
     * GDPR-erasure / retention-purge primitive of the production log
-    * formats: data files whose committed [min, max] stats (sidecar or
-    * footer, [[statsOf]]) cannot contain a matching row are carried
-    * into the new manifest UNTOUCHED — never read, never rewritten.
-    * Each OVERLAPPING file is then either rewritten with the
-    * predicate's complement (predicate covers ≥ `dvBelowOverlap` of its
-    * stats span — most of the file dies anyway) or tombstoned by a
-    * DELETION VECTOR: a parquet sidecar of the dying rows' (file path,
-    * row position) pairs, applied as an anti-join by every reader
-    * ([[read]]/[[readPruned]]) until [[compact]] materializes it away.
-    * At 100 TB the DV path is what makes erasing one scattered user
-    * synchronous-cheap: the commit writes tombstones proportional to
-    * the USER's rows while the lake's data files stand. Files with no
-    * stats for `column` are conservatively rewritten, so the result is
-    * exact regardless of stats coverage.
+    * formats. The literals type the predicate as in [[readPruned]]:
+    * Long/Int, String (UTF-8 order; `lo == hi` for the by-email/uuid
+    * equality shape), `LocalDate` or `Instant` (the retention shapes).
+    * Data files whose committed stats (sidecar or footer,
+    * [[statsTypedOf]]) cannot contain a matching row are carried into
+    * the new manifest UNTOUCHED — never read, never rewritten. Each
+    * overlapping file is then, from its stats alone (no data read):
+    *  - DROPPED from the manifest when its stats CONTAIN the range
+    *    (every value provably dies — the retention-purge economics where
+    *    expiring a whole old file is a manifest edit) and its null count
+    *    proves no null row, which the predicate never matches, would
+    *    survive; a truncated string bound never proves containment;
+    *  - for a partly overlapped long range (dates and timestamps on their
+    *    epoch encodings), REWRITTEN with the predicate's complement when
+    *    the range covers ≥ `dvBelowOverlap` of the file's stats span
+    *    (most of the file dies anyway — a DV that tombstones half a file
+    *    just moves the rewrite to every reader), else tombstoned by a
+    *    DELETION VECTOR: a parquet sidecar of the dying rows' (file path,
+    *    row position) pairs, applied as an anti-join by every reader
+    *    ([[read]]/[[readPruned]]) until [[compact]] materializes it
+    *    away. A grazed file is the scattered-GDPR-key case that made
+    *    copy-on-write rewrite the lake;
+    *  - for a partly overlapped string range, always a DV: a string key
+    *    has no arithmetic span, and string-keyed erasure is precisely the
+    *    scattered-key case DVs exist for;
+    *  - rewritten when it has no stats for `column` (or stats of another
+    *    type), unless its footer proves it empty (empty files never get
+    *    min/max stats and provably hold no match — rewriting one would
+    *    also trip callers asserting "DV deletes rewrite nothing").
+    * The result is exact regardless of stats coverage.
     *
     * Snapshot-dependent commit (the merge discipline): the kept+staged
     * file list is a function of the base snapshot, so the loop pins the
@@ -2067,139 +1980,11 @@ object ManifestTable {
     * erasure that must also purge history follows with [[vacuum]] after
     * dropping the old manifests (documented production two-step).
     * Returns the committed version (the base version when no file can
-    * contain a match — a provable no-op commits nothing). */
-  def deleteWhere(spark: SparkSession, table: String, logicalColumn: String,
-      lo: Long, hi: Long, maxRetries: Int = 20, dvBelowOverlap: Double = 0.5): Long =
-    deleteWhereCore(spark, table, logicalColumn,
-      // COPY-ON-WRITE vs MERGE-ON-READ, chosen per file from committed
-      // stats alone (no data read): the predicate's overlap fraction of
-      // the file's [min, max] span estimates how much of the file dies.
-      // A file losing most of its range is rewritten (a DV that
-      // tombstones half a file just moves the rewrite to every reader);
-      // a file grazed by the predicate — the scattered-GDPR-key case
-      // that made copy-on-write rewrite the lake — gets positional
-      // tombstones instead.
-      classify = longRangeClassify(lo, hi, dvBelowOverlap),
-      pred = c => c >= lo && c <= hi,
-      maxRetries = maxRetries)
-
-  /** The shared long-range delete classification: disjoint → keep;
-    * stats-CONTAINED (every value provably dies) → DROP candidate — the
-    * retention-purge economics where expiring a whole old file is a
-    * manifest edit, never a read ([[deleteWhereCore]] demotes the drop
-    * to a rewrite unless the file's null count proves no null row — a
-    * row the predicate never matches — would survive); partial overlap
-    * → the COW-vs-DV span heuristic. Dates and timestamps ride the
-    * same shape on their epoch-day / epoch-micro encodings. */
-  private def longRangeClassify(lo: Long, hi: Long,
-      dvBelowOverlap: Double): ColStat => Int = {
-    case LongStat(mn, mx) =>
-      if (!(mx >= lo && mn <= hi)) FileKeep
-      else if (lo <= mn && mx <= hi) FileDrop
-      else {
-        val span = math.max(mx - mn + 1, 1L).toDouble
-        val ov = math.max(math.min(hi, mx) - math.max(lo, mn) + 1, 0L).toDouble
-        if (ov / span >= dvBelowOverlap) FileRewrite else FileDv
-      }
-    case _ => FileRewrite // typed-mismatch stats: conservative
-  }
-
-  /** [[deleteWhere]] on a DATE predicate `column ∈ [lo, hi]` — the
-    * retention-expiry primitive ("purge everything before the cutoff")
-    * over a DATE column. Classification folds the committed INT32
-    * days-since-epoch ranges through the long machinery; the exact
-    * predicate compares DATE literals so the rewrite/DV scan never
-    * relies on an implicit cast. A file whose whole date range falls
-    * inside the predicate (the standard retention shape: yesterday's
-    * ingest dies whole) is DROPPED from the manifest without being
-    * read, provided its stats prove zero nulls. */
-  def deleteWhereDate(spark: SparkSession, table: String, logicalColumn: String,
-      lo: java.time.LocalDate, hi: java.time.LocalDate,
-      maxRetries: Int = 20, dvBelowOverlap: Double = 0.5): Long =
-    deleteWhereCore(spark, table, logicalColumn,
-      classify = longRangeClassify(lo.toEpochDay, hi.toEpochDay, dvBelowOverlap),
-      pred = c => c >= org.apache.spark.sql.functions.lit(
-          java.sql.Date.valueOf(lo)) &&
-        c <= org.apache.spark.sql.functions.lit(java.sql.Date.valueOf(hi)),
-      maxRetries = maxRetries)
-
-  /** [[deleteWhere]] on a TIMESTAMP predicate `column ∈ [lo, hi]`
-    * (instants, microsecond precision — parquet TIMESTAMP(MICROS)
-    * physical INT64): the event-time retention twin of
-    * [[deleteWhereDate]], same stats fold, same whole-file drop. */
-  def deleteWhereTimestamp(spark: SparkSession, table: String,
-      logicalColumn: String, lo: java.time.Instant, hi: java.time.Instant,
-      maxRetries: Int = 20, dvBelowOverlap: Double = 0.5): Long = {
-    def micros(i: java.time.Instant): Long =
-      math.addExact(math.multiplyExact(i.getEpochSecond, 1000000L),
-        i.getNano / 1000L)
-    deleteWhereCore(spark, table, logicalColumn,
-      classify = longRangeClassify(micros(lo), micros(hi), dvBelowOverlap),
-      pred = c => c >= org.apache.spark.sql.functions.lit(
-          java.sql.Timestamp.from(lo)) &&
-        c <= org.apache.spark.sql.functions.lit(java.sql.Timestamp.from(hi)),
-      maxRetries = maxRetries)
-  }
-
-  /** [[deleteWhere]] on a STRING predicate `column ∈ [lo, hi]` (UTF-8
-    * binary order; pass `lo == hi` for the equality shape) — the
-    * GDPR-by-email/uuid and retention-by-string-key erasure the
-    * production formats serve from truncated string stats. File-level
-    * pruning reads the committed [[StrStat]] ranges (truncation-sound:
-    * the stored bounds always contain every value); non-overlapping
-    * files carry into the new manifest VERBATIM — never read, never
-    * rewritten. Overlapping stats-bearing files take the DELETION
-    * VECTOR path unconditionally: a string key has no meaningful span
-    * fraction (the long overload's COW heuristic needs arithmetic
-    * overlap), and the string-keyed erasure is precisely the
-    * scattered-key case DVs exist for. Files with no string stats for
-    * `column` are conservatively rewritten, so the result is exact
-    * regardless of stats coverage. Same snapshot-dependent commit loop
-    * as the long overload. */
-  def deleteWhereString(spark: SparkSession, table: String, logicalColumn: String,
-      lo: String, hi: String, maxRetries: Int = 20): Long =
-    deleteWhereCore(spark, table, logicalColumn,
-      classify = {
-        // full containment may DROP the file (subject to the core's
-        // null-count demotion) — but only off EXACT endpoints: a
-        // truncated bound contains every value without being attained,
-        // so containment under it is unprovable
-        case StrStat(mn, mx, exact)
-            if exact && utf8Lte(lo, mn) && utf8Lte(mx, hi) => FileDrop
-        case StrStat(mn, mx, _) =>
-          if (utf8Lte(lo, mx) && utf8Lte(mn, hi)) FileDv else FileKeep
-        case _ => FileRewrite // typed-mismatch stats: conservative
-      },
-      pred = c => c >= lo && c <= hi,
-      maxRetries = maxRetries)
-
-  private val FileKeep = 0
-  private val FileRewrite = 1
-  private val FileDv = 2
-  private val FileDrop = 3 // whole file provably dies: manifest-only removal
-
-  /** A delete attempt's computed-and-staged work, kept across CAS
-    * losses so a provably-disjoint winner lets the loser REBASE (
-    * re-publish the same staged files on the new base) instead of
-    * recomputing — see [[deleteWhereCore]]. */
-  private final case class DeleteWork(base: Long, baseSig: Option[String],
-      baseColMap: Option[String], files: Seq[String],
-      oldDvEntries: Seq[String], rewriteF: Seq[String], dvF: Seq[String],
-      dropF: Seq[String], stagedData: Seq[String], stagedDv: Seq[String])
-
-  /** The shared snapshot-dependent DELETE commit loop: `classify` maps
-    * a hit-candidate file's committed stat for the predicate column to
-    * keep / copy-on-write rewrite / deletion-vector, `pred` builds the
-    * delete predicate over the PHYSICAL column. Stats-less files are
-    * conservatively rewritten UNLESS the footer proves them empty
-    * (empty files never get min/max stats and provably contain no
-    * match — rewriting one would also trip callers asserting "DV
-    * deletes rewrite nothing"). See [[deleteWhere]] for the full
-    * contract.
+    * contain a match — a provable no-op commits nothing).
     *
     * CONFLICT-AWARE RETRY (the Delta commit-rebase discipline, not just
-    * its recompute fallback): losing the CAS no longer always redoes
-    * the work. The loser classifies the winner's commit against its own
+    * its recompute fallback): losing the CAS does not always redo the
+    * work. The loser classifies the winner's commit against its own
     * read/write set; when the two provably don't conflict —
     *  - the winner REMOVED none of the files this delete rewrites or
     *    tombstones (a winner rewriting them means our staged complement
@@ -2216,37 +2001,33 @@ object ManifestTable {
     * entry list: a metadata-only retry, no scan, no re-stage. At 100 TB
     * with many streaming writers this is what keeps contention from
     * turning large deletes into recompute livelock. A genuine conflict
-    * falls back to the historic full recompute (the staged files of the
-    * lost attempt become vacuum-able orphans, as before). */
-  private def deleteWhereCore(spark: SparkSession, table: String,
-      logicalColumn: String, classify: ColStat => Int,
-      pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-      maxRetries: Int): Long = {
-    import org.apache.spark.sql.functions.{col => c}
-    // the file-level decision, shared by first compute and rebase check
-    def classifyFile(column: String)(f: String): Int =
-      statsTypedOf(f).get(column) match {
-        case Some(st) => classify(st) match {
-          // a DROP is sound only when the file provably holds no null
-          // in the predicate column (a null row never matches and must
-          // survive); unknown or nonzero null count demotes to the
-          // rewrite path, which keeps exactly the surviving rows
-          case FileDrop if !statsNullCount(f, column).contains(0L) => FileRewrite
-          case k => k
-        }
-        case None => if (footerRowCount(f) > 0) FileRewrite else FileKeep
-      }
+    * falls back to the full recompute (the staged files of the lost
+    * attempt become vacuum-able orphans). */
+  def deleteWhere[T](spark: SparkSession, table: String, logicalColumn: String,
+      lo: T, hi: T, maxRetries: Int = 20, dvBelowOverlap: Double = 0.5)(
+      implicit l: RangeLit[T]): Long = {
+    val range = ColRange(logicalColumn, lo, hi)
     var attempt = 0
     var work: Option[DeleteWork] = None
     while (attempt < maxRetries) {
-      val base = latestVersion(table).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot in $table"))
-      val baseMeta = snapshotMeta(table, base)
+      val p = plan(table, None, Seq(range))
+      val (base, baseMeta, files, oldDvEntries) = (p.version, p.meta, p.files, p.dvLines)
       // stats sidecars and the files themselves store PHYSICAL names;
       // the caller's predicate column is LOGICAL
       val column = physName(baseMeta, logicalColumn)
-      val files = snapshotFiles(table, base)
-      val oldDvEntries = snapshotEntries(table, base).filter(_.startsWith(DvPrefix))
+      val keptStats = p.kept.toMap
+      // the file-level decision, shared by first compute and rebase
+      // check; a file the plan pruned cannot hold a match
+      def classifyFile(f: String): Int = keptStats.get(f).map(_.get(column)) match {
+        case None => FileKeep
+        case Some(Some(st)) => classify(st, range.bound, dvBelowOverlap) match {
+          // unknown or nonzero null count demotes a drop to the rewrite,
+          // which keeps exactly the surviving rows
+          case FileDrop if !statsNullCount(f, column).contains(0L) => FileRewrite
+          case k => k
+        }
+        case Some(None) => if (footerRowCount(f) > 0) FileRewrite else FileKeep
+      }
 
       val attemptWork: Option[DeleteWork] = work match {
         case Some(w) =>
@@ -2266,7 +2047,7 @@ object ManifestTable {
             // invalidates the staged complement/tombstones
             removedSince.forall(f =>
               !w.rewriteF.contains(f) && !w.dvF.contains(f)) &&
-            addedSince.forall(f => classifyFile(column)(f) == FileKeep) &&
+            addedSince.forall(f => classifyFile(f) == FileKeep) &&
             w.rewriteF.forall(f => !newDvTargets.contains(f))
           if (disjoint)
             Some(w.copy(base = base, files = files, oldDvEntries = oldDvEntries))
@@ -2275,8 +2056,7 @@ object ManifestTable {
       }
 
       val thisWork: DeleteWork = attemptWork.getOrElse {
-        val dvs = oldDvEntries.map(parseDvLine(_)._1)
-        val classified: Seq[(String, Int)] = files.map(f => f -> classifyFile(column)(f))
+        val classified: Seq[(String, Int)] = files.map(f => f -> classifyFile(f))
         val rewriteF = classified.collect { case (f, FileRewrite) => f }
         val dvF = classified.collect { case (f, FileDv) => f }
         val dropF = classified.collect { case (f, FileDrop) => f }
@@ -2285,17 +2065,17 @@ object ManifestTable {
         // tombstoned row would resurrect it. The scan, filter, and
         // staged files all stay in PHYSICAL names: rewrites must keep
         // the files physically consistent across logical renames.
-        // NULL-SAFE survivor filter: a null predicate key makes
-        // `pred` NULL, and `filter(!NULL)` drops the row — which would
+        // NULL-SAFE survivor filter: a null predicate key makes the
+        // predicate NULL, and `filter(!NULL)` drops the row — which would
         // silently erase null-keyed rows from every rewritten file.
         // Deletes keep exactly the rows where the predicate is NOT
         // TRUE (SQL DELETE semantics), so nulls coalesce to survive.
         val stagedData =
           if (rewriteF.isEmpty) Seq.empty
-          else stage(scanPhysical(spark, rewriteF, dvs,
+          else stage(scanPhysical(spark, rewriteF, p.dvs,
               baseMeta.get("schema"), physNamesOf(baseMeta))
             .filter(!org.apache.spark.sql.functions.coalesce(
-              pred(c(column)), org.apache.spark.sql.functions.lit(false))), table)
+              range.exact(col(column)), lit(false))), table)
         // DV path records (path, pos) of the dying rows from the scan's
         // own `_metadata` — tombstone-sized output, no data file
         // touched. Re-tombstoning a position an older DV already covers
@@ -2303,9 +2083,9 @@ object ManifestTable {
         val stagedDv =
           if (dvF.isEmpty) Seq.empty
           else stage(spark.read.parquet(dvF: _*)
-            .filter(pred(c(column)))
-            .select(c("_metadata.file_path").as("path"),
-              c("_metadata.row_index").as("pos")), table)
+            .filter(range.exact(col(column)))
+            .select(col("_metadata.file_path").as("path"),
+              col("_metadata.row_index").as("pos")), table)
         DeleteWork(base, baseMeta.get("schema"), baseMeta.get("colmap"),
           files, oldDvEntries, rewriteF, dvF, dropF, stagedData, stagedDv)
       }
@@ -2319,7 +2099,7 @@ object ManifestTable {
         thisWork.rewriteF.contains(f) || thisWork.dvF.contains(f) ||
           thisWork.dropF.contains(f))
       val dvLines = oldDvEntries ++
-        thisWork.stagedDv.map(p => dvLine(p, thisWork.dvF))
+        thisWork.stagedDv.map(dvLine(_, thisWork.dvF))
       // tombstoned files carry into the new manifest VERBATIM — the DV
       // subtracts their dying rows reader-side; only rewritten files
       // leave the file list
@@ -2335,6 +2115,39 @@ object ManifestTable {
     }
     throw new IllegalStateException(s"lost the commit race $maxRetries times on $table")
   }
+
+  private val FileKeep = 0
+  private val FileRewrite = 1
+  private val FileDv = 2
+  private val FileDrop = 3 // whole file provably dies: manifest-only removal
+
+  /** [[deleteWhere]]'s per-file decision from one committed stat: keep,
+    * drop (stats contain the range), rewrite or DV — see there. */
+  private def classify(st: ColStat, bound: ColStat, dvBelowOverlap: Double): Int =
+    if (!overlaps(st, bound)) FileKeep
+    else (st, bound) match {
+      case (LongStat(mn, mx), LongStat(lo, hi)) =>
+        if (lo <= mn && mx <= hi) FileDrop
+        else {
+          val span = math.max(mx - mn + 1, 1L).toDouble
+          val ov = math.max(math.min(hi, mx) - math.max(lo, mn) + 1, 0L).toDouble
+          if (ov / span >= dvBelowOverlap) FileRewrite else FileDv
+        }
+      // a truncated bound contains every value without being attained,
+      // so containment under it is unprovable
+      case (StrStat(mn, mx, exact), StrStat(lo, hi, _)) =>
+        if (exact && utf8Lte(lo, mn) && utf8Lte(mx, hi)) FileDrop else FileDv
+      case _ => FileRewrite // typed-mismatch stats: conservative
+    }
+
+  /** A delete attempt's computed-and-staged work, kept across CAS
+    * losses so a provably-disjoint winner lets the loser REBASE (
+    * re-publish the same staged files on the new base) instead of
+    * recomputing — see [[deleteWhere]]. */
+  private final case class DeleteWork(base: Long, baseSig: Option[String],
+      baseColMap: Option[String], files: Seq[String],
+      oldDvEntries: Seq[String], rewriteF: Seq[String], dvF: Seq[String],
+      dropF: Seq[String], stagedData: Seq[String], stagedDv: Seq[String])
 
   /** INCREMENTAL COMPACTION: materialize every deletion vector away by
     * rewriting ONLY the data files the DVs tombstone (recorded on each

@@ -756,8 +756,8 @@ class ChangeFeedSuite extends SparkSuite {
     def names(fs: Iterable[String]) = fs.map(_.split('/').last).toSet
     // narrow DV delete lands in one file's span
     val vd = ManifestTable.deleteWhere(spark, t, "id", 100, 104)
-    val hit = all.filter(f => ManifestTable.statsOf(f).get("id")
-      .exists { case (lo, hi) => hi >= 100 && lo <= 104 })
+    val hit = all.filter(f => ManifestTable.statsTypedOf(f).get("id")
+      .exists { case ManifestTable.LongStat(lo, hi) => hi >= 100 && lo <= 104; case _ => false })
     assert(hit.size == 1, s"fixture: exactly one file should overlap, got ${hit.size}")
     val dvs = ManifestTable.snapshotDvs(t, vd)
     val opened = names(ManifestTable.readChanges(spark, t, vd - 1, vd).inputFiles)

@@ -24,6 +24,11 @@ class ManifestTableSuite extends SparkSuite {
   private def range(a: Long, b: Long) =
     spark.range(a, b).select(col("id"), (col("id") * 2).as("v"))
 
+  /** A committed file's long [min, max] for one column, if it has one. */
+  private def longStat(f: String, c: String): Option[(Long, Long)] =
+    ManifestTable.statsTypedOf(f).get(c)
+      .collect { case ManifestTable.LongStat(lo, hi) => (lo, hi) }
+
   test("append commits are atomically visible and cumulative") {
     val t = freshTable()
     val v0 = ManifestTable.append(spark, t, range(0, 100))
@@ -113,8 +118,8 @@ class ManifestTableSuite extends SparkSuite {
       ((col("id") * 2654435761L) % 40000).as("p"))
     ManifestTable.append(spark, t, df.repartitionByRange(32, col("p")))
     val box = ("a", 50L, 69L, "b", 50L, 69L)
-    def opened(): Int = ManifestTable.prunedFileCount2(t,
-      box._1, box._2, box._3, box._4, box._5, box._6)
+    def opened(): Int = ManifestTable.prunedFileCount(t,
+      box._1, box._2, box._3, ManifestTable.ColRange(box._4, box._5, box._6))
     val before = opened()
     assert(before >= 24, s"row-order layout must be unprunable for the 2-D box, got $before/32")
     val v1 = ManifestTable.clusterBy(spark, t, "a", "b")
@@ -128,8 +133,8 @@ class ManifestTableSuite extends SparkSuite {
     assert(ManifestTable.readChanges(spark, t, 0L, v1).isEmpty,
       "cluster commits are physical-only; the change feed must be silent")
     // pruned read == plain filtered read (correctness never rides on stats)
-    val pruned = ManifestTable.readPruned2(spark, t,
-      box._1, box._2, box._3, box._4, box._5, box._6)
+    val pruned = ManifestTable.readPruned(spark, t,
+      box._1, box._2, box._3, ManifestTable.ColRange(box._4, box._5, box._6))
     val plain = r1.filter(col("a").between(50, 69) && col("b").between(50, 69))
     assert(pruned.count() == 400) // 20 b-rows x 20 matching a-values each
     assert(pruned.exceptAll(plain).unionAll(plain.exceptAll(pruned)).isEmpty)
@@ -631,7 +636,7 @@ class ManifestTableSuite extends SparkSuite {
     // sidecar deleted → the footer fallback gives the same pruning
     val victim = ManifestTable.snapshotFiles(t,
       ManifestTable.latestVersion(t).get)
-      .find(f => ManifestTable.statsOf(f).get("k").exists(_._1 == 2000L)).get
+      .find(f => longStat(f, "k").exists(_._1 == 2000L)).get
     Files.deleteIfExists(Paths.get(victim + ".stats"))
     val pr4 = ManifestTable.readPruned(spark, t, "k", 2100L, 2300L)
     assert(pr4.inputFiles.length == 1 && pr4.count() == 201L)
@@ -650,7 +655,7 @@ class ManifestTableSuite extends SparkSuite {
     val v3 = ManifestTable.latestVersion(t).get
     val before = ManifestTable.snapshotFiles(t, v3)
     val (hitBefore, keepBefore) = before.partition { f =>
-      ManifestTable.statsOf(f).get("k").forall { case (mn, mx) => mx >= 2100L && mn <= 2300L }
+      longStat(f, "k").forall { case (mn, mx) => mx >= 2100L && mn <= 2300L }
     }
     assert(hitBefore.size == 1 && keepBefore.size == 3)
     // dvBelowOverlap = 0.0 forces the copy-on-write path for every hit
@@ -885,7 +890,7 @@ class ManifestTableSuite extends SparkSuite {
     val dvs = ManifestTable.snapshotDvs(t, vd)
     assert(dvs.nonEmpty, "precondition: the narrow delete must take the DV path")
     val hit = ManifestTable.snapshotFiles(t, vd).filter(f =>
-      ManifestTable.statsOf(f).get("id").exists { case (lo, hi) => hi >= 110 && lo <= 119 })
+      longStat(f, "id").exists { case (lo, hi) => hi >= 110 && lo <= 119 })
     val a1 = metaAgg()
     def names(fs: Iterable[String]) = fs.map(_.split('/').last).toSet
     assert(names(a1.inputFiles).subsetOf(names(hit) ++ names(dvs)),
@@ -935,7 +940,7 @@ class ManifestTableSuite extends SparkSuite {
       s"double min/max must come from the poisoned-file fallback scan, got $rowD")
   }
 
-  test("deleteWhereString: non-overlapping files carry verbatim; the hit file takes the DV path") {
+  test("string deleteWhere: non-overlapping files carry verbatim; the hit file takes the DV path") {
     val t = freshTable()
     // three lexicographically disjoint slices, one file each
     for (g <- Seq("alpha", "mike", "zulu"))
@@ -944,9 +949,9 @@ class ManifestTableSuite extends SparkSuite {
           concat(lit(g + "-user-"), col("id") % 10).as("owner")).coalesce(1))
     val before = ManifestTable.snapshotFiles(t, ManifestTable.latestVersion(t).get)
     // string-stats pruning: only the 'mike' slice can contain the key
-    assert(ManifestTable.prunedFileCountString(t, "owner",
+    assert(ManifestTable.prunedFileCount(t, "owner",
       "mike-user-3", "mike-user-3") == 1)
-    val v = ManifestTable.deleteWhereString(spark, t, "owner",
+    val v = ManifestTable.deleteWhere(spark, t, "owner",
       "mike-user-3", "mike-user-3")
     assert(ManifestTable.snapshotFiles(t, v).toSet == before.toSet,
       "a string-keyed DV delete must not rewrite any data file")
@@ -959,7 +964,7 @@ class ManifestTableSuite extends SparkSuite {
     assert(left.count() == 145, "5 of 150 rows carried owner mike-user-3")
     assert(left.filter(col("owner") === "mike-user-3").count() == 0)
     // pruned read == filtered read, and it opens only overlapping files
-    val pruned = ManifestTable.readPrunedString(spark, t, "owner", "zulu-", "zulu-~")
+    val pruned = ManifestTable.readPruned(spark, t, "owner", "zulu-", "zulu-~")
     assert(pruned.inputFiles.length <= 2, // the zulu data file (+ nothing else)
       s"string prune must skip disjoint slices, got ${pruned.inputFiles.toSeq}")
     assert(pruned.count() ==
@@ -1012,7 +1017,7 @@ class ManifestTableSuite extends SparkSuite {
     assert(left.filter(col("k").isNotNull).count() == 0L)
   }
 
-  test("deleteWhereDate / deleteWhereTimestamp: temporal predicates prune, drop, and stay exact") {
+  test("date and timestamp deleteWhere/readPruned: prune, drop, and stay exact") {
     import java.time.LocalDate
     val t = freshTable()
     // two files: 1995 dates and 1997 dates, as genuine DATE columns
@@ -1022,16 +1027,16 @@ class ManifestTableSuite extends SparkSuite {
           date_add(lit(java.sql.Date.valueOf(s"$y-01-01")),
             (col("id") % 300).cast("int")).as("d"),
           col("id").as("v")).coalesce(1))
-    assert(ManifestTable.prunedFileCountDate(t, "d",
+    assert(ManifestTable.prunedFileCount(t, "d",
       LocalDate.of(1995, 1, 1), LocalDate.of(1995, 12, 31)) == 1)
     // retention: everything before 1996 dies — whole-file drop
-    val v = ManifestTable.deleteWhereDate(spark, t, "d",
+    val v = ManifestTable.deleteWhere(spark, t, "d",
       LocalDate.of(1995, 1, 1), LocalDate.of(1995, 12, 31))
     assert(ManifestTable.snapshotDvs(t, v).isEmpty &&
       ManifestTable.snapshotFiles(t, v).size == 1)
     assert(ManifestTable.read(spark, t).count() == 100L)
     // pruned date read == filtered read
-    val pr = ManifestTable.readPrunedDate(spark, t, "d",
+    val pr = ManifestTable.readPruned(spark, t, "d",
       LocalDate.of(1997, 1, 1), LocalDate.of(1997, 3, 1))
     assert(pr.count() == ManifestTable.read(spark, t)
       .filter(col("d") <= lit(java.sql.Date.valueOf("1997-03-01"))).count())
@@ -1045,13 +1050,44 @@ class ManifestTableSuite extends SparkSuite {
         col("id").as("v")).coalesce(1))
     val lo = java.time.Instant.parse("2024-01-02T00:00:00Z")
     val hi = java.time.Instant.parse("2024-01-02T23:59:59Z")
-    val vt = ManifestTable.deleteWhereTimestamp(spark, t2, "ts", lo, hi)
+    val vt = ManifestTable.deleteWhere(spark, t2, "ts", lo, hi)
     assert(ManifestTable.snapshotDvs(t2, vt).size == 1,
       "a grazing timestamp window must take the DV path")
     // rows 24..47 (the 24 hours of Jan 2) die
     assert(ManifestTable.read(spark, t2).count() == 976L)
     assert(ManifestTable.read(spark, t2)
       .filter(col("v") >= 24 && col("v") <= 47).count() == 0L)
+    // the timestamp read side: a window straddling the erased day opens
+    // the one file and equals the filtered read (rows 48..60 survive)
+    def filtered(a: java.time.Instant, b: java.time.Instant) = ManifestTable.read(spark, t2)
+      .filter(col("ts").between(lit(java.sql.Timestamp.from(a)), lit(java.sql.Timestamp.from(b))))
+    val (rLo, rHi) = (java.time.Instant.parse("2024-01-02T12:00:00Z"),
+      java.time.Instant.parse("2024-01-03T12:00:00Z"))
+    val prT = ManifestTable.readPruned(spark, t2, "ts", rLo, rHi)
+    assert(prT.count() == 13L)
+    assert(prT.exceptAll(filtered(rLo, rHi)).union(filtered(rLo, rHi).exceptAll(prT)).isEmpty)
+    assert(ManifestTable.prunedFileCount(t2, "ts", rLo, rHi) == 1)
+    // a window past the file's range opens nothing and reads empty
+    val (fLo, fHi) = (java.time.Instant.parse("2025-01-01T00:00:00Z"),
+      java.time.Instant.parse("2025-12-31T00:00:00Z"))
+    assert(ManifestTable.prunedFileCount(t2, "ts", fLo, fHi) == 0)
+    assert(ManifestTable.readPruned(spark, t2, "ts", fLo, fHi).count() ==
+      filtered(fLo, fHi).count())
+  }
+
+  test("a pruned read of a zero-file snapshot keeps the committed schema") {
+    val t = freshTable()
+    ManifestTable.append(spark, t, range(0, 100).coalesce(1))
+    // the purge contains the only file's range: it leaves the manifest
+    val vd = ManifestTable.deleteWhere(spark, t, "id", 0, 99)
+    assert(ManifestTable.snapshotFiles(t, vd).isEmpty, "precondition: a zero-file snapshot")
+    val full = ManifestTable.read(spark, t)
+    assert(full.columns.toSeq == Seq("id", "v"))
+    val pruned = ManifestTable.readPruned(spark, t, "id", 0, 5)
+    assert(pruned.schema == full.schema)
+    assert(pruned.select("id").count() == 0L)
+    assert(ManifestTable.readPruned(spark, t, "id", 0L, 5L,
+      ManifestTable.ColRange("v", 0L, 10L)).schema == full.schema)
   }
 
   test("clusterBy over a STRING dimension: per-file string ranges tighten, pruned reads stay exact") {
@@ -1063,7 +1099,7 @@ class ManifestTableSuite extends SparkSuite {
         .as("k"),
       col("id").as("v"))
     ManifestTable.append(spark, t, rowsDf.repartition(8))
-    val preOpen = ManifestTable.prunedFileCountString(t, "k", "key-007", "key-007")
+    val preOpen = ManifestTable.prunedFileCount(t, "k", "key-007", "key-007")
     assert(preOpen == 8, s"shuffled layout must be unprunable, opened $preOpen")
     val want = ManifestTable.read(spark, t)
       .filter(col("k") === "key-007").agg(sum(col("v"))).as[Long].head()
@@ -1071,11 +1107,11 @@ class ManifestTableSuite extends SparkSuite {
     // through the order-preserving fingerprint; committed string stats
     // then carry tight per-file ranges
     ManifestTable.clusterBy(spark, t, "k", "v", files = 8)
-    val postOpen = ManifestTable.prunedFileCountString(t, "k", "key-007", "key-007")
+    val postOpen = ManifestTable.prunedFileCount(t, "k", "key-007", "key-007")
     assert(postOpen < 8, s"string clustering must tighten ranges, opened $postOpen")
     // pruned read == full filter, exactly (pruning is never allowed to
     // change results, clustered or not)
-    val got = ManifestTable.readPrunedString(spark, t, "k", "key-007", "key-007")
+    val got = ManifestTable.readPruned(spark, t, "k", "key-007", "key-007")
       .agg(sum(col("v"))).as[Long].head()
     assert(got == want)
     assert(ManifestTable.read(spark, t).count() == 2000, "clusterBy is an identity")
@@ -1118,6 +1154,24 @@ class ManifestTableSuite extends SparkSuite {
         .option("table", t).load()
     }
     assert(errS.getMessage.contains("timetravel2"))
+    // ...as does every pruned read, file count, the partition read, the
+    // metadata-only aggregate and a delete: they all plan through the
+    // one gate
+    val gated: Seq[(String, () => Any)] = Seq(
+      "readPruned" -> (() => ManifestTable.readPruned(spark, t, "id", 0, 5).count()),
+      "readPruned string" -> (() => ManifestTable.readPruned(spark, t, "w", "a", "b").count()),
+      "readPruned box" -> (() => ManifestTable.readPruned(spark, t, "id", 0L, 5L,
+        ManifestTable.ColRange("w", 0L, 10L)).count()),
+      "prunedFileCount" -> (() => ManifestTable.prunedFileCount(t, "id", 0L, 5L)),
+      "readPartition" -> (() => ManifestTable.readPartition(spark, t, "p0").count()),
+      "partitionFileCount" -> (() => ManifestTable.partitionFileCount(t, "p0")),
+      "statsAggregate" -> (() => ManifestTable.statsAggregate(spark, t, Seq("id")).collect()),
+      "deleteWhere" -> (() => ManifestTable.deleteWhere(spark, t, "id", 0L, 5L)))
+    for ((name, call) <- gated) {
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains("timetravel2"), s"$name must fail fast, got: ${e.getMessage}")
+    }
+    assert(ManifestTable.latestVersion(t).contains(futureV), "the gated delete committed nothing")
     // time travel to the pre-feature version still works
     assert(ManifestTable.read(spark, t, Some(head)).count() == 107)
   }
@@ -1192,7 +1246,7 @@ class ManifestTableSuite extends SparkSuite {
     // the long-key file's range is truncated but must still CONTAIN
     // every value: an equality read on a long key finds its row
     val key = longPrefix + "7"
-    val got = ManifestTable.readPrunedString(spark, t, "k", key, key)
+    val got = ManifestTable.readPruned(spark, t, "k", key, key)
     assert(got.count() == 1, "truncated bounds must keep the match")
     // and the truncated file is NOT trusted for exact min/max — the
     // aggregate re-reads it (inputFiles nonempty) yet stays exact
