@@ -2,8 +2,13 @@ package graft.sources
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Checkpointed incremental consumption of a [[ManifestTable]]'s own
   * commit log — the Trigger.AvailableNow discipline with the manifest
@@ -63,6 +68,24 @@ object ChangeFeed {
     * feed is already caught up (process not called — a caught-up drain
     * costs two directory listings).
     *
+    * DERIVATION OVERLAPS, DELIVERY DOES NOT. The drain plans its backlog
+    * from manifest metadata first, then derives the changelogs in waves
+    * of `spark.sparkContext.defaultParallelism` versions, the versions
+    * of a wave concurrently ([[graft.Parallel.run]]): committed versions
+    * are immutable, independent inputs, and at a small batch's size the
+    * per-job scheduling, not the compute, sets a derivation's cost. The
+    * delivery contract is unchanged: one `process` call per version, in
+    * version order, the checkpoint advanced after each. A version whose
+    * derivation fails surfaces its error when the drain reaches it,
+    * after every earlier version was processed and checkpointed. Each
+    * batch arrives MATERIALIZED (an eager local checkpoint), so a
+    * consumer that uses its batch twice — q_warehouse_layers' DWD and
+    * DWS sinks — no longer derives it twice; the batch's blocks are
+    * released when `process` returns, so a consumer must not keep the
+    * DataFrame past its call. At most one wave's batches are held at
+    * once (executor block storage, spilling to disk). Epoch-boundary
+    * versions are not pre-derived, and no wave spans a boundary.
+    *
     * SCHEMA-EPOCH SEGMENTATION: an overwrite that changes the schema
     * non-additively (narrowing, rename, type change — anything
     * [[ManifestTable.readChanges]] rejects) starts a NEW epoch: the old
@@ -100,43 +123,109 @@ object ChangeFeed {
     val from = lastProcessed(checkpoint)
     val to = ManifestTable.latestVersion(table).getOrElse(-1L)
     if (to <= from) return None
-    // one manifest-header read per version: the previous iteration's
-    // meta doubles as this iteration's v−1 (a fresh drain reads v−1
-    // once at entry), so an N-version backlog costs ~N header reads,
-    // not 3-4N
-    var prevMeta: Map[String, String] =
-      if (from >= 0) ManifestTable.snapshotMeta(table, from) else Map.empty
-    for (v <- (from + 1) to to) {
-      val meta = ManifestTable.snapshotMeta(table, v)
-      // provably change-free commits (compact/cluster rewrites carry
-      // every row; rename is metadata-only and the feed rides across it
-      // in the consumer's own schema handling) advance the checkpoint
-      // WITHOUT invoking the consumer: a sink like idempotentAppend
-      // would otherwise publish one empty snapshot version per upstream
-      // reorg, inflating the downstream manifest history for no data
-      val changeFree = meta.get("op").exists(o =>
-        o == "compact" || o == "cluster" || o == "compact-small" || o == "rename")
-      // a rename delivers no rows but re-labels every later batch's
-      // columns — give name-pinned consumers their adaptation hook
-      if (meta.get("op").contains("rename"))
-        onSchemaRelabel.foreach(_(meta("schema"), v))
-      if (!changeFree) {
-        if (epochBoundary(prevMeta, meta)) {
-          val sig = meta("schema")
-          onEpochRestart.getOrElse(throw new IllegalStateException(
-            s"$table v$v starts a new schema epoch ([$sig]); pass " +
-              "onEpochRestart to let the feed segment across it"))(sig, v)
-          process(ManifestTable.read(spark, table, Some(v))
-            .withColumn("_change_type", lit("insert"))
-            .withColumn("_commit_version", lit(v)), v - 1, v)
-        } else
-          process(ManifestTable.readChanges(spark, table, v - 1, v), v - 1, v)
-      }
-      advance(checkpoint, v)
-      prevMeta = meta
+    val width = math.max(1, spark.sparkContext.defaultParallelism)
+    var pending = backlog(table, from, to)
+    while (pending.nonEmpty) {
+      val (wave, rest) = nextWave(pending, width)
+      val held = derive(spark, table, wave.collect { case Step(v, _, Derive) => v })
+      try wave.foreach { case Step(v, meta, kind) =>
+        kind match {
+          // a rename delivers no rows but re-labels every later batch's
+          // columns — give name-pinned consumers their adaptation hook
+          case Relabel => onSchemaRelabel.foreach(_(meta("schema"), v))
+          case Skip => ()
+          case Boundary =>
+            val sig = meta("schema")
+            onEpochRestart.getOrElse(throw new IllegalStateException(
+              s"$table v$v starts a new schema epoch ([$sig]); pass " +
+                "onEpochRestart to let the feed segment across it"))(sig, v)
+            process(ManifestTable.read(spark, table, Some(v))
+              .withColumn("_change_type", lit("insert"))
+              .withColumn("_commit_version", lit(v)), v - 1, v)
+          case Derive =>
+            val batch = held.remove(v).get.get
+            try process(batch, v - 1, v) finally release(batch)
+        }
+        advance(checkpoint, v)
+      } finally held.values.foreach(_.foreach(release)) // the undelivered rest
+      pending = rest
     }
     Some((from, to))
   }
+
+  /** How the drain handles one committed version. */
+  private sealed trait Kind
+  /** Provably change-free (compact/cluster rewrites carry every row):
+    * the checkpoint advances WITHOUT invoking the consumer — a sink like
+    * idempotentAppend would otherwise publish one empty snapshot version
+    * per upstream reorg, inflating the downstream history for no data. */
+  private case object Skip extends Kind
+  /** A rename: change-free too, but fires `onSchemaRelabel`. */
+  private case object Relabel extends Kind
+  /** A non-additive schema change: `onEpochRestart`, then the snapshot. */
+  private case object Boundary extends Kind
+  /** Everything else: the changelog `(v−1, v]`. */
+  private case object Derive extends Kind
+
+  private final case class Step(v: Long, meta: Map[String, String], kind: Kind)
+
+  /** The drain's plan, from manifest metadata only: one header read per
+    * version (each version's meta doubles as the next one's v−1). */
+  private def backlog(table: String, from: Long, to: Long): Seq[Step] = {
+    val versions = ((from + 1) to to).toVector
+    val metas = versions.map(ManifestTable.snapshotMeta(table, _))
+    val prevs =
+      (if (from >= 0) ManifestTable.snapshotMeta(table, from) else Map.empty[String, String]) +: metas
+    versions.lazyZip(metas).lazyZip(prevs).map { (v, meta, prev) =>
+      val op = meta.get("op")
+      val kind =
+        if (op.contains("rename")) Relabel
+        else if (op.exists(o => o == "compact" || o == "cluster" || o == "compact-small")) Skip
+        else if (epochBoundary(prev, meta)) Boundary
+        else Derive
+      Step(v, meta, kind)
+    }
+  }
+
+  /** Split off the next wave: an epoch boundary alone (its handler runs,
+    * or the drain fails, before any later version is derived), else the
+    * steps before the next boundary holding at most `width` versions to
+    * derive. */
+  private def nextWave(steps: Seq[Step], width: Int): (Seq[Step], Seq[Step]) =
+    if (steps.head.kind == Boundary) steps.splitAt(1)
+    else {
+      val cut = steps.indexWhere(_.kind == Boundary) match {
+        case -1 => steps.size
+        case i => i
+      }
+      val derived = steps.take(cut).zipWithIndex.collect { case (Step(_, _, Derive), i) => i }
+      steps.splitAt(if (derived.size > width) derived(width) else cut)
+    }
+
+  /** Derive the changelogs of `versions` concurrently, each materialized
+    * once (an eager local checkpoint), so the consumer's reads of a batch
+    * run no derivation job. A version whose derivation fails keeps its
+    * failure, surfacing when the drain reaches it. */
+  private def derive(spark: SparkSession, table: String,
+      versions: Seq[Long]): scala.collection.mutable.Map[Long, Try[DataFrame]] = {
+    val out = new ConcurrentHashMap[Long, Try[DataFrame]]()
+    try graft.Parallel.run(versions.map { v => () =>
+      out.put(v, Try(ManifestTable.readChanges(spark, table, v - 1, v)
+        .localCheckpoint(eager = true)))
+    }: _*)
+    catch { case e: Throwable =>
+      out.values.asScala.foreach(_.foreach(release))
+      throw e
+    }
+    out.asScala
+  }
+
+  /** Drop a materialized batch's blocks. */
+  private def release(batch: DataFrame): Unit =
+    batch.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 
   /** True iff a commit rewrote the schema NON-additively relative to
     * its predecessor — the epoch boundary [[ManifestTable.readChanges]]

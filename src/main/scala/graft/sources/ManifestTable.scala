@@ -152,6 +152,20 @@ object ManifestTable {
     (DvPrefix + dvPath) + targets.map("|" + _).mkString
   }
 
+  /** A DV sidecar's rows: the (`_metadata.file_path`,
+    * `_metadata.row_index`) pair of each tombstoned row. Sidecars are
+    * read under this schema, never by inference — an inferred read runs
+    * one Spark job per DataFrame built (~70 ms warm). */
+  private val DvSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("path", org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("pos", org.apache.spark.sql.types.LongType)))
+
+  /** The tombstoned (path, pos) pairs of `dvs`, keyed `__fp` / `__pos`
+    * for the positional joins against a scan's own `_metadata`. */
+  private def dvPairs(spark: SparkSession, dvs: Seq[String]): DataFrame =
+    spark.read.schema(DvSchema).parquet(dvs: _*)
+      .select(col("path").as("__fp"), col("pos").as("__pos"))
+
   /** Parse a DV manifest line → (sidecar path, targeted data files).
     * Lines written before target tracking parse as target-unknown
     * (empty) — compact treats those conservatively (full rewrite). */
@@ -431,16 +445,16 @@ object ManifestTable {
   private def scanPhysical(spark: SparkSession, files: Seq[String],
       dvs: Seq[String], sig: Option[String], phys: Option[Seq[String]]): DataFrame = {
     import org.apache.spark.sql.functions.col
+    val scanSchema = sig.flatMap(sigToSchema).map(physSchema(_, phys))
     // a zero-file snapshot (e.g. a retention delete that DROPPED every
     // file) must still serve the committed schema — a schema-less
     // empty frame breaks typed consumers downstream
     if (files.isEmpty)
-      return sig.flatMap(sigToSchema).map(physSchema(_, phys)) match {
+      return scanSchema match {
         case Some(sch) => spark.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](), sch)
         case None => spark.emptyDataFrame
       }
-    val scanSchema = sig.flatMap(sigToSchema).map(physSchema(_, phys))
     val base = scanSchema match {
       case Some(sch) => spark.read.schema(sch).parquet(files: _*)
       case None => spark.read.parquet(files: _*)
@@ -448,8 +462,7 @@ object ManifestTable {
     if (dvs.isEmpty) base
     else {
       val cols = base.columns.toSeq
-      val dv = spark.read.parquet(dvs: _*)
-        .select(col("path").as("__fp"), col("pos").as("__pos"))
+      val dv = dvPairs(spark, dvs)
       base
         .select(col("*"), col("_metadata.file_path").as("__fp"),
           col("_metadata.row_index").as("__pos"))
@@ -733,35 +746,41 @@ object ManifestTable {
     }
   }
 
-  /** A committed file's null count for one physical column: the
-    * `#nulls:` sidecar line when present, else the footer (files staged
-    * before sidecars carried null counts). `None` = unknown — callers
-    * must then assume the column MAY hold nulls. */
-  def statsNullCount(file: String, column: String): Option[Long] = {
-    val sc = Paths.get(file + ".stats")
-    if (!Files.exists(sc)) return footerNullCounts(file).get(column)
-    val lines = Files.readAllLines(sc).asScala
-    // a sidecar written before null harvesting has no #nulls: lines at
-    // all — fall back to the footer; one written after records every
-    // KNOWN column, so a missing line there means genuinely unknown
-    if (!lines.exists(_.startsWith("#nulls:")))
-      return footerNullCounts(file).get(column)
-    val key = "#nulls:" + java.util.Base64.getEncoder
-      .encodeToString(column.getBytes("UTF-8")) + "="
-    lines.find(_.startsWith(key)).flatMap(l =>
-      scala.util.Try(l.stripPrefix(key).toLong).toOption)
-  }
-
   /** A committed data file's typed column ranges: the sidecar when
     * present (one tiny read — the manifest-adjacent stats a log-store
     * format keeps), else the parquet footer (correct fallback for files
     * staged before sidecars existed). Unparseable lines are skipped —
     * absent stats only cost pruning, never correctness. */
-  def statsTypedOf(file: String): Map[String, ColStat] = {
+  def statsTypedOf(file: String): Map[String, ColStat] = fileStats(file).ranges
+
+  /** One parse of a file's `.stats` sidecar: its typed ranges and its
+    * per-PHYSICAL-column null counts. `nulls` is None when there is no
+    * sidecar or the sidecar predates null harvesting (no `#nulls:` line
+    * at all) — ask the footer then; a sidecar written after records
+    * every KNOWN column, so a missing column there is genuinely unknown. */
+  private final case class FileStats(ranges: Map[String, ColStat],
+      nulls: Option[Map[String, Long]]) {
+    /** `column`'s null count, `None` = unknown: callers must then assume
+      * the column MAY hold nulls. */
+    def nullCount(file: String, column: String): Option[Long] =
+      nulls.getOrElse(footerNullCounts(file)).get(column)
+  }
+
+  private val NoStats = FileStats(Map.empty, None)
+
+  private def fileStats(file: String): FileStats = {
     val sc = Paths.get(file + ".stats")
-    if (!Files.exists(sc)) return footerStatsTyped(file)
+    if (!Files.exists(sc)) return FileStats(footerStatsTyped(file), None)
+    val lines = Files.readAllLines(sc).asScala
     val b64 = java.util.Base64.getDecoder
-    Files.readAllLines(sc).asScala.flatMap { l =>
+    // `#nulls:<b64 col>=N` — split at the LAST '=': base64 pads with '='
+    val nullLines = lines.filter(_.startsWith("#nulls:"))
+    val nulls = Option.when(nullLines.nonEmpty)(nullLines.flatMap { l =>
+      val i = l.lastIndexOf('=')
+      scala.util.Try(new String(b64.decode(l.substring(7, i)), "UTF-8") ->
+        l.substring(i + 1).toLong).toOption
+    }.toMap)
+    val ranges = lines.flatMap { l =>
       l.split("=", 2) match {
         case Array(c, range) if !l.startsWith("#") =>
           if (range.startsWith("s64:"))
@@ -783,6 +802,7 @@ object ManifestTable {
         case _ => None
       }
     }.toMap
+    FileStats(ranges, nulls)
   }
 
   /** How a literal type bounds a [[ColRange]]: the range in the
@@ -835,7 +855,7 @@ object ManifestTable {
     * read re-applies (None: the whole snapshot). */
   private final case class ScanPlan(version: Long, meta: Map[String, String],
       files: Seq[String], dvLines: Seq[String],
-      kept: Seq[(String, Map[String, ColStat])], filter: Option[Column]) {
+      kept: Seq[(String, FileStats)], filter: Option[Column]) {
     def dvs: Seq[String] = dvLines.map(parseDvLine(_)._1)
   }
 
@@ -860,8 +880,10 @@ object ManifestTable {
     val bounds = ranges.map(r => physName(meta, r.col) -> r.bound)
     val kept = files
       .filter(f => partition.forall(p => partitionValueOf(f).forall(_ == p)))
-      .map(f => f -> (if (bounds.isEmpty) Map.empty[String, ColStat] else statsTypedOf(f)))
-      .filter { case (_, st) => bounds.forall { case (c, b) => st.get(c).forall(overlaps(_, b)) } }
+      .map(f => f -> (if (bounds.isEmpty) NoStats else fileStats(f)))
+      .filter { case (_, st) =>
+        bounds.forall { case (c, b) => st.ranges.get(c).forall(overlaps(_, b)) }
+      }
     val onPartition = partition.map(p => col(meta.getOrElse("partcol",
       throw new IllegalStateException(s"$table records no partition column"))) === p)
     ScanPlan(v, meta, files, dvLines, kept,
@@ -928,11 +950,20 @@ object ManifestTable {
     // physically-named files under logical names). Monotone because a
     // feature's artifacts may persist in RETAINED older versions even
     // after the live snapshot stops using it.
+    // The BASE snapshot's features gate the writer too: a commit on a
+    // snapshot this implementation cannot read would carry an unknown
+    // feature forward (and a rewrite would restage rows it may have
+    // misread), so every committing call fails fast here.
     val prevFeatures: Set[String] =
       if (v == 0) Set.empty
-      else try snapshotMeta(table, v - 1).get("features")
-          .map(_.split(",").toSet.filter(_.nonEmpty)).getOrElse(Set.empty)
-        catch { case scala.util.control.NonFatal(_) => Set.empty }
+      else {
+        val prevMeta =
+          try snapshotMeta(table, v - 1)
+          catch { case scala.util.control.NonFatal(_) => Map.empty[String, String] }
+        requireSupported(table, v - 1, prevMeta)
+        prevMeta.get("features").map(_.split(",").toSet.filter(_.nonEmpty))
+          .getOrElse(Set.empty)
+      }
     val usedNow =
       (if (stamped0.contains("colmap")) Set("colmap") else Set.empty) ++
         (if (files.exists(_.startsWith(DvPrefix))) Set("dv") else Set.empty) ++
@@ -1229,7 +1260,7 @@ object ManifestTable {
             .replaceFirst("^file:/+", "/"))
         val fdf = spark.createDataset(canon)(
           org.apache.spark.sql.Encoders.STRING).toDF("path")
-        spark.read.parquet(dvs: _*)
+        spark.read.schema(DvSchema).parquet(dvs: _*)
           .select(regexp_replace(c("path"), "^file:/+", "/").as("path"),
             c("pos")).distinct()
           .join(fdf, Seq("path"), "left_semi")
@@ -2018,15 +2049,17 @@ object ManifestTable {
       val keptStats = p.kept.toMap
       // the file-level decision, shared by first compute and rebase
       // check; a file the plan pruned cannot hold a match
-      def classifyFile(f: String): Int = keptStats.get(f).map(_.get(column)) match {
+      def classifyFile(f: String): Int = keptStats.get(f) match {
         case None => FileKeep
-        case Some(Some(st)) => classify(st, range.bound, dvBelowOverlap) match {
-          // unknown or nonzero null count demotes a drop to the rewrite,
-          // which keeps exactly the surviving rows
-          case FileDrop if !statsNullCount(f, column).contains(0L) => FileRewrite
-          case k => k
+        case Some(fs) => fs.ranges.get(column) match {
+          case Some(st) => classify(st, range.bound, dvBelowOverlap) match {
+            // unknown or nonzero null count demotes a drop to the
+            // rewrite, which keeps exactly the surviving rows
+            case FileDrop if !fs.nullCount(f, column).contains(0L) => FileRewrite
+            case k => k
+          }
+          case None => if (footerRowCount(f) > 0) FileRewrite else FileKeep
         }
-        case Some(None) => if (footerRowCount(f) > 0) FileRewrite else FileKeep
       }
 
       val attemptWork: Option[DeleteWork] = work match {
@@ -2079,10 +2112,13 @@ object ManifestTable {
         // DV path records (path, pos) of the dying rows from the scan's
         // own `_metadata` — tombstone-sized output, no data file
         // touched. Re-tombstoning a position an older DV already covers
-        // is harmless (anti-join semantics), so the raw scan suffices.
+        // is harmless (anti-join semantics), so the raw scan suffices —
+        // under the snapshot's physical schema, which spares the
+        // inference job (only a schema-less legacy snapshot infers).
         val stagedDv =
           if (dvF.isEmpty) Seq.empty
-          else stage(spark.read.parquet(dvF: _*)
+          else stage(scanPhysical(spark, dvF, Nil,
+              baseMeta.get("schema"), physNamesOf(baseMeta))
             .filter(range.exact(col(column)))
             .select(col("_metadata.file_path").as("path"),
               col("_metadata.row_index").as("pos")), table)
@@ -2289,14 +2325,15 @@ object ManifestTable {
     // ride through (ids/physical/types unchanged — the changelog emits
     // in the END version's logical names, Delta CDF's column-mapping
     // behavior); adds null-fill; drops and type changes bound the epoch
-    (math.max(fromV, 0L) to toV).foreach { v =>
-      require(sigPrefixCompatible(snapshotMeta(table, v), finalMeta),
+    val metas = (math.max(fromV, 0L) to toV).map(v => v -> snapshotMeta(table, v)).toMap
+    metas.values.foreach { meta =>
+      require(sigPrefixCompatible(meta, finalMeta),
         s"schema changed non-additively (or a column was dropped) inside the " +
           s"change range ($fromV, $toV] of $table — consume each schema epoch " +
           "separately")
     }
     val steps = ((fromV + 1) to toV)
-      .flatMap(v => changesAt(spark, table, v, finalSig, finalPhys))
+      .flatMap(v => changesAt(spark, table, v, metas(v), finalSig, finalPhys))
     if (steps.nonEmpty) steps.reduce(_ union _)
     else read(spark, table, Some(toV)).limit(0)
       .withColumn("_change_type", lit("insert"))
@@ -2307,7 +2344,8 @@ object ManifestTable {
   /** One commit's row-level changes (None when provably change-free):
     * the per-version step of [[readChanges]]. */
   private def changesAt(spark: SparkSession, table: String, v: Long,
-      sig: Option[String], phys: Option[Seq[String]]): Option[DataFrame] = {
+      meta: Map[String, String], sig: Option[String],
+      phys: Option[Seq[String]]): Option[DataFrame] = {
     import org.apache.spark.sql.functions.{col, lit}
     def tag(df: DataFrame, t: String): DataFrame =
       df.withColumn("_change_type", lit(t)).withColumn("_commit_version", lit(v))
@@ -2315,18 +2353,22 @@ object ManifestTable {
     // carry every row — logically change-free by contract; rename and
     // drop-column are metadata-only (entries verbatim) and fall out as
     // change-free below (no added/removed files, no DV delta)
-    if (snapshotMeta(table, v).get("op").exists(o =>
+    if (meta.get("op").exists(o =>
         o == "compact" || o == "cluster" || o == "compact-small"))
       return None
     // every step reads under the RANGE-FINAL signature (prefix-chain
     // checked by the caller), so pre-evolution steps null-fill the
     // evolved columns and the per-version unions stay type-aligned
-    val prevFiles = if (v == 0) Seq.empty[String] else snapshotFiles(table, v - 1)
-    val curFiles = snapshotFiles(table, v)
-    val prevDvInfo =
-      if (v == 0) Seq.empty[(String, Seq[String])] else snapshotDvInfo(table, v - 1)
+    // each snapshot's entries are reconstructed ONCE (a delta-chain
+    // walk), then split into data files and DV lines
+    def filesAndDvs(entries: Seq[String]): (Seq[String], Seq[(String, Seq[String])]) = {
+      val (dvLines, files) = entries.partition(_.startsWith(DvPrefix))
+      (files, dvLines.map(parseDvLine))
+    }
+    val (prevFiles, prevDvInfo) =
+      filesAndDvs(if (v == 0) Seq.empty else snapshotEntries(table, v - 1))
+    val (curFiles, curDvInfo) = filesAndDvs(snapshotEntries(table, v))
     val prevDvs = prevDvInfo.map(_._1)
-    val curDvInfo = snapshotDvInfo(table, v)
     val curDvs = curDvInfo.map(_._1)
     val added = curFiles.filterNot(prevFiles.toSet)
     val removed = prevFiles.filterNot(curFiles.toSet)
@@ -2378,15 +2420,10 @@ object ManifestTable {
       val keyed = base.select(col("*"),
         col("_metadata.file_path").as("__fp"),
         col("_metadata.row_index").as("__pos"))
-      val setPairs = spark.read.parquet(dvSet.map(_._1): _*)
-        .select(col("path").as("__fp"), col("pos").as("__pos"))
-      val hit = keyed.join(setPairs, Seq("__fp", "__pos"), "left_semi")
+      val hit = keyed.join(dvPairs(spark, dvSet.map(_._1)), Seq("__fp", "__pos"), "left_semi")
       val fresh =
         if (cancel.isEmpty) hit
-        else hit.join(
-          spark.read.parquet(cancel: _*)
-            .select(col("path").as("__fp"), col("pos").as("__pos")),
-          Seq("__fp", "__pos"), "left_anti")
+        else hit.join(dvPairs(spark, cancel), Seq("__fp", "__pos"), "left_anti")
       Some((logical, phys) match {
         case (Some(sch), Some(p)) => relabel(fresh, sch, p)
         case _ => fresh.select(cols.map(col): _*)
@@ -2417,13 +2454,13 @@ object ManifestTable {
         // exceptAll cancels them, leaving the true row-level delta
         lazy val ins = n.exceptAll(o)
         lazy val del = o.exceptAll(n)
-        snapshotMeta(table, v).get("mergeKey").map { k0 =>
+        meta.get("mergeKey").map { k0 =>
           // the key was recorded in the MERGE version's logical name; a
           // later rename moves the logical label, but positions are
           // id-stable across a compatible range (prefix rule), so the
           // key resolves positionally into the range-final schema
           (for {
-            vSig <- snapshotMeta(table, v).get("schema")
+            vSig <- meta.get("schema")
             fSig <- sig
             idx = ManifestStreamSource.splitTopLevel(vSig)
               .indexWhere(fieldName(_) == k0)
@@ -2445,7 +2482,7 @@ object ManifestTable {
             //
             // One fused plan instead of exceptAll×2 + intersect + four
             // semi/anti joins (guide §2.4 — the historic shape paid
-            // 6-8 exchanges where two suffice). Spark itself rewrites
+            // 6-8 exchanges where one suffices). Spark itself rewrites
             // EXCEPT ALL to union(+1/−1) → sum per row-value → filter
             // → replicate; both exceptAlls share the same union, so ONE
             // aggregate computes the signed multiset delta (__diff > 0 ⇔
@@ -2467,8 +2504,13 @@ object ManifestTable {
             require(reserved.isEmpty,
               s"change-feed derivation reserves working column names " +
                 s"${reserved.mkString(", ")}; rename the table column(s)")
+            // partitioned on the key ONCE: that placement satisfies both
+            // the row-value aggregate (the key is one of its grouping
+            // columns) and the per-key window, so the two share one
+            // exchange instead of paying one each
             val signedRows = n.withColumn("__side", lit(1L))
               .unionAll(o.withColumn("__side", lit(-1L)))
+              .repartition(col(k))
             val delta = signedRows.groupBy(cols.map(col): _*)
               .agg(sum(col("__side")).as("__diff"))
               .filter(col("__diff") =!= 0L)

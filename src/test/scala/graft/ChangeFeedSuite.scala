@@ -293,6 +293,53 @@ class ChangeFeedSuite extends SparkSuite {
       s"the crashed version must replay, earlier ones must not: $calls")
   }
 
+  test("availableNow delivers in version order across derivation waves; failures surface at their version") {
+    // the drain derives `defaultParallelism` versions per wave; delivery
+    // must stay one in-order batch per version, checkpointed after each
+    val width = spark.sparkContext.defaultParallelism
+    val n = 2 * width + 2 // a backlog longer than two waves
+    val t = freshTable()
+    for (i <- 0 until n) ManifestTable.append(spark, t, rows(i * 10L, i * 10L + 10).coalesce(1))
+    val heldBefore = spark.sparkContext.getPersistentRDDs.keySet
+    def batch(ch: DataFrame, a: Long, b: Long) = (a, b, ch.agg(min("id")).as[Long].head())
+    def expected(vs: Seq[Long]) = vs.map(v => (v - 1, v, v * 10))
+    // a consumer crash in the SECOND wave checkpoints the version before it
+    val crashAt = width + 1L
+    val cp = Files.createTempDirectory("graft-cdf-wave").toString
+    var calls = Vector.empty[(Long, Long, Long)]
+    intercept[RuntimeException] {
+      ChangeFeed.availableNow(spark, t, cp) { (ch, a, b) =>
+        if (b == crashAt) throw new RuntimeException("consumer crash")
+        calls :+= batch(ch, a, b)
+      }
+    }
+    assert(ChangeFeed.lastProcessed(cp) == crashAt - 1)
+    assert(calls == expected(0L until crashAt), calls.toString)
+    // the re-drain replays from the crashed version, in order
+    assert(ChangeFeed.availableNow(spark, t, cp) { (ch, a, b) => calls :+= batch(ch, a, b) }
+      .contains((crashAt - 1, n - 1L)))
+    assert(calls == expected(0L until n), calls.toString)
+    assert(ChangeFeed.lastProcessed(cp) == n - 1L)
+    // a version whose derivation fails (its added data file is gone):
+    // every earlier version is processed and checkpointed first, then
+    // the error surfaces at that version — later ones are not delivered
+    val failAt = width + 2L
+    val lost = ManifestTable.snapshotFiles(t, failAt)
+      .filterNot(ManifestTable.snapshotFiles(t, failAt - 1).toSet)
+    assert(lost.size == 1, "fixture: one added file per append")
+    Files.delete(java.nio.file.Paths.get(lost.head))
+    val cp2 = Files.createTempDirectory("graft-cdf-wave2").toString
+    var seen = Vector.empty[(Long, Long, Long)]
+    intercept[Exception] {
+      ChangeFeed.availableNow(spark, t, cp2) { (ch, a, b) => seen :+= batch(ch, a, b) }
+    }
+    assert(seen == expected(0L until failAt), seen.toString)
+    assert(ChangeFeed.lastProcessed(cp2) == failAt - 1)
+    // each batch is released once its call returns, on every path
+    assert(spark.sparkContext.getPersistentRDDs.keySet == heldBefore,
+      "a drain must not leave materialized batches behind")
+  }
+
   test("availableNow skips change-free compact commits but still advances the checkpoint") {
     val t = freshTable()
     val cp = Files.createTempDirectory("graft-cdf-cpc").toString

@@ -1166,14 +1166,52 @@ class ManifestTableSuite extends SparkSuite {
       "readPartition" -> (() => ManifestTable.readPartition(spark, t, "p0").count()),
       "partitionFileCount" -> (() => ManifestTable.partitionFileCount(t, "p0")),
       "statsAggregate" -> (() => ManifestTable.statsAggregate(spark, t, Seq("id")).collect()),
-      "deleteWhere" -> (() => ManifestTable.deleteWhere(spark, t, "id", 0L, 5L)))
+      "deleteWhere" -> (() => ManifestTable.deleteWhere(spark, t, "id", 0L, 5L)),
+      // writers: the base snapshot's features gate every commit too
+      "append" -> (() => ManifestTable.append(spark, t,
+        range(200, 210).withColumnRenamed("v", "w").coalesce(1))),
+      "renameColumn" -> (() => ManifestTable.renameColumn(t, "w", "x")),
+      "clusterBy" -> (() => ManifestTable.clusterBy(spark, t, "id", "w", files = 2)))
     for ((name, call) <- gated) {
       val e = intercept[IllegalStateException](call())
       assert(e.getMessage.contains("timetravel2"), s"$name must fail fast, got: ${e.getMessage}")
     }
-    assert(ManifestTable.latestVersion(t).contains(futureV), "the gated delete committed nothing")
+    assert(ManifestTable.latestVersion(t).contains(futureV),
+      "the gated delete and writers committed nothing")
     // time travel to the pre-feature version still works
     assert(ManifestTable.read(spark, t, Some(head)).count() == 107)
+  }
+
+  test("building read, readChanges and statsAggregate over deletion vectors runs no Spark job") {
+    // DV sidecars and the DV staging scan read under explicit schemas:
+    // an inferred read runs one Spark job per DataFrame built
+    val t = freshTable()
+    ManifestTable.append(spark, t, range(0, 100).coalesce(1))
+    val vd = ManifestTable.deleteWhere(spark, t, "id", 10, 12)
+    // a second DV on the same file: its changelog reads the older DV as
+    // the cancelling side
+    val vd2 = ManifestTable.deleteWhere(spark, t, "id", 20, 22)
+    assert(ManifestTable.snapshotDvs(t, vd2).size == 2, "precondition: two DVs")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.graft.TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    val (snap, changes, agg) =
+      try {
+        val built = (ManifestTable.read(spark, t), ManifestTable.readChanges(spark, t, vd - 1, vd2),
+          ManifestTable.statsAggregate(spark, t, Seq("id")))
+        org.apache.spark.graft.TestBus.drain(spark.sparkContext)
+        built
+      } finally spark.sparkContext.removeSparkListener(l)
+    assert(jobs.get == 0, s"building the DataFrames ran ${jobs.get} Spark job(s)")
+    assert(snap.count() == 94)
+    assert(changes.select("id", "_change_type").as[(Long, String)].collect().sorted.toSeq ==
+      Seq(10L, 11L, 12L, 20L, 21L, 22L).map(_ -> "delete"))
+    assert(agg.head().getLong(0) == 94)
   }
 
   test("partitioned manifest: value-pure files, pruned planning, exact overwrite, conservative unmarked") {
