@@ -401,8 +401,8 @@ object Dedup {
     * server embedding the library). */
   def clearCaches(): Unit =
     Seq(arraysCache, interCache).foreach(_.clear { df =>
-      // localCheckpoint data lives in block storage until unpersisted
-      try df.unpersist(blocking = false) catch { case _: Throwable => () }
+      try graft.sources.ChangeFeed.release(df)
+      catch { case scala.util.control.NonFatal(_) => () }
     })
 
   /** [[interCounts]] over any pre-materialized shingle-array table. */

@@ -220,8 +220,11 @@ object ChangeFeed {
     out.asScala
   }
 
-  /** Drop a materialized batch's blocks. */
-  private def release(batch: DataFrame): Unit =
+  /** Drop a `localCheckpoint`ed DataFrame's blocks (a materialized batch,
+    * a checkpointed cache entry). They belong to the RDD under its
+    * `LogicalRDD`: `DataFrame.unpersist` only reaches the CacheManager,
+    * which never held them. */
+  private[graft] def release(batch: DataFrame): Unit =
     batch.queryExecution.logical.foreach {
       case r: LogicalRDD => r.rdd.unpersist(blocking = false)
       case _ => ()

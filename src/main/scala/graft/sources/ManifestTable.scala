@@ -218,7 +218,7 @@ object ManifestTable {
   /** The latest snapshot's logical→physical column mapping, if the
     * table is in column-mapping mode. */
   def currentColMap(table: String): Option[Seq[(Long, String)]] =
-    latestVersion(table).flatMap(v => parseColMap(snapshotMeta(table, v)))
+    parseColMap(headMeta(table))
 
   /** Physical column names aligned with the snapshot's schema fields
     * (None when the table stores logical names directly). */
@@ -340,6 +340,25 @@ object ManifestTable {
         }
       }.toMap
   }
+
+  /** The latest snapshot's metadata (empty before the first commit). */
+  private def headMeta(table: String): Map[String, String] =
+    latestVersion(table).fold(Map.empty[String, String])(snapshotMeta(table, _))
+
+  /** One committed snapshot as a read plans on it and a commit builds on
+    * it: its version (-1 before the first commit), its metadata and its
+    * entries, split into data files and deletion-vector lines. */
+  private final case class Base(version: Long, meta: Map[String, String],
+      entries: Seq[String]) {
+    val (dvLines, files) = entries.partition(_.startsWith(DvPrefix))
+    def dvInfo: Seq[(String, Seq[String])] = dvLines.map(parseDvLine)
+    def dvs: Seq[String] = dvInfo.map(_._1)
+  }
+
+  private val NoBase = Base(-1L, Map.empty, Nil)
+
+  private def snapshot(table: String, version: Long): Base =
+    Base(version, snapshotMeta(table, version), snapshotEntries(table, version))
 
   /** Read a snapshot (latest by default; pass a version for time
     * travel), MERGE-ON-READ: any deletion-vector sidecars in the
@@ -850,35 +869,36 @@ object ManifestTable {
     case _ => true
   }
 
-  /** A scan of one committed snapshot: every data file and DV line, the
-    * KEPT files (each with its parsed stats) and the exact filter the
-    * read re-applies (None: the whole snapshot). */
-  private final case class ScanPlan(version: Long, meta: Map[String, String],
-      files: Seq[String], dvLines: Seq[String],
-      kept: Seq[(String, FileStats)], filter: Option[Column]) {
-    def dvs: Seq[String] = dvLines.map(parseDvLine(_)._1)
-  }
+  /** A scan of one committed snapshot: the snapshot, its KEPT files
+    * (each with its parsed stats) and the exact filter the read
+    * re-applies (None: the whole snapshot). */
+  private final case class ScanPlan(base: Base, kept: Seq[(String, FileStats)],
+      filter: Option[Column])
 
   /** Plan a read of `version` (latest by default) — the one planning
-    * step behind [[read]], the pruned reads, their file counts,
-    * [[statsAggregate]] and [[deleteWhere]]'s classifier. The manifest
-    * is read once, the reader features are checked, and each `.stats`
-    * sidecar is parsed once. A file is kept when its stats overlap every
-    * range (no stats for a column: kept — pruning is a performance
-    * property, the exact filter keeps the result correct) and, for a
-    * `partition` read, when it carries that value's marker or no marker
-    * at all (a cross-partition rewrite output) — a manifest string
-    * match, no sidecar opened. */
+    * step behind [[read]], the pruned reads, their file counts and
+    * [[statsAggregate]]; [[merge]] and [[deleteWhere]] plan on their
+    * commit attempt's [[Base]] through [[planOn]]. The manifest is read
+    * once, the reader features are checked, and each `.stats` sidecar is
+    * parsed once. A file is kept when its stats overlap every range (no
+    * stats for a column: kept — pruning is a performance property, the
+    * exact filter keeps the result correct) and, for a `partition` read,
+    * when it carries that value's marker or no marker at all (a
+    * cross-partition rewrite output) — a manifest string match, no
+    * sidecar opened. */
   private def plan(table: String, version: Option[Long], ranges: Seq[ColRange],
-      partition: Option[String] = None): ScanPlan = {
-    val v = version.orElse(latestVersion(table)).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    val meta = snapshotMeta(table, v)
-    requireSupported(table, v, meta)
-    val (dvLines, files) = snapshotEntries(table, v).partition(_.startsWith(DvPrefix))
+      partition: Option[String] = None): ScanPlan =
+    planOn(table, snapshot(table, version.orElse(latestVersion(table)).getOrElse(
+      throw new IllegalStateException(s"no committed snapshot in $table"))),
+      ranges, partition)
+
+  private def planOn(table: String, base: Base, ranges: Seq[ColRange],
+      partition: Option[String]): ScanPlan = {
+    val meta = base.meta
+    requireSupported(table, base.version, meta)
     // sidecar stats are physically named; the caller's columns are logical
     val bounds = ranges.map(r => physName(meta, r.col) -> r.bound)
-    val kept = files
+    val kept = base.files
       .filter(f => partition.forall(p => partitionValueOf(f).forall(_ == p)))
       .map(f => f -> (if (bounds.isEmpty) NoStats else fileStats(f)))
       .filter { case (_, st) =>
@@ -886,7 +906,7 @@ object ManifestTable {
       }
     val onPartition = partition.map(p => col(meta.getOrElse("partcol",
       throw new IllegalStateException(s"$table records no partition column"))) === p)
-    ScanPlan(v, meta, files, dvLines, kept,
+    ScanPlan(base, kept,
       (onPartition ++ ranges.map(r => r.exact(col(r.col)))).reduceOption(_ && _))
   }
 
@@ -896,11 +916,11 @@ object ManifestTable {
     * snapshot (a schema-less legacy snapshot takes the schema from its
     * files, reading no row). */
   private def scan(spark: SparkSession, p: ScanPlan): DataFrame = {
-    val (sig, phys) = (p.meta.get("schema"), physNamesOf(p.meta))
+    val (sig, phys) = (p.base.meta.get("schema"), physNamesOf(p.base.meta))
     if (p.kept.isEmpty)
-      readFiles(spark, if (sig.isEmpty) p.files else Nil, Nil, sig, phys).limit(0)
+      readFiles(spark, if (sig.isEmpty) p.base.files else Nil, Nil, sig, phys).limit(0)
     else {
-      val df = readFiles(spark, p.kept.map(_._1), p.dvs, sig, phys)
+      val df = readFiles(spark, p.kept.map(_._1), p.base.dvs, sig, phys)
       p.filter.fold(df)(df.filter)
     }
   }
@@ -924,11 +944,47 @@ object ManifestTable {
       more: ColRange*)(implicit l: RangeLit[T]): Int =
     plan(table, None, ColRange(col, lo, hi) +: more).kept.size
 
-  /** Publish `files` as version `v` — the CAS. True iff this committer
-    * won the version. */
-  private def publish(table: String, v: Long, files: Seq[String],
-      meta: Map[String, String] = Map.empty,
-      prevEntries: Option[Seq[String]] = None): Boolean = {
+  /** Retries of the optimistic commit loop before a writer gives up. */
+  private val CommitRetries = 20
+
+  /** THE OPTIMISTIC COMMIT LOOP behind every writer but [[cloneTable]]
+    * (the Delta commit loop). Each attempt reads the head once — one
+    * [[Base]] — checks its reader features (a commit on a snapshot this
+    * implementation cannot read would carry an unknown feature forward,
+    * and a rewrite would restage rows it may have misread) and hands it
+    * to the writer's `attempt`, which returns the entries and meta to
+    * publish at base + 1, or None when there is nothing to commit (the
+    * loop then returns the base version). A lost CAS re-reads the new
+    * head and runs the attempt again: a payload staged once before the
+    * loop (the snapshot-independent writes) republishes on the winner's
+    * entries, a snapshot-dependent one is recomputed inside the
+    * attempt. `creates`: the write may create the table at version 0;
+    * every other writer needs a committed snapshot. */
+  private def commit(table: String, creates: Boolean = false)(
+      attempt: Base => Option[(Seq[String], Map[String, String])]): Long = {
+    var tries = 0
+    while (tries < CommitRetries) {
+      val base = latestVersion(table) match {
+        case Some(v) => snapshot(table, v)
+        case None if creates => NoBase
+        case None => throw new IllegalStateException(s"no committed snapshot in $table")
+      }
+      requireSupported(table, base.version, base.meta)
+      attempt(base) match {
+        case None => return base.version
+        case Some((entries, meta)) =>
+          if (publish(table, base, entries, meta)) return base.version + 1
+      }
+      tries += 1
+    }
+    throw new IllegalStateException(s"lost the commit race $CommitRetries times on $table")
+  }
+
+  /** Publish `files` as version `base.version + 1` — the CAS. True iff
+    * this committer won the version. */
+  private def publish(table: String, base: Base, files: Seq[String],
+      meta: Map[String, String]): Boolean = {
+    val v = base.version + 1
     val md = manifestDir(table)
     Files.createDirectories(md)
     val tmp = md.resolve(s".tmp-${UUID.randomUUID()}")
@@ -950,20 +1006,8 @@ object ManifestTable {
     // physically-named files under logical names). Monotone because a
     // feature's artifacts may persist in RETAINED older versions even
     // after the live snapshot stops using it.
-    // The BASE snapshot's features gate the writer too: a commit on a
-    // snapshot this implementation cannot read would carry an unknown
-    // feature forward (and a rewrite would restage rows it may have
-    // misread), so every committing call fails fast here.
-    val prevFeatures: Set[String] =
-      if (v == 0) Set.empty
-      else {
-        val prevMeta =
-          try snapshotMeta(table, v - 1)
-          catch { case scala.util.control.NonFatal(_) => Map.empty[String, String] }
-        requireSupported(table, v - 1, prevMeta)
-        prevMeta.get("features").map(_.split(",").toSet.filter(_.nonEmpty))
-          .getOrElse(Set.empty)
-      }
+    val prevFeatures: Set[String] = base.meta.get("features")
+      .map(_.split(",").toSet.filter(_.nonEmpty)).getOrElse(Set.empty)
     val usedNow =
       (if (stamped0.contains("colmap")) Set("colmap") else Set.empty) ++
         (if (files.exists(_.startsWith(DvPrefix))) Set("dv") else Set.empty) ++
@@ -973,18 +1017,14 @@ object ManifestTable {
       if (allFeatures.isEmpty) stamped0
       else stamped0 + ("features" -> allFeatures.toSeq.sorted.mkString(","))
     // delta manifests (every version after 0): entries as +add/-remove
-    // lines against v−1 — the commit writes O(changed files), never the
-    // snapshot. Version 0 is a full list (no base to diff against).
-    // Snapshot-extending callers pass the v−1 entries they already
-    // reconstructed for the commit itself (`prevEntries`) so the diff
-    // never re-walks the delta chain a second time per attempt.
+    // lines against the base — the commit writes O(changed files), never
+    // the snapshot. Version 0 is a full list (no base to diff against).
     val body: Seq[String] =
       if (v == 0) files
       else {
-        val prev = prevEntries.getOrElse(snapshotEntries(table, v - 1))
-        val prevSet = prev.toSet
+        val prevSet = base.entries.toSet
         val curSet = files.toSet
-        prev.filterNot(curSet).map("-" + _) ++
+        base.entries.filterNot(curSet).map("-" + _) ++
           files.filterNot(prevSet).map("+" + _)
       }
     val header = (stamped ++ (if (v == 0) Map.empty[String, String]
@@ -1028,15 +1068,21 @@ object ManifestTable {
   /** The schema the table currently enforces, if any commit recorded one
     * (manifests from before schema tracking have none — enforcement
     * starts with the first tracked commit). */
-  def currentSchema(table: String): Option[String] =
-    latestVersion(table).flatMap(v => snapshotMeta(table, v).get("schema"))
+  def currentSchema(table: String): Option[String] = headMeta(table).get("schema")
+
+  /** The base's recorded signature, or — for a legacy snapshot that
+    * records none — the signature its files read with. */
+  private def baseSig(spark: SparkSession, table: String, base: Base): String =
+    base.meta.getOrElse("schema", schemaSig(read(spark, table, Some(base.version))))
 
   /** SCHEMA ENFORCEMENT (the Delta write contract): a snapshot-extending
-    * commit must bring exactly the table's recorded schema — silent
-    * drift is the lake failure mode mergeSchema reads paper over.
-    * Evolution is an explicit [[overwrite]]. */
-  private def enforceSchema(table: String, df: DataFrame): Unit =
-    currentSchema(table).foreach { have =>
+    * commit must bring exactly the table's recorded schema (`head`: the
+    * latest snapshot's meta) — silent drift is the lake failure mode
+    * mergeSchema reads paper over. Evolution is an explicit
+    * [[overwrite]]. */
+  private def enforceSchema(table: String, head: Map[String, String],
+      df: DataFrame): Unit =
+    head.get("schema").foreach { have =>
       val bring = schemaSig(df)
       require(have == bring,
         s"schema mismatch on $table: table enforces [$have], write brings " +
@@ -1118,16 +1164,13 @@ object ManifestTable {
   }
 
   def clusterBy(spark: SparkSession, table: String, lc1: String, lc2: String,
-      files: Int = 32, maxRetries: Int = 20): Long = {
+      files: Int = 32): Long = {
     import org.apache.spark.sql.functions.{col, lit, shiftright, greatest, least}
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = latestVersion(table).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot in $table"))
-      val baseMeta = snapshotMeta(table, base)
+    commit(table) { base =>
+      val baseMeta = base.meta
       // stats, scan, and restaged files are all PHYSICAL (see compact)
       val (c1, c2) = (physName(baseMeta, lc1), physName(baseMeta, lc2))
-      val fs = snapshotFiles(table, base)
+      val fs = base.files
       // an AXIS is (long lo, long hi, long-valued Column): LONG ranges
       // map directly; a column whose stats are uniformly STRING ranges
       // maps through the order-preserving fingerprint (committed
@@ -1151,8 +1194,8 @@ object ManifestTable {
       }
       val (lo1, hi1, e1, s1) = axis(c1)
       val (lo2, hi2, e2, s2) = axis(c2)
-      val cur = scanPhysical(spark, snapshotFiles(table, base),
-        snapshotDvs(table, base), baseMeta.get("schema"), physNamesOf(baseMeta))
+      val cur = scanPhysical(spark, fs, base.dvs, baseMeta.get("schema"),
+        physNamesOf(baseMeta))
       def cell(e: org.apache.spark.sql.Column, lo: Long, hi: Long,
           isStr: Boolean) = {
         val span = math.max(hi - lo, 1L)
@@ -1174,14 +1217,11 @@ object ManifestTable {
           shiftright(b2, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i + 1))
       }.reduce(_ + _)
       val ordered = cur.repartitionByRange(files, z).sortWithinPartitions(z)
-      val staged = stage(ordered, table)
-      if (publish(table, base + 1, staged,
-          Map("op" -> "cluster",
-            "schema" -> baseMeta.getOrElse("schema", schemaSig(cur))) ++
-            mapMeta(baseMeta))) return base + 1
-      attempt += 1
+      Some((stage(ordered, table),
+        Map("op" -> "cluster",
+          "schema" -> baseMeta.getOrElse("schema", schemaSig(cur))) ++
+          mapMeta(baseMeta)))
     }
-    throw new IllegalStateException(s"lost the commit race $maxRetries times on $table")
   }
 
   /** METADATA-ONLY AGGREGATE — the lakehouse "answer it from the log"
@@ -1209,9 +1249,8 @@ object ManifestTable {
       cols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{col => c, lit, count, min, max,
       least, greatest, regexp_replace}
-    val p = plan(table, None, Nil)
-    val (meta, files) = (p.meta, p.files)
-    val dvInfo = p.dvLines.map(parseDvLine)
+    val b = plan(table, None, Nil).base
+    val (meta, files, dvInfo) = (b.meta, b.files, b.dvInfo)
     val dvs = dvInfo.map(_._1)
     // a legacy DV line with no recorded targets could tombstone ANY
     // file — poison them all (same conservatism compact() applies)
@@ -1328,8 +1367,8 @@ object ManifestTable {
     tomb.crossJoin(pAgg).select(outCols: _*)
   }
 
-  /** Reconcile a committer's schema signature against the table's
-    * CURRENT signature inside the commit loop — validating once before
+  /** Reconcile a committer's schema signature against its commit
+    * attempt's BASE signature (`current`) — validating once before
     * the loop is not enough, because losing the CAS to a concurrent
     * [[appendEvolve]] means the schema moved underneath us: republishing
     * the pre-evolution signature would make readers (who scan with the
@@ -1347,9 +1386,9 @@ object ManifestTable {
     *    true write conflict — no ordering of the two column sets is
     *    positionally consistent, so fail loudly instead of dropping a
     *    column, exactly like Delta's metadata-changed conflict. */
-  private[graft] def reconcileSig(table: String, bring: String,
+  private[graft] def reconcileSig(table: String, current: Option[String], bring: String,
       allowExtend: Boolean): String =
-    currentSchema(table) match {
+    current match {
       case None => bring
       case Some(have) if have == bring => bring
       case Some(have) =>
@@ -1363,15 +1402,13 @@ object ManifestTable {
             "write against the new schema")
     }
 
-  /** The logical→physical staging map for a snapshot-extending write
-    * (None outside mapping mode). Physical names never change, so a map
-    * fetched before the commit loop stays valid across CAS retries; a
-    * concurrent rename only moves LOGICAL names, which the loop's
-    * signature reconciliation flags as a conflict. */
-  private def stageMap(table: String): Option[Seq[(String, String)]] =
+  /** The logical→physical staging map for a write on a snapshot with
+    * `meta` (None outside mapping mode). Physical names never change, so
+    * a map fetched before the commit loop stays valid across CAS
+    * retries; a concurrent rename only moves LOGICAL names, which the
+    * loop's signature reconciliation flags as a conflict. */
+  private def stageMap(meta: Map[String, String]): Option[Seq[(String, String)]] =
     for {
-      v <- latestVersion(table)
-      meta = snapshotMeta(table, v)
       sig <- meta.get("schema")
       phys <- physNamesOf(meta)
     } yield ManifestStreamSource.splitTopLevel(sig).map(fieldName).zip(phys)
@@ -1386,16 +1423,12 @@ object ManifestTable {
     * feed rides across a rename (ids/physical/types are unchanged —
     * [[sigPrefixCompatible]]); time travel before it reads the old
     * logical names, after it the new. */
-  def renameColumn(table: String, from: String, to: String,
-      maxRetries: Int = 20): Long = {
+  def renameColumn(table: String, from: String, to: String): Long = {
     require(to.nonEmpty && !to.contains(":") && !to.contains(",") &&
       !to.contains("|") && !to.startsWith("~"),
       s"'$to' is not a signature-safe column name")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = latestVersion(table).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot in $table"))
-      val meta = snapshotMeta(table, base)
+    commit(table) { base =>
+      val meta = base.meta
       val sig = meta.getOrElse("schema", throw new IllegalStateException(
         s"renameColumn requires a schema-tracked table: $table"))
       val fields = ManifestStreamSource.splitTopLevel(sig)
@@ -1406,15 +1439,11 @@ object ManifestTable {
       val maxId = meta.get("maxcolid").map(_.toLong).getOrElse(cm.map(_._1).max)
       val newSig = fields.map(f =>
         if (fieldName(f) == from) s"$to:${fieldType(f)}" else f).mkString(",")
-      val entries = snapshotEntries(table, base)
-      if (publish(table, base + 1, entries,
-          Map("op" -> "rename", "schema" -> newSig,
-            "colmap" -> colMapLine(cm), "maxcolid" -> maxId.toString) ++
-            meta.view.filterKeys(_ == "lastBatchId").toMap,
-          prevEntries = Some(entries))) return base + 1
-      attempt += 1
+      Some((base.entries,
+        Map("op" -> "rename", "schema" -> newSig,
+          "colmap" -> colMapLine(cm), "maxcolid" -> maxId.toString) ++
+          meta.view.filterKeys(_ == "lastBatchId").toMap))
     }
-    throw new IllegalStateException(s"lost the commit race $maxRetries times on $table")
   }
 
   /** DROP COLUMN — a metadata-only commit: the field leaves the logical
@@ -1424,12 +1453,9 @@ object ManifestTable {
     * id-qualified physical names — see the colmap scaladoc). The change
     * feed does NOT ride across a drop (the id prefix breaks): it is an
     * epoch boundary, same as any narrowing evolution. */
-  def dropColumn(table: String, name: String, maxRetries: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = latestVersion(table).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot in $table"))
-      val meta = snapshotMeta(table, base)
+  def dropColumn(table: String, name: String): Long =
+    commit(table) { base =>
+      val meta = base.meta
       val sig = meta.getOrElse("schema", throw new IllegalStateException(
         s"dropColumn requires a schema-tracked table: $table"))
       val fields = ManifestStreamSource.splitTopLevel(sig)
@@ -1439,17 +1465,12 @@ object ManifestTable {
       val cm = parseColMap(meta).getOrElse(synthColMap(fields))
       val maxId = meta.get("maxcolid").map(_.toLong).getOrElse(cm.map(_._1).max)
       val newSig = fields.patch(idx, Nil, 1).mkString(",")
-      val entries = snapshotEntries(table, base)
-      if (publish(table, base + 1, entries,
-          Map("op" -> "drop-column", "schema" -> newSig,
-            "colmap" -> colMapLine(cm.patch(idx, Nil, 1)),
-            "maxcolid" -> maxId.toString) ++
-            meta.view.filterKeys(_ == "lastBatchId").toMap,
-          prevEntries = Some(entries))) return base + 1
-      attempt += 1
+      Some((base.entries,
+        Map("op" -> "drop-column", "schema" -> newSig,
+          "colmap" -> colMapLine(cm.patch(idx, Nil, 1)),
+          "maxcolid" -> maxId.toString) ++
+          meta.view.filterKeys(_ == "lastBatchId").toMap))
     }
-    throw new IllegalStateException(s"lost the commit race $maxRetries times on $table")
-  }
 
   /** SHALLOW CLONE (the production formats' CLONE ... SHALLOW): create
     * `target` as a brand-new table whose v0 manifest references the
@@ -1469,7 +1490,7 @@ object ManifestTable {
     require(latestVersion(target).isEmpty, s"clone target $target already exists")
     val carried = snapshotMeta(source, v).view
       .filterKeys(k => k == "schema" || k == "colmap" || k == "maxcolid").toMap
-    if (!publish(target, 0L, snapshotEntries(source, v),
+    if (!publish(target, NoBase, snapshotEntries(source, v),
         Map("op" -> "clone", "cloneOf" -> s"$source@$v") ++ carried))
       throw new IllegalStateException(s"clone target $target already exists")
     0L
@@ -1498,14 +1519,9 @@ object ManifestTable {
     * compact/cluster. Returns the base version when nothing
     * qualifies. */
   def compactSmall(spark: SparkSession, table: String, minRows: Long,
-      files: Int = 1, maxRetries: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = latestVersion(table).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot in $table"))
-      val baseMeta = snapshotMeta(table, base)
-      val fs = snapshotFiles(table, base)
-      val dvInfo = snapshotDvInfo(table, base)
+      files: Int = 1): Long =
+    commit(table) { base =>
+      val (baseMeta, fs, dvInfo) = (base.meta, base.files, base.dvInfo)
       val dvTargets =
         (dvInfo.filter(_._2.nonEmpty).flatMap(_._2) ++
           (if (dvInfo.exists(_._2.isEmpty)) fs else Seq.empty)).toSet
@@ -1517,9 +1533,7 @@ object ManifestTable {
       val marked = marked0.groupBy(f => partitionValueOf(f).get)
         .filter(_._2.size >= 2).values.flatten.toSeq
       val packUnmarked = if (unmarked.size >= 2) unmarked else Seq.empty
-      if (marked.isEmpty && packUnmarked.isEmpty) return base
       val toPack = marked ++ packUnmarked
-      val dvLines = snapshotEntries(table, base).filter(_.startsWith(DvPrefix))
       val sig = baseMeta.get("schema")
       val phys = physNamesOf(baseMeta)
       val stagedMarked =
@@ -1531,16 +1545,11 @@ object ManifestTable {
         if (packUnmarked.isEmpty) Seq.empty
         else stage(scanPhysical(spark, packUnmarked, Seq.empty, sig, phys)
           .coalesce(files), table)
-      if (publish(table, base + 1,
-          fs.filterNot(toPack.toSet) ++ stagedMarked ++ stagedPlain ++ dvLines,
-          Map("op" -> "compact-small",
-            "schema" -> baseMeta.getOrElse("schema",
-              schemaSig(read(spark, table, Some(base))))) ++
-            mapMeta(baseMeta), prevEntries = Some(fs ++ dvLines))) return base + 1
-      attempt += 1
+      Option.when(toPack.nonEmpty)((
+        fs.filterNot(toPack.toSet) ++ stagedMarked ++ stagedPlain ++ base.dvLines,
+        Map("op" -> "compact-small", "schema" -> baseSig(spark, table, base)) ++
+          mapMeta(baseMeta)))
     }
-    throw new IllegalStateException(s"lost the commit race $maxRetries times on $table")
-  }
 
   /** Commit history: (version, operation) for every still-readable
     * manifest, oldest first — the DESCRIBE HISTORY primitive (operations
@@ -1559,30 +1568,22 @@ object ManifestTable {
     * on losing the CAS, re-read the NEW latest file list and retry so
     * the loser's rows land on top of the winner's (never instead of).
     * Enforces the recorded schema. Returns the committed version. */
-  def append(spark: SparkSession, table: String, df: DataFrame,
-      maxRetries: Int = 20): Long = {
-    enforceSchema(table, df)
-    val staged = stage(df, table, stageMap(table))
+  def append(spark: SparkSession, table: String, df: DataFrame): Long = {
+    val head = headMeta(table)
+    enforceSchema(table, head, df)
+    val staged = stage(df, table, stageMap(head))
     val bring = schemaSig(df)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = latestVersion(table)
-      // carry ENTRIES (data + deletion-vector lines), not just data
-      // files: an append that dropped a DV line would resurrect rows
-      val prev = base.map(snapshotEntries(table, _)).getOrElse(Seq.empty)
-      val v = base.getOrElse(-1L) + 1
-      // re-reconcile against the FRESH base every attempt: a lost CAS
-      // may mean a concurrent appendEvolve widened the schema; the
-      // colmap/maxcolid carry is re-read fresh for the same reason
-      if (publish(table, v, prev ++ staged,
-          Map("op" -> "append",
-            "schema" -> reconcileSig(table, bring, allowExtend = false)) ++
-            base.map(b => mapMeta(snapshotMeta(table, b))).getOrElse(Map.empty),
-          prevEntries = Some(prev)))
-        return v
-      attempt += 1
+    // carry ENTRIES (data + deletion-vector lines), not just data files:
+    // an append that dropped a DV line would resurrect rows. Reconcile
+    // against the FRESH base every attempt: a lost CAS may mean a
+    // concurrent appendEvolve widened the schema; the colmap/maxcolid
+    // carry comes from the fresh base for the same reason
+    commit(table, creates = true) { base =>
+      Some((base.entries ++ staged,
+        Map("op" -> "append",
+          "schema" -> reconcileSig(table, base.meta.get("schema"), bring,
+            allowExtend = false)) ++ mapMeta(base.meta)))
     }
-    throw new IllegalStateException(s"lost the commit race $maxRetries times on $table")
   }
 
   /** ADD-COLUMN SCHEMA EVOLUTION on append — the production formats'
@@ -1596,10 +1597,10 @@ object ManifestTable {
     * Note for change-feed consumers: evolution starts a new schema
     * epoch — [[readChanges]] ranges may not cross it (documented
     * there); restart the feed on the new schema. */
-  def appendEvolve(spark: SparkSession, table: String, df: DataFrame,
-      maxRetries: Int = 20): Long = {
+  def appendEvolve(spark: SparkSession, table: String, df: DataFrame): Long = {
     val bring = schemaSig(df)
-    currentSchema(table).foreach { have =>
+    val baseMeta = headMeta(table)
+    baseMeta.get("schema").foreach { have =>
       val hf = ManifestStreamSource.splitTopLevel(have)
       val bf = ManifestStreamSource.splitTopLevel(bring)
       require(bf.size > hf.size && bf.take(hf.size) == hf,
@@ -1608,7 +1609,6 @@ object ManifestTable {
     // under column mapping the NEW trailing columns get fresh ids and
     // id-qualified physical names (c<id>_<name>) — unique forever, so a
     // re-added name can never alias a dropped column's stored bytes
-    val baseMeta = latestVersion(table).map(snapshotMeta(table, _)).getOrElse(Map.empty)
     val baseCm = parseColMap(baseMeta)
     val (evolveMeta, toPhys) = baseCm match {
       case None => (Map.empty[String, String], None)
@@ -1626,32 +1626,25 @@ object ManifestTable {
           Some(bf.map(fieldName).zip(full.map(_._2))))
     }
     val staged = stage(df, table, toPhys)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = latestVersion(table)
-      val prev = base.map(snapshotEntries(table, _)).getOrElse(Seq.empty)
-      val v = base.getOrElse(-1L) + 1
+    commit(table, creates = true) { base =>
       // a lost CAS may mean another evolve landed first: publish the
       // wider of the two when one extends the other, conflict otherwise.
       // Under column mapping a concurrent schema-moving commit is a hard
       // conflict (the staged files' physical names were fixed against
       // the pre-loop colmap) — fail loudly rather than publish a colmap
       // that misdescribes the staged bytes.
-      val freshCm = base.map(b => snapshotMeta(table, b).get("colmap")).flatten
-      if (baseCm.map(colMapLine) != freshCm) throw new IllegalStateException(
+      if (baseCm.map(colMapLine) != base.meta.get("colmap")) throw new IllegalStateException(
         s"column mapping of $table moved during appendEvolve — retry the write")
-      if (publish(table, v, prev ++ staged,
-          // lastBatchId carries (fresh per attempt — a stale carry could
-          // mask a concurrently-committed higher batch id); colmap/
-          // maxcolid come from evolveMeta, computed for THIS evolution
-          base.map(b => snapshotMeta(table, b).view
-            .filterKeys(_ == "lastBatchId").toMap).getOrElse(Map.empty) ++
-            Map("op" -> "append-evolve",
-              "schema" -> reconcileSig(table, bring, allowExtend = true)) ++
-            evolveMeta, prevEntries = Some(prev))) return v
-      attempt += 1
+      Some((base.entries ++ staged,
+        // lastBatchId carries (fresh per attempt — a stale carry could
+        // mask a concurrently-committed higher batch id); colmap/
+        // maxcolid come from evolveMeta, computed for THIS evolution
+        base.meta.view.filterKeys(_ == "lastBatchId").toMap ++
+          Map("op" -> "append-evolve",
+            "schema" -> reconcileSig(table, base.meta.get("schema"), bring,
+              allowExtend = true)) ++
+          evolveMeta))
     }
-    throw new IllegalStateException(s"lost the commit race $maxRetries times on $table")
   }
 
   /** Replace the table contents with `df` (the snapshot still leaves
@@ -1665,23 +1658,15 @@ object ManifestTable {
     * never a torn mix). Snapshot-DEPENDENT writes must NOT route
     * through overwrite directly; `merge` recomputes from the fresh
     * snapshot on every CAS loss for exactly that reason. */
-  def overwrite(spark: SparkSession, table: String, df: DataFrame,
-      maxRetries: Int = 20): Long = {
+  def overwrite(spark: SparkSession, table: String, df: DataFrame): Long = {
     val staged = stage(df, table)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = latestVersion(table)
-      val v = base.getOrElse(-1L) + 1
-      // the sink high-water mark survives an overwrite (it guards batch
-      // REPLAY, which an overwrite of the data does not reset); colmap
-      // does NOT carry — the overwrite's own files store df's names
-      if (publish(table, v, staged,
-          base.map(b => snapshotMeta(table, b).view
-            .filterKeys(_ == "lastBatchId").toMap).getOrElse(Map.empty) ++
-            Map("op" -> "overwrite", "schema" -> schemaSig(df)))) return v
-      attempt += 1
+    // the sink high-water mark survives an overwrite (it guards batch
+    // REPLAY, which an overwrite of the data does not reset); colmap
+    // does NOT carry — the overwrite's own files store df's names
+    commit(table, creates = true) { base =>
+      Some((staged, base.meta.view.filterKeys(_ == "lastBatchId").toMap ++
+        Map("op" -> "overwrite", "schema" -> schemaSig(df))))
     }
-    throw new IllegalStateException(s"lost the commit race $maxRetries times on $table")
   }
 
   /** PARTITION COLUMNS on the manifest format (the Hive-partitioned
@@ -1781,8 +1766,7 @@ object ManifestTable {
 
   /** The table's recorded partition column, if it was ever written
     * through [[appendPartitioned]]. */
-  def partitionColumn(table: String): Option[String] =
-    latestVersion(table).flatMap(v => snapshotMeta(table, v).get("partcol"))
+  def partitionColumn(table: String): Option[String] = headMeta(table).get("partcol")
 
   /** Append `df` PARTITIONED by `pcol`: data files land value-pure with
     * their partition value in the file name, and the commit records the
@@ -1793,27 +1777,21 @@ object ManifestTable {
     * [[append]]; schema and partition column are enforced against the
     * table's recorded ones. */
   def appendPartitioned(spark: SparkSession, table: String, df: DataFrame,
-      pcol: String, maxRetries: Int = 20): Long = {
+      pcol: String): Long = {
     require(df.columns.contains(pcol), s"no partition column '$pcol' in the write")
-    partitionColumn(table).foreach(have => require(have == pcol,
+    val head = headMeta(table)
+    head.get("partcol").foreach(have => require(have == pcol,
       s"$table is partitioned by '$have', write brings '$pcol'"))
-    enforceSchema(table, df)
-    val staged = stagePartitioned(df, table, pcol, stageMap(table))
+    enforceSchema(table, head, df)
+    val staged = stagePartitioned(df, table, pcol, stageMap(head))
     val bring = schemaSig(df)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = latestVersion(table)
-      val prev = base.map(snapshotEntries(table, _)).getOrElse(Seq.empty)
-      val v = base.getOrElse(-1L) + 1
-      if (publish(table, v, prev ++ staged,
-          base.map(b => mapMeta(snapshotMeta(table, b))).getOrElse(Map.empty) ++
-            Map("op" -> "append", "partcol" -> pcol,
-              "schema" -> reconcileSig(table, bring, allowExtend = false)),
-          prevEntries = Some(prev)))
-        return v
-      attempt += 1
+    commit(table, creates = true) { base =>
+      Some((base.entries ++ staged,
+        mapMeta(base.meta) ++
+          Map("op" -> "append", "partcol" -> pcol,
+            "schema" -> reconcileSig(table, base.meta.get("schema"), bring,
+              allowExtend = false))))
     }
-    throw new IllegalStateException(s"lost the commit race $maxRetries times on $table")
   }
 
   /** Partition-pruned read: `WHERE pcol = value` planned as a string
@@ -1844,37 +1822,29 @@ object ManifestTable {
     * recompute (the staged payload is base-independent by
     * construction). */
   def overwritePartition(spark: SparkSession, table: String, value: String,
-      df: DataFrame, maxRetries: Int = 20): Long = {
+      df: DataFrame): Long = {
     import org.apache.spark.sql.functions.col
-    val pcol = partitionColumn(table).getOrElse(throw new IllegalStateException(
+    val head = headMeta(table)
+    val pcol = head.getOrElse("partcol", throw new IllegalStateException(
       s"$table records no partition column"))
-    enforceSchema(table, df)
+    enforceSchema(table, head, df)
     require(df.filter(col(pcol).isNull || col(pcol) =!= value).isEmpty,
       s"overwritePartition($value) requires every row to carry $pcol = $value")
-    val staged = stagePartitioned(df, table, pcol, stageMap(table))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = latestVersion(table).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot in $table"))
-      val baseMeta = snapshotMeta(table, base)
+    val staged = stagePartitioned(df, table, pcol, stageMap(head))
+    commit(table) { base =>
       // unmarked files are conservatively in scope, as for readPartition
-      val (replaced, carried) = snapshotFiles(table, base)
-        .partition(f => partitionValueOf(f).forall(_ == value))
+      val (replaced, carried) =
+        base.files.partition(f => partitionValueOf(f).forall(_ == value))
       val ambiguous = replaced.filter(partitionValueOf(_).isEmpty)
       require(ambiguous.isEmpty,
         s"$table holds ${ambiguous.size} unmarked (cross-partition) files — " +
           "an exact partition overwrite is ambiguous; compact per-partition first")
-      val dvLines = snapshotEntries(table, base).filter(_.startsWith(DvPrefix))
-      if (publish(table, base + 1, carried ++ staged ++ dvLines,
-          Map("op" -> "overwrite-partition", "partcol" -> pcol,
-            "partvalue" -> value,
-            "schema" -> baseMeta.getOrElse("schema", schemaSig(df))) ++
-            mapMeta(baseMeta),
-          prevEntries = Some(snapshotEntries(table, base))))
-        return base + 1
-      attempt += 1 // lost the race: re-derive the list, same staged files
+      Some((carried ++ staged ++ base.dvLines,
+        Map("op" -> "overwrite-partition", "partcol" -> pcol,
+          "partvalue" -> value,
+          "schema" -> base.meta.getOrElse("schema", schemaSig(df))) ++
+          mapMeta(base.meta)))
     }
-    throw new IllegalStateException(s"lost the commit race $maxRetries times on $table")
   }
 
   /** RESTORE — roll the table back to `toVersion` as a NEW commit (the
@@ -1894,34 +1864,28 @@ object ManifestTable {
     * base-independent (the restored state is a pure function of the
     * immutable target manifest), so a lost CAS just republishes at the
     * next version. */
-  def restore(table: String, toVersion: Long, maxRetries: Int = 20): Long = {
+  def restore(table: String, toVersion: Long): Long = {
     val entries = snapshotEntries(table, toVersion) // throws past retention
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = latestVersion(table).getOrElse(-1L)
+    val target = snapshotMeta(table, toVersion)
+    commit(table) { base =>
       // carry the HIGHEST lastBatchId in play forward (the pre-restore
       // latest dominates the target's, batch ids being monotone over
       // versions): [[idempotentAppend]]'s committed() reads only the
       // latest version's meta, so a restore that dropped the marker
       // would let a replayed sink batch re-commit already-committed
-      // rows right after the rollback
-      val batchIds = Seq(base, toVersion).filter(_ >= 0)
-        .flatMap(v => snapshotMeta(table, v).get("lastBatchId")).map(_.toLong)
-      // maxcolid, like lastBatchId, is a HIGH-WATER mark: restoring to a
-      // pre-evolution version must not roll it back, or a later evolve
-      // could reuse a field id and alias a dropped column's stored bytes
-      val maxColIds = Seq(base, toVersion).filter(_ >= 0)
-        .flatMap(v => snapshotMeta(table, v).get("maxcolid")).map(_.toLong)
-      val meta = Map("op" -> "restore", "restoreOf" -> toVersion.toString) ++
-        snapshotMeta(table, toVersion).get("schema").map("schema" -> _) ++
-        snapshotMeta(table, toVersion).get("colmap").map("colmap" -> _) ++
-        maxColIds.maxOption.map("maxcolid" -> _.toString) ++
-        batchIds.maxOption.map("lastBatchId" -> _.toString)
-      val v = base + 1
-      if (publish(table, v, entries, meta)) return v
-      attempt += 1
+      // rows right after the rollback. maxcolid, like lastBatchId, is a
+      // HIGH-WATER mark: restoring to a pre-evolution version must not
+      // roll it back, or a later evolve could reuse a field id and alias
+      // a dropped column's stored bytes
+      def highWater(k: String): Option[(String, String)] =
+        Seq(base.meta, target).flatMap(_.get(k)).map(_.toLong).maxOption
+          .map(k -> _.toString)
+      Some((entries,
+        Map("op" -> "restore", "restoreOf" -> toVersion.toString) ++
+          target.get("schema").map("schema" -> _) ++
+          target.get("colmap").map("colmap" -> _) ++
+          highWater("maxcolid") ++ highWater("lastBatchId")))
     }
-    throw new IllegalStateException(s"lost the commit race $maxRetries times on $table")
   }
 
   /** MERGE INTO (upsert) as a transactional snapshot: read the latest
@@ -1942,13 +1906,10 @@ object ManifestTable {
     * attempt's staged files become orphans for vacuum, the same
     * garbage class as a crashed writer's. */
   def merge(spark: SparkSession, table: String, updates: DataFrame,
-      key: String, maxRetries: Int = 20): Long = {
+      key: String): Long = {
     import org.apache.spark.sql.functions.col
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = latestVersion(table).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot in $table"))
-      val current = read(spark, table, Some(base))
+    commit(table) { base =>
+      val current = scan(spark, planOn(table, base, Nil, None))
       val cols = current.columns
       val u = updates.select(cols.map(col): _*)
       val merged = current.as("t")
@@ -1957,17 +1918,13 @@ object ManifestTable {
           org.apache.spark.sql.functions
             .coalesce(col(s"u.$c"), col(s"t.$c")).as(c)
         }: _*)
-      val staged = stage(merged, table, stageMap(table))
       // the merge KEY rides in the commit meta so the change feed can
       // pair this commit's delete+insert rows back into
       // update_preimage/update_postimage (Delta-parity CDF updates)
-      if (publish(table, base + 1, staged,
-          Map("op" -> "merge", "mergeKey" -> key,
-            "schema" -> schemaSig(merged)) ++
-            mapMeta(snapshotMeta(table, base)))) return base + 1
-      attempt += 1 // lost the race: recompute against the new snapshot
+      Some((stage(merged, table, stageMap(base.meta)),
+        Map("op" -> "merge", "mergeKey" -> key,
+          "schema" -> schemaSig(merged)) ++ mapMeta(base.meta)))
     }
-    throw new IllegalStateException(s"lost the commit race $maxRetries times on $table")
   }
 
   /** Transactional DELETE WHERE `column ∈ [lo, hi]` with FILE-LEVEL
@@ -2035,18 +1992,16 @@ object ManifestTable {
     * falls back to the full recompute (the staged files of the lost
     * attempt become vacuum-able orphans). */
   def deleteWhere[T](spark: SparkSession, table: String, logicalColumn: String,
-      lo: T, hi: T, maxRetries: Int = 20, dvBelowOverlap: Double = 0.5)(
+      lo: T, hi: T, dvBelowOverlap: Double = 0.5)(
       implicit l: RangeLit[T]): Long = {
     val range = ColRange(logicalColumn, lo, hi)
-    var attempt = 0
     var work: Option[DeleteWork] = None
-    while (attempt < maxRetries) {
-      val p = plan(table, None, Seq(range))
-      val (base, baseMeta, files, oldDvEntries) = (p.version, p.meta, p.files, p.dvLines)
+    commit(table) { base =>
+      val (baseMeta, files, oldDvEntries) = (base.meta, base.files, base.dvLines)
       // stats sidecars and the files themselves store PHYSICAL names;
       // the caller's predicate column is LOGICAL
       val column = physName(baseMeta, logicalColumn)
-      val keptStats = p.kept.toMap
+      val keptStats = planOn(table, base, Seq(range), None).kept.toMap
       // the file-level decision, shared by first compute and rebase
       // check; a file the plan pruned cannot hold a match
       def classifyFile(f: String): Int = keptStats.get(f) match {
@@ -2082,74 +2037,68 @@ object ManifestTable {
               !w.rewriteF.contains(f) && !w.dvF.contains(f)) &&
             addedSince.forall(f => classifyFile(f) == FileKeep) &&
             w.rewriteF.forall(f => !newDvTargets.contains(f))
-          if (disjoint)
-            Some(w.copy(base = base, files = files, oldDvEntries = oldDvEntries))
+          if (disjoint) Some(w.copy(files = files, oldDvEntries = oldDvEntries))
           else None // genuine conflict: recompute below
         case None => None
       }
 
-      val thisWork: DeleteWork = attemptWork.getOrElse {
+      // None: no file can contain a match — a provable no-op
+      val thisWork: Option[DeleteWork] = attemptWork.orElse {
         val classified: Seq[(String, Int)] = files.map(f => f -> classifyFile(f))
         val rewriteF = classified.collect { case (f, FileRewrite) => f }
         val dvF = classified.collect { case (f, FileDv) => f }
         val dropF = classified.collect { case (f, FileDrop) => f }
-        if (rewriteF.isEmpty && dvF.isEmpty && dropF.isEmpty) return base
-        // rewrite path applies EXISTING DVs first — republishing a
-        // tombstoned row would resurrect it. The scan, filter, and
-        // staged files all stay in PHYSICAL names: rewrites must keep
-        // the files physically consistent across logical renames.
-        // NULL-SAFE survivor filter: a null predicate key makes the
-        // predicate NULL, and `filter(!NULL)` drops the row — which would
-        // silently erase null-keyed rows from every rewritten file.
-        // Deletes keep exactly the rows where the predicate is NOT
-        // TRUE (SQL DELETE semantics), so nulls coalesce to survive.
-        val stagedData =
-          if (rewriteF.isEmpty) Seq.empty
-          else stage(scanPhysical(spark, rewriteF, p.dvs,
-              baseMeta.get("schema"), physNamesOf(baseMeta))
-            .filter(!org.apache.spark.sql.functions.coalesce(
-              range.exact(col(column)), lit(false))), table)
-        // DV path records (path, pos) of the dying rows from the scan's
-        // own `_metadata` — tombstone-sized output, no data file
-        // touched. Re-tombstoning a position an older DV already covers
-        // is harmless (anti-join semantics), so the raw scan suffices —
-        // under the snapshot's physical schema, which spares the
-        // inference job (only a schema-less legacy snapshot infers).
-        val stagedDv =
-          if (dvF.isEmpty) Seq.empty
-          else stage(scanPhysical(spark, dvF, Nil,
-              baseMeta.get("schema"), physNamesOf(baseMeta))
-            .filter(range.exact(col(column)))
-            .select(col("_metadata.file_path").as("path"),
-              col("_metadata.row_index").as("pos")), table)
-        DeleteWork(base, baseMeta.get("schema"), baseMeta.get("colmap"),
-          files, oldDvEntries, rewriteF, dvF, dropF, stagedData, stagedDv)
+        Option.when(rewriteF.nonEmpty || dvF.nonEmpty || dropF.nonEmpty) {
+          // rewrite path applies EXISTING DVs first — republishing a
+          // tombstoned row would resurrect it. The scan, filter, and
+          // staged files all stay in PHYSICAL names: rewrites must keep
+          // the files physically consistent across logical renames.
+          // NULL-SAFE survivor filter: a null predicate key makes the
+          // predicate NULL, and `filter(!NULL)` drops the row — which would
+          // silently erase null-keyed rows from every rewritten file.
+          // Deletes keep exactly the rows where the predicate is NOT
+          // TRUE (SQL DELETE semantics), so nulls coalesce to survive.
+          val stagedData =
+            if (rewriteF.isEmpty) Seq.empty
+            else stage(scanPhysical(spark, rewriteF, base.dvs,
+                baseMeta.get("schema"), physNamesOf(baseMeta))
+              .filter(!org.apache.spark.sql.functions.coalesce(
+                range.exact(col(column)), lit(false))), table)
+          // DV path records (path, pos) of the dying rows from the scan's
+          // own `_metadata` — tombstone-sized output, no data file
+          // touched. Re-tombstoning a position an older DV already covers
+          // is harmless (anti-join semantics), so the raw scan suffices —
+          // under the snapshot's physical schema, which spares the
+          // inference job (only a schema-less legacy snapshot infers).
+          val stagedDv =
+            if (dvF.isEmpty) Seq.empty
+            else stage(scanPhysical(spark, dvF, Nil,
+                baseMeta.get("schema"), physNamesOf(baseMeta))
+              .filter(range.exact(col(column)))
+              .select(col("_metadata.file_path").as("path"),
+                col("_metadata.row_index").as("pos")), table)
+          DeleteWork(baseMeta.get("schema"), baseMeta.get("colmap"),
+            files, oldDvEntries, rewriteF, dvF, dropF, stagedData, stagedDv)
+        }
       }
-      work = Some(thisWork)
+      work = thisWork
 
       // old DV lines carry VERBATIM (keeping their recorded targets);
       // each new sidecar records the files it tombstones so compaction
       // can stay proportional to the affected files. On a rebase the
       // BASE's current entry list (the winner's) is the carry set.
-      val keep = files.filterNot(f =>
-        thisWork.rewriteF.contains(f) || thisWork.dvF.contains(f) ||
-          thisWork.dropF.contains(f))
-      val dvLines = oldDvEntries ++
-        thisWork.stagedDv.map(dvLine(_, thisWork.dvF))
-      // tombstoned files carry into the new manifest VERBATIM — the DV
+      // Tombstoned files carry into the new manifest VERBATIM — the DV
       // subtracts their dying rows reader-side; only rewritten files
       // leave the file list
-      if (publish(table, base + 1,
-          keep ++ thisWork.dvF.filter(files.toSet) ++ thisWork.stagedData ++ dvLines,
-          Map("op" -> "delete",
-            "schema" -> baseMeta.getOrElse("schema",
-              schemaSig(read(spark, table, Some(base)))),
-            "dvAdded" -> thisWork.stagedDv.size.toString) ++ mapMeta(baseMeta),
-          prevEntries = Some(files ++ oldDvEntries)))
-        return base + 1
-      attempt += 1 // lost the race: rebase or recompute on the next spin
+      thisWork.map { w =>
+        val keep = files.filterNot(f =>
+          w.rewriteF.contains(f) || w.dvF.contains(f) || w.dropF.contains(f))
+        (keep ++ w.dvF.filter(files.toSet) ++ w.stagedData ++ oldDvEntries ++
+          w.stagedDv.map(dvLine(_, w.dvF)),
+          Map("op" -> "delete", "schema" -> baseSig(spark, table, base),
+            "dvAdded" -> w.stagedDv.size.toString) ++ mapMeta(baseMeta))
+      }
     }
-    throw new IllegalStateException(s"lost the commit race $maxRetries times on $table")
   }
 
   private val FileKeep = 0
@@ -2180,7 +2129,7 @@ object ManifestTable {
     * losses so a provably-disjoint winner lets the loser REBASE (
     * re-publish the same staged files on the new base) instead of
     * recomputing — see [[deleteWhere]]. */
-  private final case class DeleteWork(base: Long, baseSig: Option[String],
+  private final case class DeleteWork(baseSig: Option[String],
       baseColMap: Option[String], files: Seq[String],
       oldDvEntries: Seq[String], rewriteF: Seq[String], dvF: Seq[String],
       dropF: Seq[String], stagedData: Seq[String], stagedDv: Seq[String])
@@ -2200,15 +2149,9 @@ object ManifestTable {
     * already materialized. Older versions keep their DV lines and stay
     * exactly time-travelable. No-op (returns the base version) when the
     * snapshot carries no DVs. */
-  def compact(spark: SparkSession, table: String, maxRetries: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = latestVersion(table).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot in $table"))
-      val info = snapshotDvInfo(table, base)
-      if (info.isEmpty) return base
-      val files = snapshotFiles(table, base)
-      val dvPaths = info.map(_._1)
+  def compact(spark: SparkSession, table: String): Long =
+    commit(table) { base =>
+      val (info, files) = (base.dvInfo, base.files)
       val affected: Seq[String] =
         if (info.exists(_._2.isEmpty)) files // legacy DV line: full rewrite
         else files.filter(info.flatMap(_._2).toSet)
@@ -2219,19 +2162,15 @@ object ManifestTable {
       // from the rewrite. The rewrite scans AND stages in PHYSICAL
       // names — a compaction must not bake the current logical labels
       // into the files (the next rename would otherwise need a rewrite).
-      val baseMeta = snapshotMeta(table, base)
-      val current = scanPhysical(spark, affected, dvPaths,
-        baseMeta.get("schema"), physNamesOf(baseMeta))
-      val staged = if (affected.isEmpty) Seq.empty else stage(current, table)
-      if (publish(table, base + 1, untouched ++ staged,
-          Map("op" -> "compact",
-            "schema" -> baseMeta.getOrElse("schema",
-              schemaSig(read(spark, table, Some(base))))) ++
-            mapMeta(baseMeta))) return base + 1
-      attempt += 1
+      Option.when(info.nonEmpty) {
+        val staged =
+          if (affected.isEmpty) Seq.empty
+          else stage(scanPhysical(spark, affected, base.dvs,
+            base.meta.get("schema"), physNamesOf(base.meta)), table)
+        (untouched ++ staged, Map("op" -> "compact",
+          "schema" -> baseSig(spark, table, base)) ++ mapMeta(base.meta))
+      }
     }
-    throw new IllegalStateException(s"lost the commit race $maxRetries times on $table")
-  }
 
   /** TIMESTAMP time travel (`AS OF <timestamp>`): the version whose
     * commit time is the latest at or before `asOfMillis`. Commit time
@@ -2557,16 +2496,15 @@ object ManifestTable {
     * already in. */
   def idempotentAppend(spark: SparkSession, table: String, df: DataFrame,
       batchId: Long): Option[Long] = {
-    // the high-water batch id: newest retained version that recorded
-    // one. Walk back from the head (O(1) via the _latest hint, one meta
-    // read in the common sink-only history because every
-    // idempotentAppend stamps the marker); the walk covers interleaved
-    // maintenance commits — delete/compact/restore — whose meta doesn't
-    // carry it, so a replayed batch can never re-commit just because a
-    // maintenance op ran in between. An expired (missing) manifest ends
-    // the walk: nothing older can be read anyway.
-    def committed: Long = {
-      var v = latestVersion(table).getOrElse(-1L)
+    // the high-water batch id: newest retained version at or below
+    // `from` that recorded one. Walk back from it (one meta read in the
+    // common sink-only history because every idempotentAppend stamps
+    // the marker); the walk covers interleaved commits whose meta
+    // doesn't carry it, so a replayed batch can never re-commit just
+    // because such a commit ran in between. An expired (missing)
+    // manifest ends the walk: nothing older can be read anyway.
+    def committed(from: Long): Long = {
+      var v = from
       while (v >= 0) {
         val b =
           try snapshotMeta(table, v).get("lastBatchId")
@@ -2578,29 +2516,26 @@ object ManifestTable {
       }
       -1L
     }
-    if (committed >= batchId) return None
-    enforceSchema(table, df)
-    val staged = stage(df, table, stageMap(table))
+    if (committed(latestVersion(table).getOrElse(-1L)) >= batchId) return None
+    val head = headMeta(table)
+    enforceSchema(table, head, df)
+    val staged = stage(df, table, stageMap(head))
     val bring = schemaSig(df)
-    var attempt = 0
-    while (attempt < 20) {
-      if (committed >= batchId) return None // lost a race to our own replay
-      val base = latestVersion(table)
-      val prev = base.map(snapshotEntries(table, _)).getOrElse(Seq.empty)
-      val v = base.getOrElse(-1L) + 1
-      // carry FIRST, explicit keys after: mapMeta now carries the base's
+    var replayed = false
+    val v = commit(table, creates = true) { base =>
+      replayed = base.meta.get("lastBatchId").map(_.toLong)
+        .getOrElse(committed(base.version - 1)) >= batchId
+      // lost a race to our own replay: nothing to commit. Otherwise carry
+      // FIRST, explicit keys after: mapMeta carries the base's
       // lastBatchId, and this commit's own (higher) batch id must win
-      if (publish(table, v,
-          prev ++ staged,
-          base.map(b => mapMeta(snapshotMeta(table, b))).getOrElse(Map.empty) ++
-            Map("lastBatchId" -> batchId.toString,
-              "op" -> "streaming-append",
-              "schema" -> reconcileSig(table, bring, allowExtend = false)),
-          prevEntries = Some(prev)))
-        return Some(v)
-      attempt += 1
+      Option.when(!replayed)((base.entries ++ staged,
+        mapMeta(base.meta) ++
+          Map("lastBatchId" -> batchId.toString,
+            "op" -> "streaming-append",
+            "schema" -> reconcileSig(table, base.meta.get("schema"), bring,
+              allowExtend = false))))
     }
-    throw new IllegalStateException(s"lost the commit race 20 times on $table")
+    if (replayed) None else Some(v)
   }
 
   /** HISTORY EXPIRATION — drop every manifest older than the newest

@@ -61,8 +61,12 @@ class EdgeCaseSuite extends SparkSuite {
 
   test("Dedup.clearCaches releases the shared checkpoint caches and results rebuild") {
     // warm both cache layers, clear, re-run — same answer, no throw
+    Dedup.clearCaches() // from empty caches, the warm-up fills one entry in each
     val before = SparkEntry.queries("q_dedup_near")(spark, sf0001).count()
+    val persisted = spark.sparkContext.getPersistentRDDs.size
     Dedup.clearCaches()
+    // both checkpoints' blocks are released, not just dropped from the map
+    assert(spark.sparkContext.getPersistentRDDs.size == persisted - 2)
     val after = SparkEntry.queries("q_dedup_near")(spark, sf0001).count()
     assert(before == after)
   }

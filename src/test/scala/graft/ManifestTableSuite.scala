@@ -147,28 +147,30 @@ class ManifestTableSuite extends SparkSuite {
     ManifestTable.append(spark, t, range(0, 10)) // schema (id, v)
     val sigOld = "id:BIGINT,v:BIGINT"
     val sigNew = "id:BIGINT,v:BIGINT,w:BIGINT"
+    // the commit attempt's base signature: the table's current one
+    def have = ManifestTable.currentSchema(t)
     // pre-move: the brought signature stands
-    assert(ManifestTable.reconcileSig(t, sigOld, allowExtend = false) == sigOld)
+    assert(ManifestTable.reconcileSig(t, have, sigOld, allowExtend = false) == sigOld)
     // the table evolves underneath an in-flight append
     ManifestTable.appendEvolve(spark, t,
       spark.range(10, 20).select(col("id"), (col("id") * 2).as("v"), (col("id") % 3).as("w")))
     // the stale committer's retry must publish the table's WIDER
     // signature — republishing (id, v) would make readers null out w
     // from the winner's files
-    assert(ManifestTable.reconcileSig(t, sigOld, allowExtend = false) == sigNew)
-    assert(ManifestTable.reconcileSig(t, sigOld, allowExtend = true) == sigNew)
+    assert(ManifestTable.reconcileSig(t, have, sigOld, allowExtend = false) == sigNew)
+    assert(ManifestTable.reconcileSig(t, have, sigOld, allowExtend = true) == sigNew)
     // an evolving committer bringing a further extension keeps it
     val sigWider = sigNew + ",x:BIGINT"
-    assert(ManifestTable.reconcileSig(t, sigWider, allowExtend = true) == sigWider)
+    assert(ManifestTable.reconcileSig(t, have, sigWider, allowExtend = true) == sigWider)
     // a NON-evolving committer may never widen the table's schema
     intercept[IllegalStateException] {
-      ManifestTable.reconcileSig(t, sigWider, allowExtend = false)
+      ManifestTable.reconcileSig(t, have, sigWider, allowExtend = false)
     }
     // two concurrent evolutions adding DIFFERENT columns are a true
     // write conflict — no ordering of the column sets is positionally
     // consistent, so fail loudly instead of dropping one
     intercept[IllegalStateException] {
-      ManifestTable.reconcileSig(t, sigOld + ",y:BIGINT", allowExtend = true)
+      ManifestTable.reconcileSig(t, have, sigOld + ",y:BIGINT", allowExtend = true)
     }
   }
 
@@ -608,6 +610,110 @@ class ManifestTableSuite extends SparkSuite {
       assert(ManifestTable.latestVersion(t).contains(4L))
       assert(ManifestTable.read(spark, t).count() == 10 + 400,
         "no committed rows may be lost to the race")
+    } finally pool.shutdown()
+  }
+
+  test("every writer lands racing a blind append; every version reads and vacuum(0) keeps it") {
+    // one row per writer: its table, the call, the ids and columns its
+    // effect leaves, and whether it REPLACES the snapshot (overwrite and
+    // restore publish their own payload, so the blind rows survive them
+    // only when the append commits after)
+    case class Race(name: String, partitioned: Boolean, setup: String => Unit,
+        write: String => Long, ids: Set[Long], cols: Seq[String],
+        replaces: Boolean = false)
+    def ids(a: Long, b: Long): Set[Long] = (a until b).toSet
+    def parted(df: org.apache.spark.sql.DataFrame, p: org.apache.spark.sql.Column) =
+      df.withColumn("p", p)
+    val byParity = when(col("id") % 2 === 0, lit("a")).otherwise(lit("b"))
+    val plain: String => Unit = t => ManifestTable.append(spark, t, range(0, 100))
+    val partitioned: String => Unit =
+      t => ManifestTable.appendPartitioned(spark, t, parted(range(0, 100), byParity), "p")
+    val races = Seq(
+      Race("appendPartitioned", true, partitioned,
+        t => ManifestTable.appendPartitioned(spark, t,
+          parted(range(1000, 1010), byParity), "p"),
+        ids(0, 100) ++ ids(1000, 1010), Seq("id", "v", "p")),
+      Race("overwritePartition", true, partitioned,
+        t => ManifestTable.overwritePartition(spark, t, "a",
+          parted(range(2000, 2010), lit("a"))),
+        ids(0, 100).filter(_ % 2 == 1) ++ ids(2000, 2010), Seq("id", "v", "p")),
+      Race("overwrite", false, plain,
+        t => ManifestTable.overwrite(spark, t, range(5000, 5050)),
+        ids(5000, 5050), Seq("id", "v"), replaces = true),
+      Race("restore", false,
+        t => { plain(t); ManifestTable.append(spark, t, range(100, 200)) },
+        t => ManifestTable.restore(t, 0L), ids(0, 100), Seq("id", "v"), replaces = true),
+      Race("renameColumn", false, plain, t => ManifestTable.renameColumn(t, "v", "w"),
+        ids(0, 100), Seq("id", "w")),
+      Race("dropColumn", false, plain, t => ManifestTable.dropColumn(t, "v"),
+        ids(0, 100), Seq("id")),
+      Race("compact", false,
+        t => { plain(t); ManifestTable.deleteWhere(spark, t, "id", 10L, 12L) },
+        t => ManifestTable.compact(spark, t), ids(0, 100) -- ids(10, 13), Seq("id", "v")),
+      Race("compactSmall", false,
+        t => { plain(t); ManifestTable.append(spark, t, range(100, 200)) },
+        t => ManifestTable.compactSmall(spark, t, minRows = 1000L),
+        ids(0, 200), Seq("id", "v")),
+      Race("clusterBy", false, plain,
+        t => ManifestTable.clusterBy(spark, t, "id", "v", files = 2),
+        ids(0, 100), Seq("id", "v")),
+      Race("idempotentAppend", false, plain,
+        t => ManifestTable.idempotentAppend(spark, t, range(3000, 3010), 0L).get,
+        ids(0, 100) ++ ids(3000, 3010), Seq("id", "v")))
+    val blindIds = ids(9000, 9010)
+    // the blind append brings rows in the table's current columns; a
+    // rename or drop landing between its schema read and its commit is a
+    // true write conflict (see reconcileSig), which a client answers by
+    // writing again against the new schema
+    def blindAppend(t: String, partitioned: Boolean): Long = {
+      def once(): Long = {
+        val fields = ManifestTable.currentSchema(t).get.split(",").toSeq.map(_.split(":")(0))
+        val df = spark.range(9000, 9010).select(fields.map {
+          case "id" => col("id")
+          case "p" => lit("z").as("p")
+          case f => (col("id") * 2).as(f)
+        }: _*)
+        if (partitioned) ManifestTable.appendPartitioned(spark, t, df, "p")
+        else ManifestTable.append(spark, t, df)
+      }
+      try once() catch {
+        case e @ (_: IllegalStateException | _: IllegalArgumentException)
+            if e.getMessage.contains("schema") => once()
+      }
+    }
+    val pool = Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try races.foreach { r =>
+      val t = freshTable()
+      r.setup(t)
+      val base = ManifestTable.latestVersion(t).get
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val writer = Future { go.await(); r.write(t) }
+      val blind = Future { go.await(); blindAppend(t, r.partitioned) }
+      go.countDown()
+      val (wv, bv) = (Await.result(writer, 120.seconds), Await.result(blind, 120.seconds))
+      assert(Set(wv, bv) == Set(base + 1, base + 2), s"${r.name}: both commits land: $wv, $bv")
+      val fin = ManifestTable.read(spark, t)
+      assert(fin.columns.toSeq == r.cols, s"${r.name}: columns")
+      val want = if (r.replaces && wv > bv) r.ids else r.ids ++ blindIds
+      val got = fin.select(col("id")).as[Long].collect()
+      assert(got.length == want.size && got.toSet == want, s"${r.name}: final rows")
+      r.cols.filterNot(c => c == "id" || c == "p").foreach { c =>
+        assert(fin.filter(col(c) =!= col("id") * 2).isEmpty, s"${r.name}: $c values")
+      }
+      if (r.name == "compact") assert(ManifestTable.snapshotDvs(t, base + 2).isEmpty)
+      if (r.name == "idempotentAppend")
+        assert(ManifestTable.snapshotMeta(t, base + 2).get("lastBatchId").contains("0"))
+      val versions = 0L to base + 2
+      val counts = versions.map(v => ManifestTable.read(spark, t, Some(v)).count())
+      ManifestTable.vacuum(t, 0L)
+      versions.foreach { v =>
+        (ManifestTable.snapshotFiles(t, v) ++ ManifestTable.snapshotDvs(t, v)).foreach { f =>
+          assert(Files.exists(Paths.get(f)), s"${r.name}: vacuum removed $f, live at v$v")
+        }
+      }
+      assert(versions.map(v => ManifestTable.read(spark, t, Some(v)).count()) == counts,
+        s"${r.name}: every version reads the same after vacuum")
     } finally pool.shutdown()
   }
 
