@@ -139,12 +139,20 @@ object Bench {
       }
     } catch { case _: Throwable => Map.empty }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** The fixture dir the bench and the dev mains ([[Plans]],
+    * [[DevTime]]) run on: SPARK_GRAFT_SF_DIR, the sf0.1 set by default. */
+  private[graft] val sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** The bench's session, shared by the dev mains so they see the plans
+    * and timings the bench does: `local[$SPARK_GRAFT_CPUS]` (4 by
+    * default) with as many shuffle partitions, UTC. */
+  private[graft] def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // static conf, read once at CodeGenerator class-init: the default
       // 100-entry compiled-class cache cannot hold 86 queries' codegen
@@ -152,6 +160,10 @@ object Bench {
       // loop re-needs them
       .config("spark.sql.codegen.cache.maxEntries", "10000")
       .getOrCreate()
+  }
+
+  def main(args: Array[String]): Unit = {
+    val spark = session()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup (standard steady-state benchmarking, as in JMH): run
     // EVERY query once at the TARGET scale factor so the timed loop

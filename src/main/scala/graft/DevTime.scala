@@ -1,18 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev-only: time named queries at a given sf dir (same session shape as
-  * Bench, min-of-3 printed per pass). Not part of the declared surface. */
+/** Dev-only: time the queries named on the command line in the bench's
+  * session ([[Bench.session]]) on SPARK_GRAFT_SF_DIR, min-of-3 printed
+  * per pass. Not part of the declared surface. Usage:
+  *   SPARK_GRAFT_SF_DIR=<fixture dir> sbt "runMain graft.DevTime <query...>"
+  */
 object DevTime {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.head
-    val names = args.tail.toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = Bench.sfDir
+    val names = args.toSeq
+    val spark = Bench.session()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach(n => SparkEntry.queries(n)(spark, sfDir).count()) // warm
     for (p <- 1 to 3; n <- names) {

@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dumps `explain("formatted")` for representative queries — the
-  * plan-review artifact behind PLANS.md. Usage:
-  *   sbt "runMain graft.Plans /root/testdata/sf0.001"
+/** The one plan dumper: prints `explain("formatted")` as markdown — the
+  * plan-review artifact behind PLANS.md — for the flagship queries, or
+  * for just the queries named on the command line. It runs in the
+  * bench's session ([[Bench.session]]) on SPARK_GRAFT_SF_DIR, so the
+  * dumped plans are the ones the bench runs. Usage:
+  *   SPARK_GRAFT_SF_DIR=<fixture dir> sbt "runMain graft.Plans [query...]"
   */
 object Plans {
   val flagship = Seq(
@@ -89,18 +90,12 @@ object Plans {
   )
 
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
-    flagship.foreach { name =>
+    (if (args.isEmpty) flagship else args.toSeq).foreach { name =>
       println(s"\n## $name\n")
       println("```")
-      val df = SparkEntry.queries(name)(spark, dir)
+      val df = SparkEntry.queries(name)(spark, Bench.sfDir)
       println(df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       println("```")

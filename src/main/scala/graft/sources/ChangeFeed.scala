@@ -180,7 +180,7 @@ object ChangeFeed {
       val op = meta.get("op")
       val kind =
         if (op.contains("rename")) Relabel
-        else if (op.exists(o => o == "compact" || o == "cluster" || o == "compact-small")) Skip
+        else if (ManifestTable.reorganizes(meta)) Skip
         else if (epochBoundary(prev, meta)) Boundary
         else Derive
       Step(v, meta, kind)

@@ -2,20 +2,18 @@ package graft.sources
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** [[ManifestTable]] as a genuine Structured Streaming SOURCE — the
   * Delta-streaming-source shape on the miniature log format: the offset
@@ -46,12 +44,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * + [[ChangeFeed]] — a changelog is not an append stream, so it rides
   * the batch CDF API as in the production formats.
   *
-  * The reader is a per-file parquet→InternalRow bridge on parquet-hadoop
-  * (the jar Spark itself ships) with TYPED transport — every flat scalar
-  * plus timestamp (INT64 all units + legacy INT96), date, decimal (all
-  * three parquet encodings), and arrays (3-level standard + 2-level
-  * legacy) — so `events`- and `embeddings`-shaped tables stream;
-  * the schema comes from the table's own
+  * Each added file is read by Spark's parquet reader, the one behind
+  * [[ManifestTable.read]]'s file scan, so every column type the batch
+  * read supports also streams. The schema comes from the table's own
   * recorded commit schema, so no inference scan touches data. Scale: the
   * driver handles only version metadata (KB-scale manifests); every
   * file's rows decode on its executor, one task per added file — the
@@ -60,191 +55,151 @@ import org.apache.spark.unsafe.types.UTF8String
 class ManifestStreamSource extends TableProvider {
   override def supportsExternalMetadata(): Boolean = true
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ManifestStreamSource.schemaOf(ManifestStreamSource.tableOf(options.asScala.toMap))
+  /** The table's enforced schema, parsed back from the head commit's
+    * signature — no data file is opened. */
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val table = ManifestStreamSource.tableOf(options)
+    val sig = ManifestTable.currentSchema(table).getOrElse(
+      throw new IllegalStateException(
+        s"no schema-bearing commit in $table — commit once before streaming"))
+    ManifestTable.sigToSchema(sig).getOrElse(throw new IllegalArgumentException(
+      s"malformed schema signature '$sig' in $table"))
+  }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val opts = properties.asScala.toMap
+    val opts = new CaseInsensitiveStringMap(properties)
     val table = ManifestStreamSource.tableOf(opts)
+    val head = ManifestTable.latestVersion(table)
+    val meta = head.fold(Map.empty[String, String])(ManifestTable.snapshotMeta(table, _))
     // feature gate at stream definition: an unsupported table feature
     // must fail the query plan, not misread micro-batches later
-    ManifestTable.latestVersion(table).foreach(v =>
-      ManifestTable.requireSupported(table, v, ManifestTable.snapshotMeta(table, v)))
-    new ManifestStreamTable(table, schema,
-      ignoreDeletes = ManifestStreamSource.flag(opts, "ignoreDeletes"),
-      ignoreChanges = ManifestStreamSource.flag(opts, "ignoreChanges"),
-      maxFilesPerTrigger = ManifestStreamSource.intOpt(opts, "maxFilesPerTrigger"),
-      maxRowsPerTrigger = ManifestStreamSource.longOpt(opts, "maxRowsPerTrigger"),
-      maxBytesPerTrigger = ManifestStreamSource.longOpt(opts, "maxBytesPerTrigger"),
-      partitionValue = opts.collectFirst {
-        case (k, v) if k.equalsIgnoreCase("partitionValue") => v
-      },
-      physByLogical = ManifestStreamSource.physByLogical(table))
+    head.foreach(ManifestTable.requireSupported(table, _, meta))
+    def flag(name: String) = Option(opts.get(name)).exists(_.equalsIgnoreCase("true"))
+    new ManifestStreamTable(schema, StreamDef(table,
+      fileSchema = ManifestStreamSource.fileSchema(schema, meta),
+      ignoreDeletes = flag("ignoreDeletes"),
+      ignoreChanges = flag("ignoreChanges"),
+      maxFilesPerTrigger = ManifestStreamSource.atLeastOne(opts, "maxFilesPerTrigger")
+        .map(Math.toIntExact),
+      maxRowsPerTrigger = ManifestStreamSource.atLeastOne(opts, "maxRowsPerTrigger"),
+      maxBytesPerTrigger = ManifestStreamSource.atLeastOne(opts, "maxBytesPerTrigger"),
+      partitionValue = Option(opts.get("partitionValue"))))
   }
 }
 
 object ManifestStreamSource {
 
-  private[sources] def tableOf(opts: Map[String, String]): String =
-    opts.collectFirst { case (k, v) if k.equalsIgnoreCase("table") => v }
-      .getOrElse(throw new IllegalArgumentException(
-        "ManifestStreamSource requires option(\"table\", dir)"))
+  private def tableOf(opts: CaseInsensitiveStringMap): String =
+    Option(opts.get("table")).getOrElse(throw new IllegalArgumentException(
+      "ManifestStreamSource requires option(\"table\", dir)"))
 
-  private[sources] def flag(opts: Map[String, String], name: String): Boolean =
-    opts.collectFirst { case (k, v) if k.equalsIgnoreCase(name) => v }
-      .exists(_.equalsIgnoreCase("true"))
-
-  private[sources] def intOpt(opts: Map[String, String], name: String): Option[Int] =
-    opts.collectFirst { case (k, v) if k.equalsIgnoreCase(name) => v }
-      .map { v =>
-        val n = v.toInt
-        require(n >= 1, s"$name must be >= 1, got $n")
-        n
-      }
-
-  /** Long-typed option — row budgets can legitimately exceed Int range
-    * at the scales this source targets. */
-  private[sources] def longOpt(opts: Map[String, String], name: String): Option[Long] =
-    opts.collectFirst { case (k, v) if k.equalsIgnoreCase(name) => v }
-      .map { v =>
-        val n = v.toLong
-        require(n >= 1L, s"$name must be >= 1, got $n")
-        n
-      }
-
-  /** The table's enforced schema, parsed back from the commit metadata's
-    * `name:type` signature — no data file is opened. All fields read as
-    * nullable (parquet repetition decides per row). The field split is
-    * NESTING-AWARE: type DDL can itself contain commas
-    * (`DECIMAL(12,2)`, `STRUCT<...>`), so a naive split would shear a
-    * legitimate signature into garbage fragments; unsupported transport
-    * types still fail, but with the reader's clean diagnostic instead of
-    * a MatchError. */
-  private[graft] def schemaOf(table: String): StructType = {
-    val sig = ManifestTable.currentSchema(table).getOrElse(
-      throw new IllegalStateException(
-        s"no schema-bearing commit in $table — commit once before streaming"))
-    StructType(splitTopLevel(sig).map { f =>
-      f.split(":", 2) match {
-        case Array(n, t) =>
-          StructField(n, org.apache.spark.sql.types.DataType.fromDDL(t), nullable = true)
-        case _ => throw new IllegalArgumentException(
-          s"malformed schema signature field '$f' in $table")
-      }
-    })
-  }
-
-  /** Logical→physical column names for a table under COLUMN MAPPING
-    * (renamed/dropped columns store under birth-time physical names —
-    * see [[ManifestTable.renameColumn]]); identity for plain tables.
-    * Snapshot at stream definition: physical names never change, so the
-    * map stays valid for every file the stream will ever read. */
-  private[sources] def physByLogical(table: String): Map[String, String] =
-    (for {
-      sig <- ManifestTable.currentSchema(table)
-      cm <- ManifestTable.currentColMap(table)
-    } yield splitTopLevel(sig).map(_.split(":", 2)(0)).zip(cm.map(_._2)).toMap)
-      .getOrElse(Map.empty)
-
-  /** Split a schema signature on commas at bracket depth 0 only
-    * (parens and angle brackets both nest in type DDL). */
-  private[graft] def splitTopLevel(sig: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    sig.foreach {
-      case c @ ('(' | '<') => depth += 1; cur += c
-      case c @ (')' | '>') => depth -= 1; cur += c
-      case ',' if depth == 0 => out += cur.result(); cur.clear()
-      case c => cur += c
+  /** A positive budget option — Long-typed, since row and byte budgets
+    * can legitimately exceed Int range at the scales this source targets. */
+  private def atLeastOne(opts: CaseInsensitiveStringMap, name: String): Option[Long] =
+    Option(opts.get(name)).map { v =>
+      val n = v.toLong
+      require(n >= 1L, s"$name must be >= 1, got $n")
+      n
     }
-    if (cur.nonEmpty) out += cur.result()
-    out.result()
+
+  /** `schema` under the PHYSICAL names the files store: renamed and
+    * dropped columns keep their birth-time names under column mapping
+    * (see [[ManifestTable.renameColumn]]); identity for plain tables.
+    * Physical names never change, so the head's mapping stays valid for
+    * every file the stream will ever read. */
+  private def fileSchema(schema: StructType, meta: Map[String, String]): StructType = {
+    val physOf = (for {
+      logical <- meta.get("schema").flatMap(ManifestTable.sigToSchema)
+      phys <- ManifestTable.physNamesOf(meta)
+    } yield logical.fieldNames.zip(phys).toMap).getOrElse(Map.empty[String, String])
+    StructType(schema.fields.map(f => f.copy(name = physOf.getOrElse(f.name, f.name))))
   }
 
-  /** Data files the commits in `(startV, endV]` make newly visible under
-    * the source's op semantics (driver-side, metadata only). The walk is
-    * INCREMENTAL — each version's file list reconstructs once and serves
-    * as the next version's parent — so an N-version backlog costs N+1
-    * snapshot reconstructions, not 2N. */
-  private[sources] def addedFiles(table: String, startV: Long, endV: Long,
-      ignoreDeletes: Boolean, ignoreChanges: Boolean): Seq[String] = {
-    if (endV <= startV) return Seq.empty
+  /** Each version's newly-visible data files in `(startV, endV]` under
+    * the source's op semantics (driver-side, metadata only), one element
+    * per version and lazily, so admission control can stop early. The
+    * walk is INCREMENTAL — each version's file list reconstructs once
+    * and serves as the next version's parent — so an N-version backlog
+    * costs N+1 snapshot reconstructions, not 2N. */
+  private[sources] def addedByVersion(table: String, startV: Long, endV: Long,
+      ignoreDeletes: Boolean, ignoreChanges: Boolean): Iterator[Seq[String]] = {
+    if (endV <= startV) return Iterator.empty
     var prev = if (startV < 0) Set.empty[String]
       else ManifestTable.snapshotFiles(table, startV).toSet
-    ((startV + 1) to endV).flatMap { v =>
+    (startV + 1 to endV).iterator.map { v =>
       val cur = ManifestTable.snapshotFiles(table, v)
-      val out = addedForOp(table, v, cur.filterNot(prev),
-        ignoreDeletes, ignoreChanges)
+      val out = addedForOp(table, v, cur.filterNot(prev), ignoreDeletes, ignoreChanges)
       prev = cur.toSet
       out
     }
   }
 
   /** One version's newly-visible files under the op semantics, given the
-    * raw added-file set (shared by the range walk and the admission
-    * walk). */
-  private[sources] def addedForOp(table: String, v: Long, added: => Seq[String],
+    * raw added-file set. */
+  private def addedForOp(table: String, v: Long, added: Seq[String],
       ignoreDeletes: Boolean, ignoreChanges: Boolean): Seq[String] = {
-      val op = ManifestTable.snapshotMeta(table, v).getOrElse("op", "unknown")
-      op match {
-        case "append" | "streaming-append" => added
-        // ADD-COLUMN evolution is still an insert-only commit: its files
-        // stream like any append. A stream defined BEFORE the evolution
-        // keeps its fixed schema (the reader projects by field name, so
-        // evolved columns are simply not read until the stream restarts
-        // and re-infers the latest signature) — adopt new columns by
-        // restarting; the engine checkpoint resumes at the committed
-        // version either way.
-        case "append-evolve" => added
-        // a shallow clone's v0 is the new table's insert-only initial
-        // load — UNLESS the cloned snapshot carried deletion vectors:
-        // the per-file stream reader never applies DVs, so emitting the
-        // files verbatim would resurrect the source's tombstoned rows
-        // as inserts (batch read and the ChangeFeed apply them). Same
-        // contract as a delete commit: skip with ignoreDeletes, or
-        // consume the row-level truth via readChanges/ChangeFeed.
-        case "clone" =>
-          if (ManifestTable.snapshotDvs(table, v).isEmpty) added
-          else if (ignoreDeletes) Seq.empty
-          else throw new IllegalStateException(
-            s"commit v$v of $table is a CLONE carrying deletion vectors — " +
-              "an insert-only stream would resurrect its tombstoned rows; " +
-              "set ignoreDeletes=true to skip it, or consume row-level " +
-              "changes via ManifestTable.readChanges/ChangeFeed")
-        case "compact" | "cluster" | "compact-small" =>
-          Seq.empty // physical reorg, logical identity
-        // metadata-only schema commits add no files; a stream keeps its
-        // fixed start-time schema either way (restart to adopt a rename;
-        // a dropped column simply stops being projected on restart)
-        case "rename" | "drop-column" => Seq.empty
-        case "delete" =>
-          if (ignoreDeletes) Seq.empty
-          else throw new IllegalStateException(
-            s"commit v$v of $table is a DELETE — an insert-only stream cannot " +
-              "represent it; set ignoreDeletes=true to skip, or consume " +
-              "row-level changes via ManifestTable.readChanges/ChangeFeed")
-        case other =>
-          if (ignoreChanges) added
-          else throw new IllegalStateException(
-            s"commit v$v of $table is '$other' (rewrites data) — set " +
-              "ignoreChanges=true to emit its files as inserts (carried rows " +
-              "re-emit; downstream must dedup by key), or consume " +
-              "ManifestTable.readChanges")
-      }
+    val meta = ManifestTable.snapshotMeta(table, v)
+    // physical reorg, logical identity
+    if (ManifestTable.reorganizes(meta)) return Seq.empty
+    meta.getOrElse("op", "unknown") match {
+      case "append" | "streaming-append" => added
+      // ADD-COLUMN evolution is still an insert-only commit: its files
+      // stream like any append. A stream defined BEFORE the evolution
+      // keeps its fixed schema (the reader projects by field name, so
+      // evolved columns are simply not read until the stream restarts
+      // and re-infers the latest signature) — adopt new columns by
+      // restarting; the engine checkpoint resumes at the committed
+      // version either way.
+      case "append-evolve" => added
+      // a shallow clone's v0 is the new table's insert-only initial
+      // load — UNLESS the cloned snapshot carried deletion vectors:
+      // the per-file stream reader never applies DVs, so emitting the
+      // files verbatim would resurrect the source's tombstoned rows
+      // as inserts (batch read and the ChangeFeed apply them). Same
+      // contract as a delete commit: skip with ignoreDeletes, or
+      // consume the row-level truth via readChanges/ChangeFeed.
+      case "clone" =>
+        if (ManifestTable.snapshotDvs(table, v).isEmpty) added
+        else if (ignoreDeletes) Seq.empty
+        else throw new IllegalStateException(
+          s"commit v$v of $table is a CLONE carrying deletion vectors — " +
+            "an insert-only stream would resurrect its tombstoned rows; " +
+            "set ignoreDeletes=true to skip it, or consume row-level " +
+            "changes via ManifestTable.readChanges/ChangeFeed")
+      // metadata-only schema commits add no files; a stream keeps its
+      // fixed start-time schema either way (restart to adopt a rename;
+      // a dropped column simply stops being projected on restart)
+      case "rename" | "drop-column" => Seq.empty
+      case "delete" =>
+        if (ignoreDeletes) Seq.empty
+        else throw new IllegalStateException(
+          s"commit v$v of $table is a DELETE — an insert-only stream cannot " +
+            "represent it; set ignoreDeletes=true to skip, or consume " +
+            "row-level changes via ManifestTable.readChanges/ChangeFeed")
+      case other =>
+        if (ignoreChanges) added
+        else throw new IllegalStateException(
+          s"commit v$v of $table is '$other' (rewrites data) — set " +
+            "ignoreChanges=true to emit its files as inserts (carried rows " +
+            "re-emit; downstream must dedup by key), or consume " +
+            "ManifestTable.readChanges")
     }
+  }
 }
 
-private class ManifestStreamTable(table: String, schema: StructType,
+/** A stream's fixed definition: the files' physical read schema, the op
+  * semantics, the admission budgets and the partition scope. */
+private case class StreamDef(table: String, fileSchema: StructType,
     ignoreDeletes: Boolean, ignoreChanges: Boolean,
     maxFilesPerTrigger: Option[Int],
     maxRowsPerTrigger: Option[Long],
     maxBytesPerTrigger: Option[Long],
-    partitionValue: Option[String],
-    physByLogical: Map[String, String])
+    partitionValue: Option[String])
+
+private class ManifestStreamTable(schema: StructType, d: StreamDef)
   extends Table with SupportsRead {
-  override def name(): String = s"manifest_stream($table)"
+  override def name(): String = s"manifest_stream(${d.table})"
   override def schema(): StructType = schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
@@ -254,9 +209,7 @@ private class ManifestStreamTable(table: String, schema: StructType,
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = schema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new ManifestMicroBatchStream(table, schema, ignoreDeletes, ignoreChanges,
-            maxFilesPerTrigger, maxRowsPerTrigger, maxBytesPerTrigger,
-            partitionValue, physByLogical)
+          new ManifestMicroBatchStream(d)
       }
     }
 }
@@ -265,16 +218,11 @@ private case class VersionOffset(v: Long) extends Offset {
   override def json(): String = v.toString
 }
 
-private case class ManifestFilePartition(path: String) extends InputPartition
+private case class ManifestFilePartition(path: String, length: Long) extends InputPartition
 
-private class ManifestMicroBatchStream(table: String, schema: StructType,
-    ignoreDeletes: Boolean, ignoreChanges: Boolean,
-    maxFilesPerTrigger: Option[Int],
-    maxRowsPerTrigger: Option[Long],
-    maxBytesPerTrigger: Option[Long],
-    partitionValue: Option[String],
-    physByLogical: Map[String, String])
+private class ManifestMicroBatchStream(d: StreamDef)
   extends MicroBatchStream with SupportsTriggerAvailableNow {
+  import d._
 
   // Trigger.AvailableNow contract: the end offset is FROZEN at prepare
   // time — without this, a concurrent writer keeps advancing the live
@@ -339,14 +287,10 @@ private class ManifestMicroBatchStream(table: String, schema: StructType,
     var files = 0
     var rows = 0L
     var bytes = 0L
-    // incremental walk: one snapshot reconstruction per probed version
-    // (the parent set carries forward), same discipline as addedFiles
-    var prev = if (v < 0) Set.empty[String]
-      else ManifestTable.snapshotFiles(table, v).toSet
-    while (v < head) {
-      val cur = ManifestTable.snapshotFiles(table, v + 1)
-      val add = ManifestStreamSource.addedForOp(table, v + 1,
-        cur.filterNot(prev), ignoreDeletes, ignoreChanges)
+    val adds = ManifestStreamSource.addedByVersion(table, startV, head,
+      ignoreDeletes, ignoreChanges)
+    while (adds.hasNext) {
+      val add = adds.next()
       val addRows =
         if (rowBudget.isEmpty) 0L else add.map(ManifestTable.statsRowCount).sum
       val addBytes =
@@ -363,7 +307,6 @@ private class ManifestMicroBatchStream(table: String, schema: StructType,
       rows += addRows
       bytes += addBytes
       v += 1
-      prev = cur.toSet
       if (fileBudget.exists(files >= _) || rowBudget.exists(rows >= _) ||
         byteBudget.exists(bytes >= _)) return v
     }
@@ -387,9 +330,9 @@ private class ManifestMicroBatchStream(table: String, schema: StructType,
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val added = ManifestStreamSource.addedFiles(table,
+    val added = ManifestStreamSource.addedByVersion(table,
       start.asInstanceOf[VersionOffset].v, end.asInstanceOf[VersionOffset].v,
-      ignoreDeletes, ignoreChanges)
+      ignoreDeletes, ignoreChanges).flatten.toSeq
     // PARTITION-SCOPED STREAM (`option("partitionValue", v)`): only the
     // partition's value-pure files plan — a manifest string match, so a
     // one-partition consumer of a wide feed reads exactly its slice of
@@ -410,119 +353,36 @@ private class ManifestMicroBatchStream(table: String, schema: StructType,
               "compaction) or drop the partitionValue option"))
         added.filter(f => ManifestTable.partitionValueOf(f).contains(v))
     }
-    scoped.map(p => ManifestFilePartition(p): InputPartition).toArray
+    scoped.map(p => ManifestFilePartition(p,
+      java.nio.file.Files.size(java.nio.file.Paths.get(p))): InputPartition).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ManifestReaderFactory(schema, physByLogical)
+  /** Spark's parquet reader for the files' physical schema, built on the
+    * driver under the stream's session conf; the stream's output schema
+    * stays logical, aligned by position. A pre-evolution file lacks the
+    * evolved columns, which the reader null-fills as the batch read does. */
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val spark = SparkSession.active
+    new ManifestReaderFactory(new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, fileSchema, new StructType(), fileSchema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), Bridge.hadoopConf(spark)))
+  }
 }
 
-private class ManifestReaderFactory(schema: StructType,
-    physByLogical: Map[String, String]) extends PartitionReaderFactory {
+private class ManifestReaderFactory(read: PartitionedFile => Iterator[InternalRow])
+  extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val path = partition.asInstanceOf[ManifestFilePartition].path
-    // files store PHYSICAL names (identical to logical outside column
-    // mapping); the stream's output schema stays logical
-    val physOf = schema.fields.map(f => physByLogical.getOrElse(f.name, f.name))
+    val p = partition.asInstanceOf[ManifestFilePartition]
+    val rows = read(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(p.path),
+      0L, p.length, fileSize = p.length))
     new PartitionReader[InternalRow] {
-      private val reader: ParquetReader[Group] =
-        ParquetReader.builder[Group](new GroupReadSupport(),
-          new org.apache.hadoop.fs.Path(path)).withConf(new Configuration()).build()
-      private var rec: Group = _
-      override def next(): Boolean = { rec = reader.read(); rec != null }
-      override def get(): InternalRow =
-        InternalRow.fromSeq(schema.fields.toSeq.zip(physOf).map { case (f, pn) =>
-          // a pre-evolution file simply lacks evolved fields — null-fill,
-          // the same read-time evolution contract as the batch reader
-          if (!rec.getType.containsField(pn)) null
-          else {
-            val idx = rec.getType.getFieldIndex(pn)
-            if (rec.getFieldRepetitionCount(idx) == 0) null
-            else ManifestReaderFactory.convert(rec, idx, 0, f.dataType)
-          }
-        })
-      override def close(): Unit = reader.close()
-    }
-  }
-}
-
-private object ManifestReaderFactory {
-  import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, PrimitiveType}
-  import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
-
-  /** One value at `(field idx, repetition pos)` of `g`, converted to the
-    * Catalyst internal representation of `dt`. The typed transport
-    * covers the engine's whole fixture surface — every scalar the flat
-    * path carried PLUS timestamp (INT64 micros/millis/nanos and legacy
-    * INT96), date, decimal (INT32/INT64/binary unscaled encodings), and
-    * arrays of any supported element (standard 3-level lists and legacy
-    * 2-level repeated) — so `events`-shaped (timestamp) and
-    * `embeddings`-shaped (array<float>) ManifestTables stream through
-    * the DSv2 source instead of falling back to the batch ChangeFeed. */
-  private[sources] def convert(g: Group, idx: Int, pos: Int, dt: DataType): Any = dt match {
-    case LongType => g.getLong(idx, pos)
-    case IntegerType => g.getInteger(idx, pos)
-    case DoubleType => g.getDouble(idx, pos)
-    case FloatType => g.getFloat(idx, pos)
-    case BooleanType => g.getBoolean(idx, pos)
-    case StringType => UTF8String.fromBytes(g.getBinary(idx, pos).getBytes)
-    case BinaryType => g.getBinary(idx, pos).getBytes
-    case DateType => g.getInteger(idx, pos) // days since epoch, both sides
-    case TimestampType =>
-      val pt = g.getType.getType(idx).asPrimitiveType()
-      pt.getPrimitiveTypeName match {
-        case PrimitiveType.PrimitiveTypeName.INT96 =>
-          // legacy 12-byte (nanos-of-day LE, julian-day LE) encoding
-          val b = g.getInt96(idx, pos).toByteBuffer
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val nanosOfDay = b.getLong
-          val julianDay = b.getInt
-          (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
+      private var row: InternalRow = _
+      override def next(): Boolean = rows.hasNext && { row = rows.next(); true }
+      override def get(): InternalRow = row
+      override def close(): Unit = rows match {
+        case c: java.io.Closeable => c.close()
         case _ =>
-          val micros = pt.getLogicalTypeAnnotation match {
-            case t: TimestampLogicalTypeAnnotation => t.getUnit match {
-              case TimeUnit.MILLIS => g.getLong(idx, pos) * 1000L
-              case TimeUnit.NANOS => Math.floorDiv(g.getLong(idx, pos), 1000L)
-              case _ => g.getLong(idx, pos) // MICROS
-            }
-            case _ => g.getLong(idx, pos) // bare INT64: assume micros
-          }
-          micros
       }
-    case d: DecimalType =>
-      val pt = g.getType.getType(idx).asPrimitiveType()
-      pt.getPrimitiveTypeName match {
-        case PrimitiveType.PrimitiveTypeName.INT32 =>
-          Decimal(g.getInteger(idx, pos).toLong, d.precision, d.scale)
-        case PrimitiveType.PrimitiveTypeName.INT64 =>
-          Decimal(g.getLong(idx, pos), d.precision, d.scale)
-        case _ => // FIXED_LEN_BYTE_ARRAY / BINARY: big-endian two's complement
-          val unscaled = new java.math.BigInteger(g.getBinary(idx, pos).getBytes)
-          Decimal(new java.math.BigDecimal(unscaled, d.scale), d.precision, d.scale)
-      }
-    case ArrayType(et, _) =>
-      val list = g.getGroup(idx, pos)
-      val child = list.getType.asInstanceOf[GroupType].getType(0)
-      val n = list.getFieldRepetitionCount(0)
-      val out = new Array[Any](n)
-      var i = 0
-      if (child.isPrimitive) {
-        // legacy 2-level list: `repeated <primitive> element` directly
-        while (i < n) { out(i) = convert(list, 0, i, et); i += 1 }
-      } else {
-        // standard 3-level list: repeated group wraps an optional element
-        while (i < n) {
-          val elem = list.getGroup(0, i)
-          out(i) =
-            if (elem.getFieldRepetitionCount(0) == 0) null
-            else convert(elem, 0, 0, et)
-          i += 1
-        }
-      }
-      new GenericArrayData(out)
-    case other => throw new IllegalArgumentException(
-      s"ManifestStreamSource does not transport $other (supported: long/int/" +
-        "double/float/boolean/string/binary/date/timestamp/decimal/array)")
+    }
   }
 }

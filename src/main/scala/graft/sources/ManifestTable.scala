@@ -212,6 +212,23 @@ object ManifestTable {
   private def synthColMap(fields: Seq[String]): Seq[(Long, String)] =
     fields.zipWithIndex.map { case (f, i) => ((i + 1).toLong, fieldName(f)) }
 
+  /** Split a schema signature on commas at bracket depth 0 only
+    * (parens and angle brackets both nest in type DDL: `DECIMAL(12,2)`,
+    * `STRUCT<...>`), so a comma-bearing type stays one field. */
+  private[graft] def splitTopLevel(sig: String): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    val cur = new StringBuilder
+    var depth = 0
+    sig.foreach {
+      case c @ ('(' | '<') => depth += 1; cur += c
+      case c @ (')' | '>') => depth -= 1; cur += c
+      case ',' if depth == 0 => out += cur.result(); cur.clear()
+      case c => cur += c
+    }
+    if (cur.nonEmpty) out += cur.result()
+    out.result()
+  }
+
   private def fieldName(f: String): String = f.split(":", 2)(0)
   private def fieldType(f: String): String = f.split(":", 2)(1)
 
@@ -222,7 +239,7 @@ object ManifestTable {
 
   /** Physical column names aligned with the snapshot's schema fields
     * (None when the table stores logical names directly). */
-  private def physNamesOf(meta: Map[String, String]): Option[Seq[String]] =
+  private[sources] def physNamesOf(meta: Map[String, String]): Option[Seq[String]] =
     parseColMap(meta).map(_.map(_._2))
 
   /** The physical name a logical column is stored under in this
@@ -233,7 +250,7 @@ object ManifestTable {
     (for {
       sig <- meta.get("schema")
       cm <- parseColMap(meta)
-      idx = ManifestStreamSource.splitTopLevel(sig).indexWhere(fieldName(_) == logical)
+      idx = splitTopLevel(sig).indexWhere(fieldName(_) == logical)
       if idx >= 0 && idx < cm.size
     } yield cm(idx)._2).getOrElse(logical)
 
@@ -263,8 +280,8 @@ object ManifestTable {
     (inner.get("schema"), outer.get("schema")) match {
       case (None, _) | (_, None) => true
       case (Some(is), Some(os)) =>
-        val inf = ManifestStreamSource.splitTopLevel(is)
-        val onf = ManifestStreamSource.splitTopLevel(os)
+        val inf = splitTopLevel(is)
+        val onf = splitTopLevel(os)
         if (inf.size > onf.size) false
         else {
           val iIds = parseColMap(inner).map(_.map(_._1))
@@ -283,7 +300,16 @@ object ManifestTable {
     * deletion-vector lines, comments excluded) — what snapshot-EXTENDING
     * commits (append, streaming append) must carry forward verbatim:
     * dropping a DV line would resurrect its deleted rows. */
-  def snapshotEntries(table: String, version: Long): Seq[String] = {
+  def snapshotEntries(table: String, version: Long): Seq[String] =
+    entriesOf(table, version, manifestLines(table, version))
+
+  private def manifestLines(table: String, v: Long): Seq[String] =
+    Files.readAllLines(manifestPath(table, v)).asScala.toSeq
+
+  /** [[snapshotEntries]] given the version's own manifest lines, which
+    * are read only when no checkpoint answers. */
+  private def entriesOf(table: String, version: Long,
+      head: => Seq[String]): Seq[String] = {
     // a materialized checkpoint answers in one read; otherwise walk the
     // delta chain BACK to the nearest full base (≤ ~CheckpointEvery
     // hops), then fold the deltas forward
@@ -291,11 +317,11 @@ object ManifestTable {
       return Files.readAllLines(checkpointPath(table, version)).asScala.toSeq
         .filter(l => l.nonEmpty && !l.startsWith("#"))
     var v = version
+    var lines = head
     var chain = List.empty[Seq[String]] // deltas, oldest first
     var base: Seq[String] = Seq.empty
     var done = false
     while (!done) {
-      val lines = Files.readAllLines(manifestPath(table, v)).asScala.toSeq
       val content = lines.filter(l => l.nonEmpty && !l.startsWith("#"))
       if (lines.exists(_.startsWith("#base="))) {
         chain = content :: chain
@@ -304,7 +330,7 @@ object ManifestTable {
           base = Files.readAllLines(checkpointPath(table, v)).asScala.toSeq
             .filter(l => l.nonEmpty && !l.startsWith("#"))
           done = true
-        }
+        } else lines = manifestLines(table, v)
       } else { base = content; done = true }
     }
     chain.foldLeft(base) { (prev, delta) =>
@@ -329,17 +355,23 @@ object ManifestTable {
       .filter(_.startsWith(DvPrefix)).map(parseDvLine)
 
   /** A committed snapshot's metadata (`#key=value` header lines). */
-  def snapshotMeta(table: String, version: Long): Map[String, String] = {
-    val m = manifestDir(table).resolve(f"v$version%08d.manifest")
-    Files.readAllLines(m).asScala.toSeq
-      .filter(_.startsWith("#"))
-      .flatMap { l =>
-        l.stripPrefix("#").split("=", 2) match {
-          case Array(k, v) => Some(k -> v)
-          case _ => None
-        }
-      }.toMap
-  }
+  def snapshotMeta(table: String, version: Long): Map[String, String] =
+    metaOf(manifestLines(table, version))
+
+  private def metaOf(lines: Seq[String]): Map[String, String] =
+    lines.filter(_.startsWith("#")).flatMap { l =>
+      l.stripPrefix("#").split("=", 2) match {
+        case Array(k, v) => Some(k -> v)
+        case _ => None
+      }
+    }.toMap
+
+  /** Does this commit only REORGANIZE files (compact, cluster,
+    * compact-small)? Such a commit carries every row, so it is logically
+    * change-free: the change feed derives nothing from it and the stream
+    * source emits none of its files. */
+  private[sources] def reorganizes(meta: Map[String, String]): Boolean =
+    meta.get("op").exists(o => o == "compact" || o == "cluster" || o == "compact-small")
 
   /** The latest snapshot's metadata (empty before the first commit). */
   private def headMeta(table: String): Map[String, String] =
@@ -357,8 +389,12 @@ object ManifestTable {
 
   private val NoBase = Base(-1L, Map.empty, Nil)
 
-  private def snapshot(table: String, version: Long): Base =
-    Base(version, snapshotMeta(table, version), snapshotEntries(table, version))
+  /** One read of the version's manifest serves both its meta and the
+    * head of its entry walk. */
+  private def snapshot(table: String, version: Long): Base = {
+    val lines = manifestLines(table, version)
+    Base(version, metaOf(lines), entriesOf(table, version, lines))
+  }
 
   /** Read a snapshot (latest by default; pass a version for time
     * travel), MERGE-ON-READ: any deletion-vector sidecars in the
@@ -396,9 +432,9 @@ object ManifestTable {
     * COLUMN evolution makes the new column null for pre-evolution
     * files anyway). None when the sig does not round-trip through the
     * DDL parser (never the case for the engine's transport types). */
-  private def sigToSchema(sig: String): Option[org.apache.spark.sql.types.StructType] =
+  private[graft] def sigToSchema(sig: String): Option[org.apache.spark.sql.types.StructType] =
     try Some(org.apache.spark.sql.types.StructType(
-      ManifestStreamSource.splitTopLevel(sig).map { f =>
+      splitTopLevel(sig).map { f =>
         val Array(n, t) = f.split(":", 2)
         org.apache.spark.sql.types.StructField(n,
           org.apache.spark.sql.types.DataType.fromDDL(t), nullable = true)
@@ -1392,8 +1428,8 @@ object ManifestTable {
       case None => bring
       case Some(have) if have == bring => bring
       case Some(have) =>
-        val hf = ManifestStreamSource.splitTopLevel(have)
-        val bf = ManifestStreamSource.splitTopLevel(bring)
+        val hf = splitTopLevel(have)
+        val bf = splitTopLevel(bring)
         if (hf.size > bf.size && hf.take(bf.size) == bf) have
         else if (allowExtend && bf.size > hf.size && bf.take(hf.size) == hf) bring
         else throw new IllegalStateException(
@@ -1411,7 +1447,7 @@ object ManifestTable {
     for {
       sig <- meta.get("schema")
       phys <- physNamesOf(meta)
-    } yield ManifestStreamSource.splitTopLevel(sig).map(fieldName).zip(phys)
+    } yield splitTopLevel(sig).map(fieldName).zip(phys)
 
   /** RENAME COLUMN — a metadata-only commit (the Delta/Iceberg `ALTER
     * TABLE RENAME COLUMN` under column mapping): the snapshot's entries
@@ -1431,7 +1467,7 @@ object ManifestTable {
       val meta = base.meta
       val sig = meta.getOrElse("schema", throw new IllegalStateException(
         s"renameColumn requires a schema-tracked table: $table"))
-      val fields = ManifestStreamSource.splitTopLevel(sig)
+      val fields = splitTopLevel(sig)
       val names = fields.map(fieldName)
       require(names.contains(from), s"no column '$from' in [$sig]")
       require(!names.contains(to), s"column '$to' already exists in [$sig]")
@@ -1458,7 +1494,7 @@ object ManifestTable {
       val meta = base.meta
       val sig = meta.getOrElse("schema", throw new IllegalStateException(
         s"dropColumn requires a schema-tracked table: $table"))
-      val fields = ManifestStreamSource.splitTopLevel(sig)
+      val fields = splitTopLevel(sig)
       val idx = fields.indexWhere(fieldName(_) == name)
       require(idx >= 0, s"no column '$name' in [$sig]")
       require(fields.size > 1, s"cannot drop the only column of $table")
@@ -1601,8 +1637,8 @@ object ManifestTable {
     val bring = schemaSig(df)
     val baseMeta = headMeta(table)
     baseMeta.get("schema").foreach { have =>
-      val hf = ManifestStreamSource.splitTopLevel(have)
-      val bf = ManifestStreamSource.splitTopLevel(bring)
+      val hf = splitTopLevel(have)
+      val bf = splitTopLevel(bring)
       require(bf.size > hf.size && bf.take(hf.size) == hf,
         s"appendEvolve must extend the schema: table has [$have], write brings [$bring]")
     }
@@ -1613,8 +1649,8 @@ object ManifestTable {
     val (evolveMeta, toPhys) = baseCm match {
       case None => (Map.empty[String, String], None)
       case Some(cm) =>
-        val hf = ManifestStreamSource.splitTopLevel(baseMeta("schema"))
-        val bf = ManifestStreamSource.splitTopLevel(bring)
+        val hf = splitTopLevel(baseMeta("schema"))
+        val bf = splitTopLevel(bring)
         val maxId = baseMeta.get("maxcolid").map(_.toLong).getOrElse(cm.map(_._1).max)
         val fresh = bf.drop(hf.size).zipWithIndex.map { case (f, i) =>
           val id = maxId + 1 + i
@@ -2288,13 +2324,10 @@ object ManifestTable {
     import org.apache.spark.sql.functions.{col, lit}
     def tag(df: DataFrame, t: String): DataFrame =
       df.withColumn("_change_type", lit(t)).withColumn("_commit_version", lit(v))
-    // compact and cluster commits are PHYSICAL reorganizations that
-    // carry every row — logically change-free by contract; rename and
+    // reorganizing commits are change-free by contract; rename and
     // drop-column are metadata-only (entries verbatim) and fall out as
     // change-free below (no added/removed files, no DV delta)
-    if (meta.get("op").exists(o =>
-        o == "compact" || o == "cluster" || o == "compact-small"))
-      return None
+    if (reorganizes(meta)) return None
     // every step reads under the RANGE-FINAL signature (prefix-chain
     // checked by the caller), so pre-evolution steps null-fill the
     // evolved columns and the per-version unions stay type-aligned
@@ -2401,10 +2434,10 @@ object ManifestTable {
           (for {
             vSig <- meta.get("schema")
             fSig <- sig
-            idx = ManifestStreamSource.splitTopLevel(vSig)
+            idx = splitTopLevel(vSig)
               .indexWhere(fieldName(_) == k0)
             if idx >= 0
-            f = ManifestStreamSource.splitTopLevel(fSig)
+            f = splitTopLevel(fSig)
             if idx < f.size
           } yield fieldName(f(idx))).getOrElse(k0)
         } match {
@@ -2516,15 +2549,17 @@ object ManifestTable {
       }
       -1L
     }
-    if (committed(latestVersion(table).getOrElse(-1L)) >= batchId) return None
-    val head = headMeta(table)
+    def highWater(v: Long, meta: Map[String, String]): Long =
+      meta.get("lastBatchId").map(_.toLong).getOrElse(committed(v - 1))
+    val headV = latestVersion(table).getOrElse(-1L)
+    val head = if (headV < 0) Map.empty[String, String] else snapshotMeta(table, headV)
+    if (highWater(headV, head) >= batchId) return None
     enforceSchema(table, head, df)
     val staged = stage(df, table, stageMap(head))
     val bring = schemaSig(df)
     var replayed = false
     val v = commit(table, creates = true) { base =>
-      replayed = base.meta.get("lastBatchId").map(_.toLong)
-        .getOrElse(committed(base.version - 1)) >= batchId
+      replayed = highWater(base.version, base.meta) >= batchId
       // lost a race to our own replay: nothing to commit. Otherwise carry
       // FIRST, explicit keys after: mapMeta carries the base's
       // lastBatchId, and this commit's own (higher) batch id must win

@@ -23,6 +23,11 @@ object Bridge {
     case _ => None
   }
 
+  /** The session's Hadoop conf with its session confs merged in — what
+    * Spark's own file scans read with. */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.sessionState.newHadoopConf()
+
   /** Register a native expression under a SQL-callable name (engine API
     * surface: `spark.sql("SELECT dot_product_d(a, b) ...")`). Idempotent:
     * Engine.init runs on every Tables read, and re-registering an existing
