@@ -1,11 +1,11 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graft.{Bridge, TopKPerGroupStrategy}
-import graft.expr.{DotProductD, RewriteDotProduct, RewriteRangeJoin}
+import org.apache.spark.sql.graft.Bridge
 
 /** Per-session engine initialization (idempotent): installs the graft
-  * optimizer rules and SQL-callable native functions on an EXISTING
+  * optimizer rules, planner strategy and SQL-callable native functions
+  * ([[GraftExtensions]]' lists, in their order) on an EXISTING
   * session — required because the driver builds the SparkSession itself
   * (Verify.scala), so build-time SparkSessionExtensions are not an option.
   *
@@ -36,27 +36,16 @@ object Engine {
     // [[graft.sources.ManifestTable]] harvests them like any long.
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     spark.conf.set("fs.AbstractFileSystem.file.impl", classOf[graft.sources.NioLocalFs].getName)
-    if (!spark.experimental.extraOptimizations.contains(RewriteDotProduct)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteDotProduct
+    GraftExtensions.rules.foreach { r =>
+      if (!spark.experimental.extraOptimizations.contains(r))
+        spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ r
     }
-    if (!spark.experimental.extraOptimizations.contains(RewriteRangeJoin)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteRangeJoin
+    GraftExtensions.strategies.foreach { st =>
+      if (!spark.experimental.extraStrategies.contains(st))
+        spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ st
     }
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RewriteSummaryAgg)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RewriteSummaryAgg
+    GraftExtensions.functions.foreach { case (name, _, build) =>
+      Bridge.registerFunction(spark, name, build)
     }
-    if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerGroupStrategy
-    }
-    Bridge.registerFunction(spark, "dot_product_d",
-      exprs => DotProductD(exprs.head, exprs(1)))
-    Bridge.registerFunction(spark, "sq_dist_l",
-      exprs => graft.expr.SqDistL(exprs.head, exprs(1)))
-    Bridge.registerFunction(spark, "minhash_sigs",
-      exprs => graft.expr.MinHashSigs(exprs.head))
   }
 }

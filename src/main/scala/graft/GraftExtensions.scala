@@ -2,9 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.graft.TopKPerGroupStrategy
-import graft.expr.{DotProductD, RewriteDotProduct, RewriteRangeJoin}
+import graft.expr.{DotProductD, MinHashSigs, RewriteDotProduct, RewriteRangeJoin, SqDistL}
 
 /** Build-time installer for the graft engine pieces — the standard
   * packaging path for a Spark library:
@@ -17,8 +20,9 @@ import graft.expr.{DotProductD, RewriteDotProduct, RewriteRangeJoin}
   * native functions on every session built with that config. The runtime
   * twin is [[Engine.init]], which patches an ALREADY-BUILT session (needed
   * by the Verify/Bench drivers, which construct the SparkSession
-  * themselves). Session confs are not extensions: build-time users set
-  * the two that `Engine.init` sets themselves, for example
+  * themselves). Both install the lists of the companion object, in their
+  * order. Session confs are not extensions: build-time users set the two
+  * that `Engine.init` sets themselves, for example
   *
   * {{{
   *   spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS
@@ -27,24 +31,25 @@ import graft.expr.{DotProductD, RewriteDotProduct, RewriteRangeJoin}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => RewriteDotProduct)
-    ext.injectOptimizerRule(_ => RewriteRangeJoin)
-    ext.injectOptimizerRule(_ => graft.plans.RewriteSummaryAgg)
-    ext.injectPlannerStrategy(_ => TopKPerGroupStrategy)
-    ext.injectFunction((
-      FunctionIdentifier("dot_product_d"),
-      new ExpressionInfo(classOf[DotProductD].getName, "dot_product_d"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProductD(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("sq_dist_l"),
-      new ExpressionInfo(classOf[graft.expr.SqDistL].getName, "sq_dist_l"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.expr.SqDistL(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sigs"),
-      new ExpressionInfo(classOf[graft.expr.MinHashSigs].getName, "minhash_sigs"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.expr.MinHashSigs(exprs.head)))
+    GraftExtensions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
+    GraftExtensions.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
   }
+}
+
+/** The engine's session pieces, listed once for both installers. */
+object GraftExtensions {
+  val rules: Seq[Rule[LogicalPlan]] =
+    Seq(RewriteDotProduct, RewriteRangeJoin, graft.plans.RewriteSummaryAgg)
+
+  val strategies: Seq[SparkStrategy] = Seq(TopKPerGroupStrategy)
+
+  /** SQL name, expression class, builder. */
+  val functions: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("dot_product_d", classOf[DotProductD], e => DotProductD(e.head, e(1))),
+    ("sq_dist_l", classOf[SqDistL], e => SqDistL(e.head, e(1))),
+    ("minhash_sigs", classOf[MinHashSigs], e => MinHashSigs(e.head)))
 }

@@ -29,4 +29,20 @@ object Scratch {
   /** Absolute path of a named store inside this JVM's namespace (not
     * created — writers create it). */
   def dir(name: String): String = new java.io.File(root, name).getAbsolutePath
+
+  /** The deterministic root of store `name` over the sf dir `d` (not
+    * created). The "sf" prefix keeps the directory name from starting
+    * with an underscore (the sanitized leading "/"), which would make
+    * it hidden to Spark's file index. */
+  def sfDir(name: String, d: String): String =
+    new java.io.File(dir(name), "sf" + d.replaceAll("[^A-Za-z0-9.]", "_")).getAbsolutePath
+
+  /** [[sfDir]], wiped per call: a lifecycle query's re-run starts its
+    * tables from v0 (committing onto a previous run's snapshots would
+    * change the answer) and leaks no temp dirs. */
+  def fresh(name: String, d: String): String = {
+    val f = sfDir(name, d)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(f))
+    f
+  }
 }

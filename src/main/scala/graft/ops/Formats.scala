@@ -600,9 +600,7 @@ object Formats {
     * table (the pre-manifest ancestor of ManifestTable.deleteWhere's
     * file-level pruning, still the idiom on plain hive layouts). */
   private def qBackfillPartition(s: SparkSession, d: String): DataFrame = {
-    val t = s"${graft.Scratch.dir("graft_backfill")}/" +
-      s"sf${d.replaceAll("[^A-Za-z0-9.]", "_")}_events_by_day"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
+    val t = graft.Scratch.fresh("graft_backfill", d)
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("event_type"),
         (graft.Dsl.dec(col("value")) * 100).cast(LongType).as("cents"),

@@ -961,8 +961,7 @@ object Quality {
     * snapshot scans. */
   private def qManifestDiff(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ManifestTable
-    val t = s"${graft.Scratch.dir("graft_manifest_diff")}/${d.replaceAll("[^A-Za-z0-9.]", "_")}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
+    val t = graft.Scratch.fresh("graft_manifest_diff", d)
     val o = Tables.orders(s, d).select(
       col("o_orderkey").as("k"),
       (dec(col("o_totalprice"), 12, 2) * 100).cast(LongType).as("cents"))
@@ -1034,11 +1033,7 @@ object Quality {
     * lake path with a log-store CAS. */
   private def qTableManifest(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ManifestTable
-    // deterministic scratch table, wiped per call: a re-run must start
-    // from v0 (appending onto a previous run's snapshots would change
-    // the answer), and bench/sweep re-runs must not leak temp dirs
-    val t = s"${graft.Scratch.dir("graft_manifest_q")}/${d.replaceAll("[^A-Za-z0-9.]", "_")}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
+    val t = graft.Scratch.fresh("graft_manifest_q", d)
     val o = Tables.orders(s, d).select(
       col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
       (dec(col("o_totalprice"), 12, 2) * 100).cast(LongType).as("cents"))
@@ -1072,9 +1067,7 @@ object Quality {
     * table never rewrites. */
   private def qGdprErasure(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ManifestTable
-    val t = s"${graft.Scratch.dir("graft_gdpr")}/" +
-      s"sf${d.replaceAll("[^A-Za-z0-9.]", "_")}_events"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
+    val t = graft.Scratch.fresh("graft_gdpr", d)
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("event_type"))
     // order-free ingest slices: one parallel commit wave (see qGdprDv)
@@ -1106,9 +1099,7 @@ object Quality {
     * lazily in maintenance. */
   private def qGdprDv(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ManifestTable
-    val t = s"${graft.Scratch.dir("graft_gdpr_dv")}/" +
-      s"sf${d.replaceAll("[^A-Za-z0-9.]", "_")}_events"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
+    val t = graft.Scratch.fresh("graft_gdpr_dv", d)
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("event_type"))
     // the four user-sliced ingest files land as one parallel wave: the
@@ -1188,9 +1179,7 @@ object Quality {
     * this rewrites every file; with it, the lake stands still. */
   private def qGdprString(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ManifestTable
-    val t = s"${graft.Scratch.dir("graft_gdpr_str")}/" +
-      s"sf${d.replaceAll("[^A-Za-z0-9.]", "_")}_docs"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
+    val t = graft.Scratch.fresh("graft_gdpr_str", d)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
     // four lexicographic source slices (src0 < src1 < src10 < … <
@@ -1244,9 +1233,7 @@ object Quality {
   private def qRetentionDate(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ManifestTable
     import java.time.LocalDate
-    val t = s"${graft.Scratch.dir("graft_retention_date")}/" +
-      s"sf${d.replaceAll("[^A-Za-z0-9.]", "_")}_orders"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
+    val t = graft.Scratch.fresh("graft_retention_date", d)
     val ords = Tables.orders(s, d).select(
       col("o_orderstatus"),
       col("o_orderdate").cast("date").as("o_date"),
@@ -1309,9 +1296,7 @@ object Quality {
     * the lake. */
   private def qBackfillManifest(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ManifestTable
-    val t = s"${graft.Scratch.dir("graft_backfill_mf")}/" +
-      s"sf${d.replaceAll("[^A-Za-z0-9.]", "_")}_events"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
+    val t = graft.Scratch.fresh("graft_backfill_mf", d)
     val ev = Tables.events(s, d).select(col("event_id"), col("event_type"),
       (coalesce(col("value").cast("decimal(12,2)"), lit(0)) * 100)
         .cast("long").as("cents"))
@@ -1369,8 +1354,7 @@ object Quality {
     * stands still; no snapshot diff ever runs. */
   private def qTableCdf(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ManifestTable
-    val t = s"${graft.Scratch.dir("graft_cdf_q")}/${d.replaceAll("[^A-Za-z0-9.]", "_")}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
+    val t = graft.Scratch.fresh("graft_cdf_q", d)
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("event_type"))
     for (b <- 0L to 2L)
@@ -1406,8 +1390,7 @@ object Quality {
     * from a full-table diff. */
   private def qTableCdfMerge(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ManifestTable
-    val t = s"${graft.Scratch.dir("graft_cdf_m")}/${d.replaceAll("[^A-Za-z0-9.]", "_")}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
+    val t = graft.Scratch.fresh("graft_cdf_m", d)
     // null values coalesce to 0 cents: a null-cents "update" would be
     // byte-identical to its preimage and correctly cancel, which the
     // definitional oracle cannot see — normalize instead
@@ -1445,8 +1428,7 @@ object Quality {
     * full ManifestTable an audit pipeline can CDF-consume. */
   private def qExpectations(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ManifestTable
-    val root = s"${graft.Scratch.dir("graft_expect_q")}/${d.replaceAll("[^A-Za-z0-9.]", "_")}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = graft.Scratch.fresh("graft_expect_q", d)
     val (t, qt) = (s"$root/main", s"$root/quarantine")
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
@@ -1487,8 +1469,7 @@ object Quality {
     * correctness independent of the layout. */
   private def qTableZorder(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ManifestTable
-    val t = s"${graft.Scratch.dir("graft_zorder_q")}/${d.replaceAll("[^A-Za-z0-9.]", "_")}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
+    val t = graft.Scratch.fresh("graft_zorder_q", d)
     val li = Tables.lineitem(s, d).select(
       col("l_partkey"), col("l_suppkey"),
       col("l_quantity").cast(LongType).as("qty"))
@@ -1524,8 +1505,7 @@ object Quality {
   private def qScd2Cdf(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ManifestTable
     import org.apache.spark.sql.expressions.Window
-    val t = s"${graft.Scratch.dir("graft_scd2_cdf")}/${d.replaceAll("[^A-Za-z0-9.]", "_")}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
+    val t = graft.Scratch.fresh("graft_scd2_cdf", d)
     val cust = Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment"))
     ManifestTable.append(s, t,
       cust.filter(col("c_custkey") % 2 === 0)
@@ -1572,8 +1552,7 @@ object Quality {
     * column costs one manifest line, not a lake rewrite. */
   private def qTableEvolve(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ManifestTable
-    val t = s"${graft.Scratch.dir("graft_evolve_q")}/${d.replaceAll("[^A-Za-z0-9.]", "_")}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
+    val t = graft.Scratch.fresh("graft_evolve_q", d)
     val o = Tables.orders(s, d).select(
       col("o_orderkey").as("k"),
       (dec(col("o_totalprice"), 12, 2) * 100).cast(LongType).as("cents"))
@@ -1618,8 +1597,7 @@ object Quality {
     * history; the serving read scans ≤ |groups|×batches partial rows. */
   private def qWarehouseLayers(s: SparkSession, d: String): DataFrame = {
     import graft.sources.{ChangeFeed, ManifestTable}
-    val root = s"${graft.Scratch.dir("graft_layers")}/${d.replaceAll("[^A-Za-z0-9.]", "_")}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = graft.Scratch.fresh("graft_layers", d)
     val ods = s"$root/ods"; val dwd = s"$root/dwd"; val dws = s"$root/dws"
     val ev = Tables.events(s, d).select(
       col("event_id"), col("event_type"), col("user_id"), col("value"),
@@ -1854,8 +1832,7 @@ object Quality {
     * by inputFiles in ManifestTableSuite; this row pins the VALUES). */
   private def qTableStatsAgg(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ManifestTable
-    val root = s"${graft.Scratch.dir("graft_statsagg")}/${d.replaceAll("[^A-Za-z0-9.]", "_")}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = graft.Scratch.fresh("graft_statsagg", d)
     val t = s"$root/t"
     val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
       (coalesce(col("value").cast("decimal(12,2)"), lit(0)) * 100)
@@ -1879,9 +1856,7 @@ object Quality {
     * string columns real corpora actually key on. */
   private def qStatsAggString(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ManifestTable
-    val t = s"${graft.Scratch.dir("graft_statsagg_str")}/" +
-      s"sf${d.replaceAll("[^A-Za-z0-9.]", "_")}_docs"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
+    val t = graft.Scratch.fresh("graft_statsagg_str", d)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
     graft.Parallel.run(
@@ -1908,8 +1883,7 @@ object Quality {
 
   private def qTableRestore(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ManifestTable
-    val root = s"${graft.Scratch.dir("graft_restore")}/${d.replaceAll("[^A-Za-z0-9.]", "_")}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = graft.Scratch.fresh("graft_restore", d)
     val t = s"$root/t"
     val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
       (coalesce(col("value").cast("decimal(12,2)"), lit(0)) * 100)
@@ -1950,8 +1924,7 @@ object Quality {
     * contract ([[graft.sources.ManifestTable.renameColumn]]). */
   private def qTableRename(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ManifestTable
-    val root = s"${graft.Scratch.dir("graft_rename")}/${d.replaceAll("[^A-Za-z0-9.]", "_")}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = graft.Scratch.fresh("graft_rename", d)
     val t = s"$root/t"
     val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
       (coalesce(col("value").cast("decimal(12,2)"), lit(0)) * 100)
@@ -1996,8 +1969,7 @@ object Quality {
     * the production lake formats. */
   private def qTableClone(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ManifestTable
-    val root = s"${graft.Scratch.dir("graft_clone")}/${d.replaceAll("[^A-Za-z0-9.]", "_")}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = graft.Scratch.fresh("graft_clone", d)
     val (src, cl) = (s"$root/src", s"$root/clone")
     val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
       (coalesce(col("value").cast("decimal(12,2)"), lit(0)) * 100)
@@ -2031,8 +2003,7 @@ object Quality {
     * never the lake. */
   private def qLayoutBinpack(s: SparkSession, d: String): DataFrame = {
     import graft.sources.ManifestTable
-    val root = s"${graft.Scratch.dir("graft_binpack")}/${d.replaceAll("[^A-Za-z0-9.]", "_")}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = graft.Scratch.fresh("graft_binpack", d)
     val t = s"$root/t"
     val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
       (coalesce(col("value").cast("decimal(12,2)"), lit(0)) * 100)
@@ -2061,8 +2032,7 @@ object Quality {
 
   private def qMvJoin(s: SparkSession, d: String): DataFrame = {
     import graft.sources.{ChangeFeed, ManifestTable}
-    val root = s"${graft.Scratch.dir("graft_mvj")}/${d.replaceAll("[^A-Za-z0-9.]", "_")}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = graft.Scratch.fresh("graft_mvj", d)
     val (ordT, custT, mv) = (s"$root/ord", s"$root/cust", s"$root/mv")
     val (cpO, cpC) = (s"$root/cpo", s"$root/cpc")
     val ord = Tables.orders(s, d).select(
@@ -2141,8 +2111,7 @@ object Quality {
 
   private def qMvUpdates(s: SparkSession, d: String): DataFrame = {
     import graft.sources.{ChangeFeed, ManifestTable}
-    val root = s"${graft.Scratch.dir("graft_mvu")}/${d.replaceAll("[^A-Za-z0-9.]", "_")}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = graft.Scratch.fresh("graft_mvu", d)
     val (ods, mv, cp) = (s"$root/ods", s"$root/mv", s"$root/cp")
     val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
       (coalesce(col("value").cast("decimal(12,2)"), lit(0)) * 100)
@@ -2223,11 +2192,7 @@ object Quality {
   private def qMvIncr(s: SparkSession, d: String): DataFrame = {
     import graft.plans.{MvDef, MvRegistry}
     import graft.sources.{ChangeFeed, ManifestTable}
-    // deterministic scratch root, wiped per call (bench re-runs must
-    // rebuild from batch 0, not append onto a previous run's snapshots)
-    val root = s"${graft.Scratch.dir("graft_mv_incr")}/" +
-      s"sf${d.replaceAll("[^A-Za-z0-9.]", "_")}_events_type_user"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = graft.Scratch.fresh("graft_mv_incr", d)
     val ods = s"$root/ods"; val t = s"$root/mv"
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("event_type"), col("user_id"), col("value"))

@@ -13,11 +13,12 @@ import org.apache.spark.sql.execution.LogicalRDD
 /** Checkpointed incremental consumption of a [[ManifestTable]]'s own
   * commit log — the Trigger.AvailableNow discipline with the manifest
   * VERSION as the offset: each drain computes the row-level changelog
-  * `(lastProcessed, latest]` via [[ManifestTable.readChanges]], hands it
-  * to the consumer, and only then advances the checkpoint. This is what
-  * lets each warehouse layer (ODS→DWD→DWS→ADS) be maintained from the
-  * PREVIOUS layer's table instead of an external stream — the layered
-  * real-time-warehouse architecture closed end-to-end (SURVEY §1.1).
+  * `(lastProcessed, latest]` as [[ManifestTable.readChanges]] does,
+  * hands it to the consumer, and only then advances the checkpoint. This
+  * is what lets each warehouse layer (ODS→DWD→DWS→ADS) be maintained
+  * from the PREVIOUS layer's table instead of an external stream — the
+  * layered real-time-warehouse architecture closed end-to-end (SURVEY
+  * §1.1).
   *
   * Delivery contract: AT-LEAST-ONCE, in PER-VERSION batches. The drain
   * walks the unconsumed versions one commit at a time — process the
@@ -61,19 +62,26 @@ object ChangeFeed {
 
   /** Drain everything the table has committed past this checkpoint,
     * one version per batch: for each unconsumed v, run
-    * `process(readChanges(v−1, v], v−1, v)` then advance the checkpoint
-    * to v. The head version is sampled ONCE at drain start (commits
-    * landing mid-drain wait for the next drain, so a drain always
-    * terminates). Returns the overall processed range, or None when the
-    * feed is already caught up (process not called — a caught-up drain
-    * costs two directory listings).
+    * `process(changelog (v−1, v], v−1, v)` — what `readChanges(v−1, v)`
+    * returns — then advance the checkpoint to v. The head version is
+    * sampled ONCE at drain start (commits landing mid-drain wait for the
+    * next drain, so a drain always terminates). Returns the overall
+    * processed range, or None when the feed is already caught up
+    * (process not called — a caught-up drain costs two directory
+    * listings).
     *
-    * DERIVATION OVERLAPS, DELIVERY DOES NOT. The drain plans its backlog
-    * from manifest metadata first, then derives the changelogs in waves
-    * of `spark.sparkContext.defaultParallelism` versions, the versions
-    * of a wave concurrently ([[graft.Parallel.run]]): committed versions
-    * are immutable, independent inputs, and at a small batch's size the
-    * per-job scheduling, not the compute, sets a derivation's cost. The
+    * ONE FORWARD WALK ([[ManifestTable.commits]]) reads each version's
+    * manifest once; each commit is classified from its metadata and its
+    * changelog derived from the two snapshots the walk holds. The walk is
+    * consumed a wave at a time, so a drain holds one wave's commits (plus
+    * the one peeked at to end the wave).
+    *
+    * DERIVATION OVERLAPS, DELIVERY DOES NOT. The drain derives the
+    * changelogs in waves of `spark.sparkContext.defaultParallelism`
+    * versions, the versions of a wave concurrently
+    * ([[graft.Parallel.run]]): committed versions are immutable,
+    * independent inputs, and at a small batch's size the per-job
+    * scheduling, not the compute, sets a derivation's cost. The
     * delivery contract is unchanged: one `process` call per version, in
     * version order, the checkpoint advanced after each. A version whose
     * derivation fails surfaces its error when the drain reaches it,
@@ -124,22 +132,23 @@ object ChangeFeed {
     val to = ManifestTable.latestVersion(table).getOrElse(-1L)
     if (to <= from) return None
     val width = math.max(1, spark.sparkContext.defaultParallelism)
-    var pending = backlog(table, from, to)
-    while (pending.nonEmpty) {
-      val (wave, rest) = nextWave(pending, width)
-      val held = derive(spark, table, wave.collect { case Step(v, _, Derive) => v })
-      try wave.foreach { case Step(v, meta, kind) =>
+    val steps = ManifestTable.commits(table, from, to).map(c => Step(c, kindOf(c))).buffered
+    while (steps.hasNext) {
+      val wave = nextWave(steps, width)
+      val held = derive(spark, table, wave.collect { case Step(c, Derive) => c })
+      try wave.foreach { case Step(c, kind) =>
+        val v = c.version
         kind match {
           // a rename delivers no rows but re-labels every later batch's
           // columns — give name-pinned consumers their adaptation hook
-          case Relabel => onSchemaRelabel.foreach(_(meta("schema"), v))
+          case Relabel => onSchemaRelabel.foreach(_(c.meta("schema"), v))
           case Skip => ()
           case Boundary =>
-            val sig = meta("schema")
+            val sig = c.meta("schema")
             onEpochRestart.getOrElse(throw new IllegalStateException(
               s"$table v$v starts a new schema epoch ([$sig]); pass " +
                 "onEpochRestart to let the feed segment across it"))(sig, v)
-            process(ManifestTable.read(spark, table, Some(v))
+            process(ManifestTable.readBase(spark, table, c.cur)
               .withColumn("_change_type", lit("insert"))
               .withColumn("_commit_version", lit(v)), v - 1, v)
           case Derive =>
@@ -148,7 +157,6 @@ object ChangeFeed {
         }
         advance(checkpoint, v)
       } finally held.values.foreach(_.foreach(release)) // the undelivered rest
-      pending = rest
     }
     Some((from, to))
   }
@@ -160,57 +168,49 @@ object ChangeFeed {
     * idempotentAppend would otherwise publish one empty snapshot version
     * per upstream reorg, inflating the downstream history for no data. */
   private case object Skip extends Kind
-  /** A rename: change-free too, but fires `onSchemaRelabel`. */
+  /** A rename: change-free too (never an epoch boundary — the feed rides
+    * through in the new names), but fires `onSchemaRelabel`. */
   private case object Relabel extends Kind
-  /** A non-additive schema change: `onEpochRestart`, then the snapshot. */
+  /** A non-additive schema change ([[ManifestTable.Commit.boundary]]):
+    * `onEpochRestart`, then the snapshot. */
   private case object Boundary extends Kind
   /** Everything else: the changelog `(v−1, v]`. */
   private case object Derive extends Kind
 
-  private final case class Step(v: Long, meta: Map[String, String], kind: Kind)
+  private final case class Step(c: ManifestTable.Commit, kind: Kind)
 
-  /** The drain's plan, from manifest metadata only: one header read per
-    * version (each version's meta doubles as the next one's v−1). */
-  private def backlog(table: String, from: Long, to: Long): Seq[Step] = {
-    val versions = ((from + 1) to to).toVector
-    val metas = versions.map(ManifestTable.snapshotMeta(table, _))
-    val prevs =
-      (if (from >= 0) ManifestTable.snapshotMeta(table, from) else Map.empty[String, String]) +: metas
-    versions.lazyZip(metas).lazyZip(prevs).map { (v, meta, prev) =>
-      val op = meta.get("op")
-      val kind =
-        if (op.contains("rename")) Relabel
-        else if (ManifestTable.reorganizes(meta)) Skip
-        else if (epochBoundary(prev, meta)) Boundary
-        else Derive
-      Step(v, meta, kind)
-    }
-  }
+  private def kindOf(c: ManifestTable.Commit): Kind =
+    if (c.meta.get("op").contains("rename")) Relabel
+    else if (c.reorganizes) Skip
+    else if (c.boundary) Boundary
+    else Derive
 
-  /** Split off the next wave: an epoch boundary alone (its handler runs,
-    * or the drain fails, before any later version is derived), else the
-    * steps before the next boundary holding at most `width` versions to
-    * derive. */
-  private def nextWave(steps: Seq[Step], width: Int): (Seq[Step], Seq[Step]) =
-    if (steps.head.kind == Boundary) steps.splitAt(1)
+  /** Take the next wave off the walk: an epoch boundary alone (its
+    * handler runs, or the drain fails, before any later version is
+    * derived), else the steps before the next boundary holding at most
+    * `width` versions to derive. */
+  private def nextWave(steps: BufferedIterator[Step], width: Int): Seq[Step] =
+    if (steps.head.kind == Boundary) Seq(steps.next())
     else {
-      val cut = steps.indexWhere(_.kind == Boundary) match {
-        case -1 => steps.size
-        case i => i
+      val wave = Seq.newBuilder[Step]
+      var derived = 0
+      while (steps.hasNext && steps.head.kind != Boundary &&
+        (steps.head.kind != Derive || derived < width)) {
+        if (steps.head.kind == Derive) derived += 1
+        wave += steps.next()
       }
-      val derived = steps.take(cut).zipWithIndex.collect { case (Step(_, _, Derive), i) => i }
-      steps.splitAt(if (derived.size > width) derived(width) else cut)
+      wave.result()
     }
 
-  /** Derive the changelogs of `versions` concurrently, each materialized
+  /** Derive the changelogs of `commits` concurrently, each materialized
     * once (an eager local checkpoint), so the consumer's reads of a batch
     * run no derivation job. A version whose derivation fails keeps its
     * failure, surfacing when the drain reaches it. */
   private def derive(spark: SparkSession, table: String,
-      versions: Seq[Long]): scala.collection.mutable.Map[Long, Try[DataFrame]] = {
+      commits: Seq[ManifestTable.Commit]): scala.collection.mutable.Map[Long, Try[DataFrame]] = {
     val out = new ConcurrentHashMap[Long, Try[DataFrame]]()
-    try graft.Parallel.run(versions.map { v => () =>
-      out.put(v, Try(ManifestTable.readChanges(spark, table, v - 1, v)
+    try graft.Parallel.run(commits.map { c => () =>
+      out.put(c.version, Try(ManifestTable.changesOf(spark, table, c)
         .localCheckpoint(eager = true)))
     }: _*)
     catch { case e: Throwable =>
@@ -229,15 +229,4 @@ object ChangeFeed {
       case r: LogicalRDD => r.rdd.unpersist(blocking = false)
       case _ => ()
     }
-
-  /** True iff a commit rewrote the schema NON-additively relative to
-    * its predecessor — the epoch boundary [[ManifestTable.readChanges]]
-    * rejects ranges across. Delegates to the field-id-aware prefix rule
-    * ([[ManifestTable.sigPrefixCompatible]]): a RENAME is NOT a boundary
-    * (ids/physical/types unchanged — the feed rides through, emitting
-    * the new logical names from its commit on); a DROP or type change
-    * is. Legacy commits without a recorded schema never bound. */
-  private def epochBoundary(prevMeta: Map[String, String],
-      meta: Map[String, String]): Boolean =
-    !ManifestTable.sigPrefixCompatible(prevMeta, meta)
 }

@@ -19,7 +19,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Delta-streaming-source shape on the miniature log format: the offset
   * is the committed manifest VERSION, a micro-batch is "every data file
   * the commits in `(startV, endV]` ADDED", and restart replays exactly
-  * the unconsumed version suffix from the engine's own checkpoint.
+  * the unconsumed version suffix from the engine's own checkpoint. The
+  * versions come from the log's one forward walk
+  * ([[ManifestTable.commits]], shared with the change feed), which reads
+  * each version's manifest once.
   *
   * {{{
   *   spark.readStream.format("graft.sources.ManifestStreamSource")
@@ -118,31 +121,21 @@ object ManifestStreamSource {
 
   /** Each version's newly-visible data files in `(startV, endV]` under
     * the source's op semantics (driver-side, metadata only), one element
-    * per version and lazily, so admission control can stop early. The
-    * walk is INCREMENTAL — each version's file list reconstructs once
-    * and serves as the next version's parent — so an N-version backlog
-    * costs N+1 snapshot reconstructions, not 2N. */
+    * per version and lazily from the forward walk, so admission control
+    * can stop early: an N-version backlog costs one snapshot
+    * reconstruction plus N manifest reads. */
   private[sources] def addedByVersion(table: String, startV: Long, endV: Long,
-      ignoreDeletes: Boolean, ignoreChanges: Boolean): Iterator[Seq[String]] = {
-    if (endV <= startV) return Iterator.empty
-    var prev = if (startV < 0) Set.empty[String]
-      else ManifestTable.snapshotFiles(table, startV).toSet
-    (startV + 1 to endV).iterator.map { v =>
-      val cur = ManifestTable.snapshotFiles(table, v)
-      val out = addedForOp(table, v, cur.filterNot(prev), ignoreDeletes, ignoreChanges)
-      prev = cur.toSet
-      out
-    }
-  }
+      ignoreDeletes: Boolean, ignoreChanges: Boolean): Iterator[Seq[String]] =
+    ManifestTable.commits(table, startV, endV)
+      .map(addedForOp(table, _, ignoreDeletes, ignoreChanges))
 
-  /** One version's newly-visible files under the op semantics, given the
-    * raw added-file set. */
-  private def addedForOp(table: String, v: Long, added: Seq[String],
+  /** One commit's newly-visible files under the op semantics. */
+  private def addedForOp(table: String, c: ManifestTable.Commit,
       ignoreDeletes: Boolean, ignoreChanges: Boolean): Seq[String] = {
-    val meta = ManifestTable.snapshotMeta(table, v)
+    val (v, added) = (c.version, c.added)
     // physical reorg, logical identity
-    if (ManifestTable.reorganizes(meta)) return Seq.empty
-    meta.getOrElse("op", "unknown") match {
+    if (c.reorganizes) return Seq.empty
+    c.meta.getOrElse("op", "unknown") match {
       case "append" | "streaming-append" => added
       // ADD-COLUMN evolution is still an insert-only commit: its files
       // stream like any append. A stream defined BEFORE the evolution
@@ -160,7 +153,7 @@ object ManifestStreamSource {
       // contract as a delete commit: skip with ignoreDeletes, or
       // consume the row-level truth via readChanges/ChangeFeed.
       case "clone" =>
-        if (ManifestTable.snapshotDvs(table, v).isEmpty) added
+        if (c.cur.dvLines.isEmpty) added
         else if (ignoreDeletes) Seq.empty
         else throw new IllegalStateException(
           s"commit v$v of $table is a CLONE carrying deletion vectors — " +

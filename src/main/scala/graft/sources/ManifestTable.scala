@@ -306,37 +306,44 @@ object ManifestTable {
   private def manifestLines(table: String, v: Long): Seq[String] =
     Files.readAllLines(manifestPath(table, v)).asScala.toSeq
 
+  /** A manifest's entry lines (header comments and blank lines dropped). */
+  private def contentOf(lines: Seq[String]): Seq[String] =
+    lines.filter(l => l.nonEmpty && !l.startsWith("#"))
+
+  /** The entries at a version from its manifest `lines` and the entries
+    * before it: a delta (`#base=v-1`) applies its `-`/`+` lines to
+    * `prev`, a full list (v0, a clone, a legacy manifest) replaces it —
+    * for [[entriesOf]]' backward chain walk and [[commits]]' forward one. */
+  private def applyManifest(prev: Seq[String], lines: Seq[String]): Seq[String] = {
+    val content = contentOf(lines)
+    if (!lines.exists(_.startsWith("#base="))) content
+    else {
+      val removes = content.collect { case l if l.startsWith("-") => l.drop(1) }.toSet
+      val adds = content.collect { case l if l.startsWith("+") => l.drop(1) }
+      prev.filterNot(removes) ++ adds
+    }
+  }
+
   /** [[snapshotEntries]] given the version's own manifest lines, which
-    * are read only when no checkpoint answers. */
+    * are read only when no checkpoint answers. A materialized checkpoint
+    * answers in one read; otherwise walk the delta chain BACK to the
+    * nearest checkpoint or full base (≤ ~CheckpointEvery hops), then
+    * fold the manifests forward. */
   private def entriesOf(table: String, version: Long,
       head: => Seq[String]): Seq[String] = {
-    // a materialized checkpoint answers in one read; otherwise walk the
-    // delta chain BACK to the nearest full base (≤ ~CheckpointEvery
-    // hops), then fold the deltas forward
-    if (Files.exists(checkpointPath(table, version)))
-      return Files.readAllLines(checkpointPath(table, version)).asScala.toSeq
-        .filter(l => l.nonEmpty && !l.startsWith("#"))
-    var v = version
-    var lines = head
-    var chain = List.empty[Seq[String]] // deltas, oldest first
-    var base: Seq[String] = Seq.empty
-    var done = false
-    while (!done) {
-      val content = lines.filter(l => l.nonEmpty && !l.startsWith("#"))
-      if (lines.exists(_.startsWith("#base="))) {
-        chain = content :: chain
+    def checkpoint(v: Long): Option[Seq[String]] =
+      Some(checkpointPath(table, v)).filter(Files.exists(_))
+        .map(p => contentOf(Files.readAllLines(p).asScala.toSeq))
+    checkpoint(version).getOrElse {
+      var v = version
+      var chain = List(head) // manifests, oldest first
+      var base = Option.empty[Seq[String]]
+      while (base.isEmpty && chain.head.exists(_.startsWith("#base="))) {
         v -= 1
-        if (Files.exists(checkpointPath(table, v))) {
-          base = Files.readAllLines(checkpointPath(table, v)).asScala.toSeq
-            .filter(l => l.nonEmpty && !l.startsWith("#"))
-          done = true
-        } else lines = manifestLines(table, v)
-      } else { base = content; done = true }
-    }
-    chain.foldLeft(base) { (prev, delta) =>
-      val removes = delta.collect { case l if l.startsWith("-") => l.drop(1) }.toSet
-      val adds = delta.collect { case l if l.startsWith("+") => l.drop(1) }
-      prev.filterNot(removes) ++ adds
+        base = checkpoint(v)
+        if (base.isEmpty) chain = manifestLines(table, v) :: chain
+      }
+      chain.foldLeft(base.getOrElse(Nil))(applyManifest)
     }
   }
 
@@ -366,13 +373,6 @@ object ManifestTable {
       }
     }.toMap
 
-  /** Does this commit only REORGANIZE files (compact, cluster,
-    * compact-small)? Such a commit carries every row, so it is logically
-    * change-free: the change feed derives nothing from it and the stream
-    * source emits none of its files. */
-  private[sources] def reorganizes(meta: Map[String, String]): Boolean =
-    meta.get("op").exists(o => o == "compact" || o == "cluster" || o == "compact-small")
-
   /** The latest snapshot's metadata (empty before the first commit). */
   private def headMeta(table: String): Map[String, String] =
     latestVersion(table).fold(Map.empty[String, String])(snapshotMeta(table, _))
@@ -380,11 +380,18 @@ object ManifestTable {
   /** One committed snapshot as a read plans on it and a commit builds on
     * it: its version (-1 before the first commit), its metadata and its
     * entries, split into data files and deletion-vector lines. */
-  private final case class Base(version: Long, meta: Map[String, String],
+  private[sources] final case class Base(version: Long, meta: Map[String, String],
       entries: Seq[String]) {
     val (dvLines, files) = entries.partition(_.startsWith(DvPrefix))
     def dvInfo: Seq[(String, Seq[String])] = dvLines.map(parseDvLine)
     def dvs: Seq[String] = dvInfo.map(_._1)
+    /** Data files the DV lines may tombstone: the recorded targets, or
+      * every file when a legacy DV line records none. */
+    lazy val dvTargets: Set[String] = {
+      val info = dvInfo
+      if (info.exists(_._2.isEmpty)) files.toSet
+      else files.toSet.intersect(info.flatMap(_._2).toSet)
+    }
   }
 
   private val NoBase = Base(-1L, Map.empty, Nil)
@@ -395,6 +402,43 @@ object ManifestTable {
     val lines = manifestLines(table, version)
     Base(version, metaOf(lines), entriesOf(table, version, lines))
   }
+
+  /** One committed version as the forward walk sees it: the snapshots
+    * before it (`prev`; [[NoBase]] before v0) and at it (`cur`). */
+  private[sources] final case class Commit(prev: Base, cur: Base) {
+    def version: Long = cur.version
+    def meta: Map[String, String] = cur.meta
+    lazy val added: Seq[String] = cur.files.filterNot(prev.files.toSet)
+    lazy val removed: Seq[String] = prev.files.filterNot(cur.files.toSet)
+    /** Only REORGANIZES files (compact, cluster, compact-small): every
+      * row carries, so the change feed and the stream source skip it. */
+    def reorganizes: Boolean =
+      meta.get("op").exists(o => o == "compact" || o == "cluster" || o == "compact-small")
+    /** Starts a new schema epoch: a drop or type change (not a rename
+      * or an added column) against its predecessor. */
+    def boundary: Boolean = !sigPrefixCompatible(prev.meta, meta)
+  }
+
+  /** THE FORWARD WALK behind every incremental reader ([[readChanges]],
+    * [[ChangeFeed]], [[ManifestStreamSource]]): the commits `(from, to]`,
+    * oldest first and lazily. The `from` snapshot is reconstructed once,
+    * then each version's manifest is read once and applied to the
+    * previous entries; an expired manifest throws when reached. */
+  private[sources] def commits(table: String, from: Long, to: Long): Iterator[Commit] =
+    if (to <= from) Iterator.empty
+    else {
+      var prev = if (from < 0) NoBase else snapshot(table, from)
+      ((from + 1) to to).iterator.map { v =>
+        val lines = manifestLines(table, v)
+        val c = Commit(prev, Base(v, metaOf(lines), applyManifest(prev.entries, lines)))
+        prev = c.cur
+        c
+      }
+    }
+
+  /** Read a snapshot the caller already holds, as [[read]] does. */
+  private[sources] def readBase(spark: SparkSession, table: String, b: Base): DataFrame =
+    scan(spark, planOn(table, b, Nil, None))
 
   /** Read a snapshot (latest by default; pass a version for time
     * travel), MERGE-ON-READ: any deletion-vector sidecars in the
@@ -1286,14 +1330,7 @@ object ManifestTable {
     import org.apache.spark.sql.functions.{col => c, lit, count, min, max,
       least, greatest, regexp_replace}
     val b = plan(table, None, Nil).base
-    val (meta, files, dvInfo) = (b.meta, b.files, b.dvInfo)
-    val dvs = dvInfo.map(_._1)
-    // a legacy DV line with no recorded targets could tombstone ANY
-    // file — poison them all (same conservatism compact() applies)
-    val dvTargets =
-      (dvInfo.filter(_._2.nonEmpty).flatMap(_._2) ++
-        (if (dvInfo.exists(_._2.isEmpty)) files else Seq.empty))
-        .distinct.filter(files.toSet).toSet
+    val (meta, files, dvs, dvTargets) = (b.meta, b.files, b.dvs, b.dvTargets)
     val sig = meta.get("schema")
     val phys = physNamesOf(meta)
     // sidecar stats key on PHYSICAL names; the caller's cols are logical
@@ -1557,11 +1594,8 @@ object ManifestTable {
   def compactSmall(spark: SparkSession, table: String, minRows: Long,
       files: Int = 1): Long =
     commit(table) { base =>
-      val (baseMeta, fs, dvInfo) = (base.meta, base.files, base.dvInfo)
-      val dvTargets =
-        (dvInfo.filter(_._2.nonEmpty).flatMap(_._2) ++
-          (if (dvInfo.exists(_._2.isEmpty)) fs else Seq.empty)).toSet
-      val small = fs.filter(f => !dvTargets.contains(f) && statsRowCount(f) < minRows)
+      val (baseMeta, fs) = (base.meta, base.files)
+      val small = fs.filter(f => !base.dvTargets.contains(f) && statsRowCount(f) < minRows)
       val pcol = baseMeta.get("partcol")
       val (marked0, unmarked) =
         small.partition(f => pcol.isDefined && partitionValueOf(f).isDefined)
@@ -2187,10 +2221,8 @@ object ManifestTable {
     * snapshot carries no DVs. */
   def compact(spark: SparkSession, table: String): Long =
     commit(table) { base =>
-      val (info, files) = (base.dvInfo, base.files)
-      val affected: Seq[String] =
-        if (info.exists(_._2.isEmpty)) files // legacy DV line: full rewrite
-        else files.filter(info.flatMap(_._2).toSet)
+      val files = base.files
+      val affected = files.filter(base.dvTargets)
       val untouched = files.filterNot(affected.toSet)
       // the committed signature rides along: after an appendEvolve the
       // affected set can mix schema epochs, and an unsigned scan would
@@ -2198,7 +2230,7 @@ object ManifestTable {
       // from the rewrite. The rewrite scans AND stages in PHYSICAL
       // names — a compaction must not bake the current logical labels
       // into the files (the next rename would otherwise need a rewrite).
-      Option.when(info.nonEmpty) {
+      Option.when(base.dvLines.nonEmpty) {
         val staged =
           if (affected.isEmpty) Seq.empty
           else stage(scanPhysical(spark, affected, base.dvs,
@@ -2275,7 +2307,9 @@ object ManifestTable {
     * DV-erasure's feed is tombstone-sized while the lake stands still.
     * `compact` commits are skipped by definition (physical reorg,
     * logical identity — the DV materialization proof is [[compact]]'s
-    * own contract). `fromV = -1` feeds from table creation.
+    * own contract). `fromV = -1` feeds from table creation. After the
+    * end version's header (feature check, final schema), one forward
+    * walk ([[commits]]) reads each version's manifest once.
     *
     * Constraints: the range must lie within RETAINED history (reading
     * past [[expireVersions]] throws on the missing manifest — the same
@@ -2287,30 +2321,47 @@ object ManifestTable {
     * change (overwrite evolution: narrowing, renames, type changes) is
     * rejected; consume up to it, then restart the feed. */
   def readChanges(spark: SparkSession, table: String, fromV: Long, toV: Long): DataFrame = {
-    import org.apache.spark.sql.functions.lit
     val latest = latestVersion(table).getOrElse(
       throw new IllegalStateException(s"no committed snapshot in $table"))
     require(-1L <= fromV && fromV <= toV && toV <= latest,
       s"invalid change range ($fromV, $toV] for $table at version $latest")
-    val finalMeta = snapshotMeta(table, toV)
-    requireSupported(table, toV, finalMeta)
-    val finalSig = finalMeta.get("schema")
-    val finalPhys = physNamesOf(finalMeta)
+    val endMeta = snapshotMeta(table, toV)
+    requireSupported(table, toV, endMeta)
+    val (sig, phys) = (endMeta.get("schema"), physNamesOf(endMeta))
     // compatibility is FIELD-ID-aware ([[sigPrefixCompatible]]): renames
     // ride through (ids/physical/types unchanged — the changelog emits
     // in the END version's logical names, Delta CDF's column-mapping
     // behavior); adds null-fill; drops and type changes bound the epoch
-    val metas = (math.max(fromV, 0L) to toV).map(v => v -> snapshotMeta(table, v)).toMap
-    metas.values.foreach { meta =>
-      require(sigPrefixCompatible(meta, finalMeta),
+    def compatible(meta: Map[String, String]): Unit =
+      require(sigPrefixCompatible(meta, endMeta),
         s"schema changed non-additively (or a column was dropped) inside the " +
           s"change range ($fromV, $toV] of $table — consume each schema epoch " +
           "separately")
-    }
-    val steps = ((fromV + 1) to toV)
-      .flatMap(v => changesAt(spark, table, v, metas(v), finalSig, finalPhys))
+    val steps = commits(table, fromV, toV).flatMap { c =>
+      if (c.version == fromV + 1) compatible(c.prev.meta)
+      compatible(c.meta)
+      changesAt(spark, table, c, sig, phys)
+    }.toVector
+    changelog(spark, table, steps, snapshot(table, toV))
+  }
+
+  /** One commit's changelog — [[ChangeFeed]]'s per-version batch, from
+    * the [[Commit]] it holds; the caller rules out an epoch boundary. */
+  private[sources] def changesOf(spark: SparkSession, table: String,
+      c: Commit): DataFrame = {
+    requireSupported(table, c.version, c.meta)
+    changelog(spark, table,
+      changesAt(spark, table, c, c.meta.get("schema"), physNamesOf(c.meta)).toSeq, c.cur)
+  }
+
+  /** The union of per-commit `steps`, or — when every commit was
+    * change-free — an empty changelog in the schema of `end`, the
+    * range's last snapshot. */
+  private def changelog(spark: SparkSession, table: String, steps: Seq[DataFrame],
+      end: => Base): DataFrame = {
+    import org.apache.spark.sql.functions.lit
     if (steps.nonEmpty) steps.reduce(_ union _)
-    else read(spark, table, Some(toV)).limit(0)
+    else readBase(spark, table, end).limit(0)
       .withColumn("_change_type", lit("insert"))
       .withColumn("_commit_version", lit(0L))
       .limit(0)
@@ -2318,36 +2369,28 @@ object ManifestTable {
 
   /** One commit's row-level changes (None when provably change-free):
     * the per-version step of [[readChanges]]. */
-  private def changesAt(spark: SparkSession, table: String, v: Long,
-      meta: Map[String, String], sig: Option[String],
-      phys: Option[Seq[String]]): Option[DataFrame] = {
+  private def changesAt(spark: SparkSession, table: String, c: Commit,
+      sig: Option[String], phys: Option[Seq[String]]): Option[DataFrame] = {
     import org.apache.spark.sql.functions.{col, lit}
+    val (v, meta) = (c.version, c.meta)
     def tag(df: DataFrame, t: String): DataFrame =
       df.withColumn("_change_type", lit(t)).withColumn("_commit_version", lit(v))
     // reorganizing commits are change-free by contract; rename and
     // drop-column are metadata-only (entries verbatim) and fall out as
     // change-free below (no added/removed files, no DV delta)
-    if (reorganizes(meta)) return None
+    if (c.reorganizes) return None
     // every step reads under the RANGE-FINAL signature (prefix-chain
     // checked by the caller), so pre-evolution steps null-fill the
     // evolved columns and the per-version unions stay type-aligned
-    // each snapshot's entries are reconstructed ONCE (a delta-chain
-    // walk), then split into data files and DV lines
-    def filesAndDvs(entries: Seq[String]): (Seq[String], Seq[(String, Seq[String])]) = {
-      val (dvLines, files) = entries.partition(_.startsWith(DvPrefix))
-      (files, dvLines.map(parseDvLine))
-    }
-    val (prevFiles, prevDvInfo) =
-      filesAndDvs(if (v == 0) Seq.empty else snapshotEntries(table, v - 1))
-    val (curFiles, curDvInfo) = filesAndDvs(snapshotEntries(table, v))
+    val (prevFiles, prevDvInfo) = (c.prev.files, c.prev.dvInfo)
+    val (curFiles, curDvInfo) = (c.cur.files, c.cur.dvInfo)
+    val (added, removed) = (c.added, c.removed)
     val prevDvs = prevDvInfo.map(_._1)
     val curDvs = curDvInfo.map(_._1)
-    val added = curFiles.filterNot(prevFiles.toSet)
-    val removed = prevFiles.filterNot(curFiles.toSet)
     val dvNew = curDvInfo.filterNot(d => prevDvs.contains(d._1))
     val arriving: Option[DataFrame] =
       if (added.isEmpty) None
-      else Some(readFiles(spark, added, curDvInfo.map(_._1), sig, phys))
+      else Some(readFiles(spark, added, curDvs, sig, phys))
     // rows whose positions a DV set newly covers (tombstoned) or stops
     // covering (resurrected — a [[restore]] to a pre-erasure version is
     // the producer) in files that SURVIVE into v. One shape, two

@@ -776,47 +776,108 @@ class ChangeFeedSuite extends SparkSuite {
     // property — for random schedules over every commit class, the
     // changelog of ANY version range must replay the from-snapshot into
     // the to-snapshot exactly (multiset both ways, via assertReplays).
+    // Three long schedules run past two log checkpoints and then expire
+    // history (runLong below).
     import java.util.concurrent.Executors
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
-    def runSchedule(seed: Int): Unit = {
+    // one random commit per call: append, delete, merge, overwrite or
+    // compact (a delete or compact with nothing to do commits nothing)
+    def randomCommit(rng: scala.util.Random, t: String, fresh: Int => DataFrame,
+        nextId: () => Long, mergedUpTo: Long => Unit): Unit =
+      rng.nextInt(10) match {
+        case 0 | 1 | 2 => ManifestTable.append(spark, t, fresh(10 + rng.nextInt(20)).coalesce(1))
+        case 3 | 4 =>
+          val lo = rng.nextLong(math.max(nextId(), 1L))
+          ManifestTable.deleteWhere(spark, t, "id", lo,
+            lo + (if (rng.nextBoolean()) rng.nextInt(3).toLong else rng.nextInt(40).toLong))
+        case 5 | 6 =>
+          // merge: half updates to existing ids, half fresh inserts
+          val base = rng.nextLong(math.max(nextId(), 1L))
+          val upd = spark.range(base, base + 10)
+            .select(col("id"), (col("id") % 10).as("k"), (col("id") * 7).as("v"))
+          ManifestTable.merge(spark, t, upd, "id")
+          mergedUpTo(base + 10)
+        case 7 => ManifestTable.overwrite(spark, t, fresh(15).coalesce(1))
+        case _ => ManifestTable.compact(spark, t)
+      }
+    // `long`: commit until the log runs past two checkpoints (v16, v32)
+    def runSchedule(seed: Int, long: Boolean = false): String = {
       val rng = new scala.util.Random(9100 + seed)
       val t = freshTable()
       var nextId = 0L
       def fresh(n: Int) = {
         val df = rows(nextId, nextId + n); nextId += n; df
       }
+      def commitOnce(): Unit =
+        randomCommit(rng, t, fresh, () => nextId, e => nextId = math.max(nextId, e))
       ManifestTable.append(spark, t, fresh(30).coalesce(1))
-      for (_ <- 0 until (3 + rng.nextInt(3))) {
-        rng.nextInt(10) match {
-          case 0 | 1 | 2 => ManifestTable.append(spark, t, fresh(10 + rng.nextInt(20)).coalesce(1))
-          case 3 | 4 =>
-            val lo = rng.nextLong(math.max(nextId, 1L))
-            ManifestTable.deleteWhere(spark, t, "id", lo,
-              lo + (if (rng.nextBoolean()) rng.nextInt(3).toLong else rng.nextInt(40).toLong))
-          case 5 | 6 =>
-            // merge: half updates to existing ids, half fresh inserts
-            val base = rng.nextLong(math.max(nextId, 1L))
-            val upd = spark.range(base, base + 10)
-              .select(col("id"), (col("id") % 10).as("k"), (col("id") * 7).as("v"))
-            ManifestTable.merge(spark, t, upd, "id")
-            nextId = math.max(nextId, base + 10)
-          case 7 => ManifestTable.overwrite(spark, t, fresh(15).coalesce(1))
-          case _ => ManifestTable.compact(spark, t)
-        }
-      }
+      if (long) {
+        val target = 34 + rng.nextInt(6)
+        while (ManifestTable.latestVersion(t).get < target) commitOnce()
+      } else for (_ <- 0 until (3 + rng.nextInt(3))) commitOnce()
       val latest = ManifestTable.latestVersion(t).get
       assertReplays(t, -1, latest)
       // and an arbitrary interior range
       val from = rng.nextLong(latest + 1) - 1 // in [-1, latest)
       assertReplays(t, from, latest)
+      t
+    }
+    // past the checkpoints, the drain and the stream source walk the
+    // same log: the drain's per-version batches are exactly the range
+    // changelog, and the insert-only stream (deletes skipped, rewrites
+    // emitted as inserts) equals its batch analog — every version's
+    // added files read raw, the skipped ops' files left out. Then expire
+    // history: the walk from the oldest retained version (a materialized
+    // checkpoint) still replays, and one from before it throws.
+    def runLong(seed: Int): Unit = {
+      val t = runSchedule(seed, long = true)
+      val latest = ManifestTable.latestVersion(t).get
+      val drained = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
+      ChangeFeed.availableNow(spark, t, Files.createTempDirectory("graft-prop-cf").toString) {
+        (df, _, _) => drained ++= df.collect(); ()
+      }
+      val ranged = ManifestTable.readChanges(spark, t, -1, latest).collect()
+      assert(drained.map(_.toString).sorted == ranged.map(_.toString).sorted.toSeq,
+        s"seed $seed: the drain's batches differ from the changelog (-1, $latest]")
+      val name = s"prop_stream_$seed"
+      val q = spark.readStream.format("graft.sources.ManifestStreamSource")
+        .option("table", t).option("ignoreDeletes", "true").option("ignoreChanges", "true")
+        .load()
+        .writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", Files.createTempDirectory("graft-prop-cp").toString)
+        .trigger(Trigger.AvailableNow()).start()
+      try assert(q.awaitTermination(120000), s"seed $seed: stream did not drain")
+      finally q.stop()
+      val streamed = spark.table(name)
+      val skipped = Set("delete", "compact", "cluster", "compact-small")
+      val analogFiles = (0L to latest).flatMap { v =>
+        if (skipped(ManifestTable.snapshotMeta(t, v).getOrElse("op", "unknown"))) Nil
+        else {
+          val prev = if (v == 0) Set.empty[String] else ManifestTable.snapshotFiles(t, v - 1).toSet
+          ManifestTable.snapshotFiles(t, v).filterNot(prev)
+        }
+      }
+      val analog = spark.read.schema(streamed.schema).parquet(analogFiles: _*)
+      assert(streamed.exceptAll(analog).isEmpty && analog.exceptAll(streamed).isEmpty,
+        s"seed $seed: the stream differs from its batch analog")
+      val rng = new scala.util.Random(9200 + seed)
+      val keep = 2 + rng.nextInt(latest.toInt / 2)
+      assert(ManifestTable.expireVersions(t, keep) == latest + 1 - keep)
+      val oldest = latest + 1 - keep
+      assertReplays(t, oldest, latest)
+      intercept[java.nio.file.NoSuchFileException] {
+        ManifestTable.readChanges(spark, t, -1, latest)
+      }
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
       ()
     }
     val pool = Executors.newFixedThreadPool(8)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(
-      Future.sequence((0 until 50).map(s => Future(runSchedule(s)))), 20.minutes)
+    try Await.result(Future.sequence(
+      (0 until 50).map(s => Future {
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(runSchedule(s)))
+      }) ++ (50 until 53).map(s => Future(runLong(s)))), 20.minutes)
     finally pool.shutdown()
   }
 

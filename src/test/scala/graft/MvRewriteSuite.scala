@@ -214,8 +214,7 @@ class MvRewriteSuite extends SparkSuite {
     SparkEntry.queries("q_mv_incr")(spark, sf0001)
     // r8: the MV summary lives under <root>/mv beside its ODS table,
     // since q_mv_incr now drains the ODS commit log via ChangeFeed
-    val t = s"${graft.Scratch.dir("graft_mv_incr")}/" +
-      s"sf${sf0001.replaceAll("[^A-Za-z0-9.]", "_")}_events_type_user/mv"
+    val t = s"${graft.Scratch.sfDir("graft_mv_incr", sf0001)}/mv"
     val before = ManifestTable.read(spark, t)
     val nPartials = before.count()
     val nGroups = before.select("event_type", "user_id").distinct().count()

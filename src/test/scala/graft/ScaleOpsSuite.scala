@@ -163,11 +163,26 @@ class ScaleOpsSuite extends SparkSuite {
     import org.apache.spark.sql.graft.{ExtensionsProbe, TopKPerGroupStrategy}
     val ext = new SparkSessionExtensions
     new GraftExtensions().apply(ext)
-    assert(ExtensionsProbe.plannerStrategies(ext, spark).contains(TopKPerGroupStrategy))
-    assert(ExtensionsProbe.optimizerRules(ext, spark).contains(graft.expr.RewriteDotProduct))
-    // the same SQL functions Engine.init registers
-    Seq("dot_product_d", "sq_dist_l", "minhash_sigs").foreach(f =>
-      assert(ExtensionsProbe.registersFunction(ext, f), f))
+    // every listed piece, in list order — the list Engine.init installs
+    assert(ExtensionsProbe.optimizerRules(ext, spark) == GraftExtensions.rules)
+    assert(ExtensionsProbe.plannerStrategies(ext, spark) == GraftExtensions.strategies)
+    assert(GraftExtensions.rules == Seq(graft.expr.RewriteDotProduct,
+      graft.expr.RewriteRangeJoin, graft.plans.RewriteSummaryAgg))
+    assert(GraftExtensions.strategies == Seq(TopKPerGroupStrategy))
+    assert(GraftExtensions.functions.map(_._1) == Seq("dot_product_d", "sq_dist_l", "minhash_sigs"))
+    GraftExtensions.functions.foreach { case (f, _, _) =>
+      assert(ExtensionsProbe.registersFunction(ext, f), f)
+    }
+    // Engine.init installs the same pieces on a built session, in order
+    Engine.init(spark)
+    val rules = spark.experimental.extraOptimizations
+    assert(rules.filter(GraftExtensions.rules.contains) == GraftExtensions.rules, rules)
+    val strategies = spark.experimental.extraStrategies
+    assert(strategies.filter(GraftExtensions.strategies.contains) == GraftExtensions.strategies,
+      strategies)
+    GraftExtensions.functions.foreach { case (f, _, _) =>
+      assert(spark.catalog.functionExists(f), f)
+    }
   }
 
   test("sketch merge: two-level HLL union == direct sketch, and within 5% of exact") {
