@@ -1,8 +1,9 @@
 #!/usr/bin/env bash
 # Full local gate, in driver order: compile (the engine with its tests,
-# then the benchmark against the engine sources), unit/plan/stream
-# tests, the DuckDB oracle compare at the gate sf, then both mechanical
-# determinism sweeps (partition count, join strategy) at the small sf.
+# then the benchmark against the engine sources, and its own tests),
+# unit/plan/stream tests, the DuckDB oracle compare at the gate sf, then
+# both mechanical determinism sweeps (partition count, join strategy) at
+# the small sf.
 # Usage: scripts/ci.sh [gateSfDir] [sweepSfDir]
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -13,6 +14,8 @@ sbt -batch Test/compile
 # the benchmark compiles the engine sources with its own harness: an
 # engine API change must not break its build unnoticed
 (cd perfbench && sbt -batch compile)
+# and its own tests (StatsSuite: the pair statistics its verdicts rest on)
+(cd perfbench && sbt -batch test)
 sbt -batch test
 
 rm -rf /tmp/graft_ci_dump

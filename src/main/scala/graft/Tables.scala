@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** Central fixture readers for the driver-generated parquet tables
@@ -18,7 +19,23 @@ object Tables {
     "region", "nation", "supplier", "customer", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Tables whose consumers are CPU-bound per input row (shingle explosion,
+    * 64-dim dot products) — for these the one-task single-row-group scan
+    * (see `apply`) serializes real compute and a repartition pays for
+    * itself. The relational tables stay unsplit: their queries hit a
+    * key-partitioned exchange almost immediately anyway, and benching
+    * showed the extra repartition shuffle costs ~0.5 s per light query. */
+  private val wide = Set("documents", "embeddings")
+
   /** Read one fixture table.
+    *
+    * Opening a table runs no Spark job: the schema comes from the one
+    * file's parquet footer, read on the driver
+    * (`Bridge.parquetFileSchema`), and the read goes through
+    * `spark.read.schema(s).parquet(path)`. Spark's own schema inference,
+    * one Spark job per open, still runs for a path that is not one
+    * regular file (a directory or a missing path), so those keep its
+    * schema and its errors.
     *
     * `events.ts` history: the original fixtures wrote parquet
     * `TIMESTAMP(NANOS,false)` (read as LongType nanos under
@@ -31,24 +48,17 @@ object Tables {
     * TimestampType. The NTZ→Timestamp cast is wall-value-preserving
     * because every session pins spark.sql.session.timeZone=UTC.
     */
-  /** Tables whose consumers are CPU-bound per input row (shingle explosion,
-    * 64-dim dot products) — for these the one-task single-row-group scan
-    * (see `apply`) serializes real compute and a repartition pays for
-    * itself. The relational tables stay unsplit: their queries hit a
-    * key-partitioned exchange almost immediately anyway, and benching
-    * showed the extra repartition shuffle costs ~0.5 s per light query. */
-  private val wide = Set("documents", "embeddings")
-
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     Engine.init(spark)
+    val path = s"$dir/$name.parquet"
+    val read = Bridge.parquetFileSchema(spark, path)
+      .fold(spark.read)(spark.read.schema(_)).parquet(path)
     val raw =
       if (name == "events") {
-        spark.read.parquet(s"$dir/events.parquet")
+        read
           .withColumn("t", col("ts").cast(TimestampType))
           .withColumn("ts", expr("unix_micros(cast(ts as timestamp)) * 1000L"))
-      } else {
-        spark.read.parquet(s"$dir/$name.parquet")
-      }
+      } else read
     // Each fixture table is ONE parquet file with ONE row group, so the
     // scan is a single task and every narrow transform after it
     // (tokenize/explode, hashing, dot products, decimal arithmetic) runs

@@ -766,8 +766,9 @@ object Dedup {
     // would run twice. At cluster scale this is checkpoint-to-DFS; the
     // one-liner is the local[n] analog (same pattern as q_dedup_lsh).
     val sigs = sh.groupBy(col("doc_id")).agg(sigAgg.as("sig")).localCheckpoint()
-    // parquet count(*) is metadata-served — a cheap branch guard
-    val nDocs = s.read.parquet(s"$d/documents.parquet").count()
+    // the footer's row count, read on the driver: a branch guard that
+    // runs no Spark job
+    val nDocs = graft.sources.ManifestTable.footerRowCount(s"$d/documents.parquet")
     val pairs =
       if (nDocs < 200) simhashPairsNaive(sigs) else simhashPairsBanded(sigs)
     pairs.orderBy("d1", "d2")

@@ -1751,7 +1751,7 @@ object Quality {
           .write.mode("overwrite").parquet(path)
       }
       MvRegistry.register(s, MvDef(s"docs_src_lang:$d",
-        MvRegistry.pathsOf(s.read.parquet(s"$d/documents.parquet")),
+        MvRegistry.pathsOf(Tables.documents(s, d)),
         Set("source", "lang"),
         s.read.parquet(path).queryExecution.analyzed))
       true
@@ -2229,7 +2229,7 @@ object Quality {
       }
     }
     MvRegistry.register(s, MvDef(s"events_incr:$d",
-      MvRegistry.pathsOf(s.read.parquet(s"$d/events.parquet")),
+      MvRegistry.pathsOf(Tables.events(s, d)),
       Set("event_type", "user_id"),
       ManifestTable.read(s, t).queryExecution.analyzed))
     Tables.events(s, d)

@@ -810,7 +810,8 @@ object ManifestTable {
   /** A data file's ROW COUNT from its parquet footer — metadata only.
     * Used to exempt provably-empty files from conservative rewrites:
     * a zero-row file never gets min/max stats, so without this check
-    * [[deleteWhere]] would classify it stats-less and rewrite it. */
+    * [[deleteWhere]] would classify it stats-less and rewrite it. Also
+    * q_dedup_simhash's branch guard on the fixture's document count. */
   def footerRowCount(file: String): Long = withFooter(file)(rowsFromFooter)
 
   private def rowsFromFooter(

@@ -1298,22 +1298,11 @@ class ManifestTableSuite extends SparkSuite {
     // the cancelling side
     val vd2 = ManifestTable.deleteWhere(spark, t, "id", 20, 22)
     assert(ManifestTable.snapshotDvs(t, vd2).size == 2, "precondition: two DVs")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
+    val (jobs, (snap, changes, agg)) = org.apache.spark.graft.TestBus.jobsIn(spark.sparkContext) {
+      (ManifestTable.read(spark, t), ManifestTable.readChanges(spark, t, vd - 1, vd2),
+        ManifestTable.statsAggregate(spark, t, Seq("id")))
     }
-    org.apache.spark.graft.TestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    val (snap, changes, agg) =
-      try {
-        val built = (ManifestTable.read(spark, t), ManifestTable.readChanges(spark, t, vd - 1, vd2),
-          ManifestTable.statsAggregate(spark, t, Seq("id")))
-        org.apache.spark.graft.TestBus.drain(spark.sparkContext)
-        built
-      } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get == 0, s"building the DataFrames ran ${jobs.get} Spark job(s)")
+    assert(jobs == 0, s"building the DataFrames ran $jobs Spark job(s)")
     assert(snap.count() == 94)
     assert(changes.select("id", "_change_type").as[(Long, String)].collect().sorted.toSeq ==
       Seq(10L, 11L, 12L, 20L, 21L, 22L).map(_ -> "delete"))
